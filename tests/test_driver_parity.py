@@ -53,6 +53,21 @@ def _rowset(cols, rows):
     return sorted(normed, key=key), [cols[i] for i in idx]
 
 
+@pytest.fixture(autouse=True)
+def _rewrite_calls_checked(monkeypatch):
+    """Every text a registry query feeds chsql's call rewrite is also
+    run through the per-name loop it replaced, and must come out the
+    same (tests/test_chsql_rewrite_scan.py)."""
+    from test_chsql_rewrite_scan import checked_rewrite_calls
+
+    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
+
+    run, _seen, diverged = checked_rewrite_calls(chsql._rewrite_calls)
+    monkeypatch.setattr(chsql, "_rewrite_calls", run)
+    yield
+    assert not diverged, f"one-pass call scan diverges on: {diverged[:3]}"
+
+
 ORACLE_QUERIES = sorted(n for n, s in QUERIES.items() if s.oracle)
 ROWS_ONLY_QUERIES = sorted(n for n, s in QUERIES.items() if not s.oracle)
 

@@ -186,6 +186,26 @@ def test_dotted_nested_view_matches_reference_layout(ledger):
     assert row["TrafficSource.UTMSource"] == ["direct"]
     assert row["EPurchase.ID"] == ["x"]
 
+    # the one-projection view keeps the layout of the per-field
+    # withColumn build it replaced: same column order, same rows
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    ref = ledger
+    for f in ledger.schema.fields:
+        if isinstance(f.dataType, T.ArrayType) and isinstance(
+            f.dataType.elementType, T.StructType
+        ):
+            for sub in f.dataType.elementType.fields:
+                ref = ref.withColumn(
+                    f"{f.name}.{sub.name}",
+                    F.transform(F.col(f.name), (lambda s: lambda e: e[s])(sub.name)),
+                )
+            ref = ref.drop(f.name)
+    assert dotted.columns == ref.columns
+    assert dotted.schema == ref.schema
+    assert sorted(dotted.collect(), key=str) == sorted(ref.collect(), key=str)
+
 
 def test_final_sample_from_reference_ddl(ledger, spark):
     """FINAL / SAMPLE on the flagship model with metadata parsed from

@@ -43,3 +43,39 @@ def test_tune_preserves_codegen_cache(spark):
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+_FRESH_OVERRIDE = """
+import warnings
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.session import get_spark
+
+conf = {"spark.sql.codegen.cache.maxEntries": "200"}
+with warnings.catch_warnings(record=True) as fresh:
+    warnings.simplefilter("always")
+    s = get_spark(master="local[1]", shuffle_partitions=1, extra_conf=conf)
+assert s.conf.get("spark.sql.codegen.cache.maxEntries") == "200"
+assert not [w for w in fresh if w.category is RuntimeWarning], fresh
+# reusing that session while asking for the default must still warn
+with warnings.catch_warnings(record=True) as reused:
+    warnings.simplefilter("always")
+    get_spark(master="local[1]", shuffle_partitions=1)
+msgs = [str(w.message) for w in reused if w.category is RuntimeWarning]
+assert len(msgs) == 1 and "requested 5000" in msgs[0], msgs
+s.stop()
+"""
+
+
+def test_codegen_cache_warning_follows_the_requested_value():
+    # a static conf needs a fresh JVM session: the suite's own session
+    # already exists, so the check runs in a child interpreter
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="512m")
+    res = subprocess.run(
+        [sys.executable, "-c", _FRESH_OVERRIDE],
+        cwd=root, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]

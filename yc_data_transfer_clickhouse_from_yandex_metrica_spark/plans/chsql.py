@@ -98,7 +98,14 @@ vocabulary):
 - every ``_CALL_REWRITES`` entry declares its arity (``_ARITY``,
   r10): surplus arguments REFUSE instead of being silently dropped,
   missing ones refuse instead of IndexError -- the refusal names the
-  expected count.
+  expected count.  Calls are found by ONE identifier-call scan
+  (``name(`` / ``name  (`` outside '...' literals, not preceded by a
+  word character) and a dict lookup; of the calls found, the one whose
+  name comes EARLIEST in the table is rewritten first (leftmost among
+  equals), then the text is rescanned until no mapped name is called.
+  Names are plain identifiers (asserted at import).  ``count()`` with
+  no argument is a row count; ``count`` is emitted re-cased as
+  ``COUNT`` so the rescan stops.
 - trailing ``FORMAT <name>`` and ``SETTINGS k=v, ...`` stripped: the
   first picks a CLI wire format (the DataFrame IS the result set) and
   the second tunes CH-internal knobs.
@@ -3177,6 +3184,12 @@ _CALL_REWRITES.update(
     }
 )
 
+# CH count() with no argument counts rows, where Spark rejects the
+# empty call.  Emitted UPPERCASE (inert to this case-sensitive table,
+# like TRANSFORM/CHAR_LENGTH), so count(x) / count(DISTINCT x) pass
+# through re-cased and the rescan terminates.
+_CALL_REWRITES["count"] = lambda a: f"COUNT({', '.join(a) or '*'})"
+
 
 # Declared arity (min, max; None = unbounded) for EVERY mapped
 # rewrite, enforced at the dispatch point BEFORE the rewrite fn runs.
@@ -3410,6 +3423,7 @@ _ARITY.update(
         "avgOrNull": (1, 1), "anyOrNull": (1, 1), "sumCount": (1, 1),
         "like": (2, 2), "notLike": (2, 2),
         "ilike": (2, 2), "notILike": (2, 2),
+        "count": (0, None),
     }
 )
 
@@ -3419,6 +3433,11 @@ _undeclared = set(_CALL_REWRITES) - set(_ARITY)
 assert not _undeclared, f"chsql rewrites missing _ARITY rows: {_undeclared}"
 _orphaned = set(_ARITY) - set(_CALL_REWRITES)
 assert not _orphaned, f"_ARITY rows without rewrites: {_orphaned}"
+# the one-pass call scan below only finds plain identifiers
+_unscannable = [
+    n for n in _CALL_REWRITES if not re.fullmatch(r"[A-Za-z_]\w*", n)
+]
+assert not _unscannable, f"rewrite names the call scan misses: {_unscannable}"
 
 
 def _check_arity(name: str, args: list[str]) -> None:
@@ -3437,41 +3456,46 @@ def _check_arity(name: str, args: list[str]) -> None:
     )
 
 
+# every identifier followed by "(": ONE compiled scan per pass for the
+# whole table -- a pattern per name would overflow the re module's
+# 512-entry compile cache and recompile every other chsql regex too
+_CALL_SCAN = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
+_CALL_RANK = {name: i for i, name in enumerate(_CALL_REWRITES)}
+
+
 def _rewrite_calls(sql: str, ctx: _SchemaCtx = _EMPTY_CTX) -> str:
-    changed = True
-    while changed:
-        changed = False
+    while True:
         masked = _mask(sql)
-        for name, fn in _CALL_REWRITES.items():
-            for m in re.finditer(rf"\b{name}\s*\(", masked):
-                close = _match_paren(masked, m.end() - 1)
-                args = _split_top(sql[m.end() : close])
-                if len(args) == 1 and not args[0].strip():
-                    args = []  # empty parens: zero arguments
-                _check_arity(name, args)
-                try:
-                    repl = (
-                        fn(args, ctx)
-                        if getattr(fn, "_chsql_ctx", False)
-                        else fn(args)
-                    )
-                except (IndexError, KeyError) as ex:
-                    # backstop: _ARITY should make this unreachable,
-                    # but a rewrite whose declared range is wider than
-                    # its body still refuses cleanly instead of
-                    # leaking a Python crash (the r7-advised extract()
-                    # IndexError bug class)
-                    raise ValueError(
-                        f"chsql: {name}() called with {len(args)} "
-                        f"argument(s) — unsupported arity for the "
-                        f"mapped CH function"
-                    ) from ex
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
-                changed = True
-                break  # positions moved: rescan
-            if changed:
-                break
-    return sql
+        best, m = len(_CALL_RANK), None
+        for cand in _CALL_SCAN.finditer(masked):
+            rank = _CALL_RANK.get(cand.group(1), best)
+            if rank < best:  # earliest table entry, then leftmost call
+                best, m = rank, cand
+        if m is None:
+            return sql
+        name, fn = m.group(1), _CALL_REWRITES[m.group(1)]
+        close = _match_paren(masked, m.end() - 1)
+        args = _split_top(sql[m.end() : close])
+        if len(args) == 1 and not args[0].strip():
+            args = []  # empty parens: zero arguments
+        _check_arity(name, args)
+        try:
+            repl = (
+                fn(args, ctx)
+                if getattr(fn, "_chsql_ctx", False)
+                else fn(args)
+            )
+        except (IndexError, KeyError) as ex:
+            # backstop: _ARITY should make this unreachable, but a
+            # rewrite whose declared range is wider than its body
+            # still refuses cleanly instead of leaking a Python crash
+            # (the r7-advised extract() IndexError bug class)
+            raise ValueError(
+                f"chsql: {name}() called with {len(args)} "
+                f"argument(s) — unsupported arity for the "
+                f"mapped CH function"
+            ) from ex
+        sql = sql[: m.start()] + repl + sql[close + 1 :]  # then rescan
 
 
 _NUM_TRAILING_DOT = re.compile(r"(?<![\w.])(\d+)\.(?![\d\w.])")

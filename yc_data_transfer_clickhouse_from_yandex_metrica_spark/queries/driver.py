@@ -5200,7 +5200,12 @@ ROTATION_FORCE_FRONT: frozenset[str] = frozenset(
     # coalescing merging the salt grid back into one straggler task;
     # the repartition is semantics-free — partitioning only — and the
     # three reachable stale-tail entries re-prove via the window).
-    # Forced + new = 14 + 0 leaves 36 LRU slots.
+    # After round 20: the one-pass call scan in chsql._rewrite_calls (SQL
+    # text byte-identical apart from count( now reaching Spark as the
+    # same-plan COUNT( spelling) changes the run_sql/run_script closure
+    # of eight more chsql entries, and streaming_roundtrip's
+    # start_append_stream now records the table schema.
+    # Forced + new = 23 + 0 leaves 27 LRU slots.
     {
         "chsql_any_join",
         "chsql_asof",
@@ -5216,6 +5221,15 @@ ROTATION_FORCE_FRONT: frozenset[str] = frozenset(
         "dedup_ngram_jaccard",
         "dedup_clusters",
         "dedup_keep_best",
+        "chsql_s3_export",
+        "chsql_federated_enrich",
+        "chsql_word_count",
+        "chsql_array_join",
+        "chsql_daily_fill",
+        "chsql_fill_interpolate",
+        "chsql_limit_by",
+        "chsql_final",
+        "streaming_roundtrip",
     }
 )
 

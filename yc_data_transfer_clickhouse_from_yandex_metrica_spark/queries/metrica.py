@@ -215,7 +215,10 @@ def dotted_nested_view(visits: DataFrame) -> DataFrame:
     """
     from pyspark.sql import types as T
 
-    out = visits
+    # ONE projection (a withColumn per field re-analyses the whole plan
+    # each time): the other columns in place, then each group's dotted
+    # arrays in field order
+    plain, dotted = [], []
     for f in visits.schema.fields:
         if isinstance(f.dataType, T.ArrayType) and isinstance(
             f.dataType.elementType, T.StructType
@@ -224,8 +227,8 @@ def dotted_nested_view(visits: DataFrame) -> DataFrame:
                 # NB: a two-arg lambda would receive transform's
                 # (element, index) convention -- bind the name outside
                 getter = (lambda s: lambda e: e[s])(sub.name)
-                out = out.withColumn(
-                    f"{f.name}.{sub.name}", F.transform(F.col(f.name), getter)
-                )
-            out = out.drop(f.name)
-    return out
+                name = f"{f.name}.{sub.name}"
+                dotted.append(F.transform(F.col(f.name), getter).alias(name))
+        else:
+            plain.append(F.col("`" + f.name.replace("`", "``") + "`"))
+    return visits.select(*plain, *dotted)

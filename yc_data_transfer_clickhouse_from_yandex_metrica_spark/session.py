@@ -85,6 +85,9 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    want = str(
+        (extra_conf or {}).get("spark.sql.codegen.cache.maxEntries", "5000")
+    )
     spark = builder.getOrCreate()
     # static confs are silently ignored when getOrCreate() returned a
     # pre-existing session; surface the one that matters for perf so a
@@ -94,13 +97,13 @@ def get_spark(
         got = spark.conf.get("spark.sql.codegen.cache.maxEntries")
     except Exception:
         got = None
-    if got is not None and got != "5000":
+    if got is not None and got != want:
         import warnings
 
         warnings.warn(
             "get_spark: existing SparkSession kept "
             f"spark.sql.codegen.cache.maxEntries={got} (static conf; "
-            "requested 5000).  Registry-cycling workloads will re-pay "
+            f"requested {want}).  Registry-cycling workloads will re-pay "
             "whole-stage-codegen compiles every pass.",
             RuntimeWarning,
             stacklevel=2,

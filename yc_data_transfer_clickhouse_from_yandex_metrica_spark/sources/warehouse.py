@@ -17,6 +17,17 @@ Parquet-lake layout:
 At 100TB: weekly partitions x maxRecordsPerFile keep files bounded;
 writes stay fully parallel (no coalesce); the sort is within partition
 only (no global sort barrier).
+
+Every table root holds a ``_table_meta.json`` sidecar, written only by
+``record_table``: ``date_col``, ``sort_by`` and ``sample_by`` (the
+layout) and ``schema`` (the Spark schema of the written rows, ``_week``
+included, as ``StructType.jsonValue()``).  The writers are
+``write_table`` and the two streaming/cdc warehouse sinks,
+``start_append_stream`` and ``start_collapse_stream``; each takes the
+schema from the DataFrame it writes, so recording it reads nothing.
+``read_table`` reads with the recorded schema instead of inferring one
+from parquet footers on every call, and refuses a root without it.
+The sidecar is driver-local file I/O, like compaction's listing.
 """
 
 from __future__ import annotations
@@ -27,6 +38,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import ch
 
@@ -73,16 +85,26 @@ def write_table(
         .partitionBy(WEEK_COL)
         .parquet(path)
     )
+    record_table(path, layout, out.schema)
+
+
+def record_table(path: str, layout: TableLayout, schema: T.StructType) -> None:
+    """Write ``path``'s ``_table_meta.json`` (module docstring).  The
+    file is replaced atomically, so a concurrent reader sees either the
+    old or the new record."""
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _META), "w") as f:
+    tmp = os.path.join(path, _META + ".tmp")
+    with open(tmp, "w") as f:
         json.dump(
             {
                 "date_col": layout.date_col,
                 "sort_by": layout.sort_by,
                 "sample_by": layout.sample_by,
+                "schema": schema.jsonValue(),
             },
             f,
         )
+    os.replace(tmp, os.path.join(path, _META))
 
 
 def write_bucketed(
@@ -112,24 +134,22 @@ def write_bucketed(
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read back; the weekly partition column stays available for
-    explicit pruning, and date predicates on it prune directories."""
-    return spark.read.parquet(path)
+    """Read back with the schema recorded at write; the weekly
+    partition column stays available for explicit pruning, and date
+    predicates on it prune directories."""
+    try:
+        schema = table_meta(path)["schema"]
+    except (FileNotFoundError, KeyError):
+        raise ValueError(
+            f"read_table: {path!r} has no recorded schema ({_META}); "
+            "write it with write_table or a streaming/cdc warehouse sink"
+        ) from None
+    return spark.read.schema(T.StructType.fromJson(schema)).parquet(path)
 
 
 def table_meta(path: str) -> dict:
     with open(os.path.join(path, _META)) as f:
         return json.load(f)
-
-
-def prune_weeks(df: DataFrame, date_from, date_to) -> DataFrame:
-    """Date-range filter expressed on BOTH the partition column and the
-    raw date column: the first prunes directories, the second prunes
-    row groups within boundary weeks."""
-    return df.where(
-        (F.col(WEEK_COL) >= ch.to_monday(F.lit(date_from)))
-        & (F.col(WEEK_COL) <= ch.to_monday(F.lit(date_to)))
-    )
 
 
 def value_hash(df: DataFrame) -> int:

@@ -34,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions import ch
 from ..operators.collapse import collapsed
+from ..sources import warehouse
 
 _WEEK = "_week"
 
@@ -66,6 +67,9 @@ def start_append_stream(
     if fields:
         stream = stream.select(*fields)
     stream = stream.withColumn("_week", ch.to_monday(F.col(date_col)))
+    warehouse.record_table(
+        dest_dir, warehouse.TableLayout(date_col), stream.schema
+    )
     writer = (
         stream.writeStream.format("parquet")
         .option("path", dest_dir)
@@ -280,9 +284,12 @@ def start_collapse_stream(
             "O(table) per micro-batch and object-store-unsafe)"
         )
 
+    def weekly(df: DataFrame) -> DataFrame:
+        return df.withColumn(_WEEK, ch.to_monday(F.col(date_col)))
+
     def merge(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
-        b = batch.withColumn(_WEEK, ch.to_monday(F.col(date_col)))
+        b = weekly(batch)
         weeks = [r[0] for r in b.select(_WEEK).distinct().collect()]
         if not weeks:
             return
@@ -321,6 +328,11 @@ def start_collapse_stream(
         )
 
     stream = spark.readStream.format("parquet").schema(schema).load(source_dir)
+    # merge writes collapsed() rows of a weekly() batch, and collapsed()
+    # keeps its input's columns: the written schema is weekly(stream)'s
+    warehouse.record_table(
+        dest_dir, warehouse.TableLayout(date_col), weekly(stream).schema
+    )
     writer = stream.writeStream.foreachBatch(merge).option(
         "checkpointLocation", checkpoint_dir
     )
