@@ -3,11 +3,12 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+order-insensitive value-hash); ``tests/test_driver_parity.py`` runs
+the same comparison locally.
 
-Implementation lives in
-``yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver``;
-see SURVEY.md section 2 for the operator inventory each entry covers.
+Implementation lives in the root-level ``registry`` module, in
+declaration order; see SURVEY.md section 2 for the operator inventory
+each entry covers.
 """
 
 from __future__ import annotations
@@ -16,23 +17,23 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries import driver as _driver
+import registry
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (the reference's visits-by-day chart,
     README.md:75-86 analog: sign-ledger count + WITH TOTALS) on
     /root/testdata/sf0.001."""
-    return _driver.q_visits_by_day(spark, "/root/testdata/sf0.001")
+    return registry.q_visits_by_day(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md section 2."""
-    return _driver.queries()
+    return registry.queries()
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI oracles — as of round 8 EVERY registry
     entry has one (ann_ivf_topk gained a pinned-centroid closed-form
     oracle, so no rows-only entries remain)."""
-    return _driver.oracle_sql()
+    return registry.oracle_sql()

@@ -1,7 +1,9 @@
-"""Driver-facing query catalog: every implemented operator from
+"""Test-support query registry: every implemented operator from
 SURVEY.md section 2, expressed on the driver's synthetic tables
 (TESTDATA.md) with a DuckDB oracle where the semantics are
-ANSI-SQL-expressible.
+ANSI-SQL-expressible.  It lives outside the engine package: only
+``__spark_entry__.py``, ``tests/`` and ``tools/`` import it, and
+``tests/test_driver_parity.py`` checks every entry against its oracle.
 
 Conventions (driver contract, __spark_entry__.py):
 - builders take (spark, sf_dir) and return a DataFrame;
@@ -19,33 +21,47 @@ oracle -- the driver records a rows-only check for those, by design.
 
 from __future__ import annotations
 
-import json
-import re
+import hashlib
+import os
+import shutil
 import tempfile
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import ch, chjson
-from ..operators import (
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark import schemas
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.functions import ch, chjson
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import (
     collapse,
+    corpus,
     dedup,
     funnel,
+    maps,
     multimodal,
+    packing,
+    rangejoin,
     sampling,
     series,
+    sessionize,
     similarity,
+    skew,
     stats,
     text,
 )
-from ..plans import inline_aliases, with_totals
-from ..session import tune
-from ..sources import csvgz
-from ..streaming import cdc
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import (
+    chjoin,
+    chsql,
+    inline_aliases,
+    with_totals,
+)
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries import metrica
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.session import tune
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.sources import csvgz
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.streaming import cdc
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -894,9 +910,6 @@ def q_ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan.  Results are definitionally identical to ``ann_ivf_topk``
     (same pinned centroids, same probe selection, same exact
     rescoring), so it shares the closed-form DuckDB oracle."""
-    import hashlib
-    import os
-
     _prep(spark)
     emb = t(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < 5).select(
@@ -1886,7 +1899,6 @@ def q_salted_hot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is a PLAIN group-by -- salting must be a pure physical
     rewrite with identical results."""
     _prep(spark)
-    from ..operators import skew
 
     ev = t(spark, sf_dir, "events")
     out = skew.salted_agg(
@@ -1925,7 +1937,6 @@ def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     per nation.  The oracle is the plain join -- salting replicates
     the dim nsalt-fold and must not change a single row."""
     _prep(spark)
-    from ..operators import skew
 
     o = t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = t(spark, sf_dir, "customer").select(
@@ -2179,7 +2190,6 @@ def q_sum_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum per order priority.  Joined values are emitted as
     integer-cent strings so the cross-engine hash is stable."""
     _prep(spark)
-    from ..operators import maps
 
     li = t(spark, sf_dir, "lineitem")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
@@ -2921,13 +2931,9 @@ def q_streaming_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink and compared against the batch oracle.  The windowed
     state the stream carries is |open windows x event types| -- never
     the events."""
-    import uuid
-
     _prep(spark)
     base = tempfile.mkdtemp(prefix="ym_stream_win_")
     feed = f"{base}/feed"
-    import os
-    import shutil
 
     os.makedirs(feed, exist_ok=True)
     shutil.copy(f"{sf_dir}/events.parquet", f"{feed}/events-000.parquet")
@@ -2980,8 +2986,6 @@ def q_streaming_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dest = f"{base}/warehouse"
     chk = f"{base}/checkpoint"
     feed = f"{base}/feed"  # file-stream source must be a directory (CDC feed)
-    import os
-    import shutil
 
     os.makedirs(feed, exist_ok=True)
     shutil.copy(f"{sf_dir}/events.parquet", f"{feed}/events-000.parquet")
@@ -3267,8 +3271,6 @@ GROUP BY n_name ORDER BY revenue DESC
 #     identical by construction.
 # =========================================================================
 def q_scd2_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import rangejoin
-
     _prep(spark)
     li = t(spark, sf_dir, "lineitem").withColumn(
         "ship_date", F.col("l_shipdate").cast("date")
@@ -3307,8 +3309,6 @@ def q_scd2_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     formulation; oracle = DuckDB's native ASOF LEFT JOIN).
 # =========================================================================
 def q_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import rangejoin
-
     _prep(spark)
     ev = t(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
@@ -3350,8 +3350,6 @@ FROM clicks c ASOF LEFT JOIN purchases p
 #     the visit-table core (start, pageviews, duration, bounce).
 # =========================================================================
 def q_sessionize_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import sessionize
-
     _prep(spark)
     ev = t(spark, sf_dir, "events").select("user_id", "ts")
     return sessionize.sessionize(ev, "user_id", "ts", "30 minutes")
@@ -3387,8 +3385,6 @@ FROM s GROUP BY user_id, sid
 #      sequences (streaming next-fit within hash shards).
 # =========================================================================
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import packing
-
     _prep(spark)
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", text.token_count("text").alias("n_tokens")
@@ -3581,8 +3577,6 @@ FROM docs d LEFT JOIN comp c ON c.id = d.doc_id
 #     with F4/F5/F6/F7, 3-way-OR HAVING A10, O2/O4.
 # =========================================================================
 def _metrica_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .. import schemas
-
     ev = t(spark, sf_dir, "events")
     return ev.select(
         F.lit(1).cast("long").alias("CounterID"),
@@ -3618,8 +3612,6 @@ def _metrica_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_metrica_traffic_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import metrica
-
     _prep(spark)
     visits = _metrica_visits(spark, sf_dir)
     out = metrica.traffic_sources(visits, "2024-01-01", "2025-12-31", limit=50)
@@ -3675,8 +3667,6 @@ ORDER BY 2 DESC, 1 ASC LIMIT 50
 #     must net out day-by-day for the chart to be right.
 # =========================================================================
 def q_metrica_visits_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import metrica
-
     _prep(spark)
     ev = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3794,8 +3784,6 @@ def q_chsql_visits_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH TOTALS + limit 0,10 all handled by the front-end) on the same
     versioned sign ledger as metrica_visits_chart; compared against
     the SAME oracle."""
-    from ..plans import chsql
-
     _prep(spark)
     ev = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3828,9 +3816,6 @@ def q_chsql_traffic_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     `TrafficSource.Model` parallel-array layout), with the identical
     cross-engine rounding applied OUTSIDE the verbatim text; compared
     against the SAME oracle."""
-    from . import metrica
-    from ..plans import chsql
-
     _prep(spark)
     visits = metrica.dotted_nested_view(_metrica_visits(spark, sf_dir))
     out = chsql.run_sql(
@@ -3899,8 +3884,6 @@ def q_chsql_s3_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION -- the s3-vs-ch counts only match if every insert landed
     exactly its day slice and the CSV-gz glob read recovers every
     row."""
-    from ..plans import chsql
-
     _prep(spark)
     base = tempfile.mkdtemp(prefix="ym_chsql_s3_")
     return chsql.run_script(
@@ -3962,9 +3945,6 @@ def q_chsql_federated_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     chsql.run_script; the written file is read back schema-on-read
     so the green row proves the whole write+read path, not just the
     join."""
-    from ..plans import chsql
-    from ..sources import csvgz
-
     _prep(spark)
     ev = t(spark, sf_dir, "events")
     hits = ev.select(
@@ -4036,8 +4016,6 @@ GROUP BY h.bc, h.ed, d.dsc
 #     COMPOSE (one Catalyst plan, no materialization between stages).
 # =========================================================================
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import packing
-
     _prep(spark)
     docs = t(spark, sf_dir, "documents")
     scored = docs.select(
@@ -4275,8 +4253,6 @@ LIMIT 0,50
 
 
 def q_chsql_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans import chsql
-
     _prep(spark)
     docs = t(spark, sf_dir, "documents")
     return chsql.run_sql(spark, _CHSQL_WORD_COUNT_SQL, {"documents": docs})
@@ -4312,8 +4288,6 @@ LIMIT 20
 
 
 def q_chsql_array_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans import chsql
-
     _prep(spark)
     docs = t(spark, sf_dir, "documents")
     return chsql.run_sql(spark, _CHSQL_ARRAY_JOIN_SQL, {"documents": docs})
@@ -4345,8 +4319,6 @@ ORDER BY d WITH FILL STEP INTERVAL 1 DAY
 
 
 def q_chsql_daily_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans import chsql
-
     _prep(spark)
     return chsql.run_sql(
         spark, _CHSQL_DAILY_FILL_SQL, {"orders": t(spark, sf_dir, "orders")}
@@ -4367,8 +4339,6 @@ def q_chsql_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INTERPOLATE branch of the dialect's WITH FILL, proven
     against the same last_value-IGNORE-NULLS oracle as the DataFrame
     twin (fill_interpolate)."""
-    from ..plans import chsql
-
     _prep(spark)
     return chsql.run_sql(
         spark, _CHSQL_FILL_INTERP_SQL, {"orders": t(spark, sf_dir, "orders")}
@@ -4388,8 +4358,6 @@ def q_chsql_limit_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CH's LIMIT n BY key clause run verbatim through the dialect
     (compiled to the rank window that orders_limit_by's operator
     uses, WindowGroupLimit-pruned), same oracle."""
-    from ..plans import chsql
-
     _prep(spark)
     return chsql.run_sql(
         spark, _CHSQL_LIMIT_BY_SQL, {"orders": t(spark, sf_dir, "orders")}
@@ -4415,8 +4383,6 @@ def q_chsql_qualify(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive).  WITH TIES == rank() <= n — a row survives
     iff fewer than n rows sort strictly before its tie group — which
     is both the compiled form and the oracle's spelling."""
-    from ..plans import chsql
-
     _prep(spark)
     return chsql.run_sql(
         spark, _CHSQL_QUALIFY_SQL, {"orders": t(spark, sf_dir, "orders")}
@@ -4437,8 +4403,6 @@ def q_chsql_distinct_on(spark: SparkSession, sf_dir: str) -> DataFrame:
     that rank-window path (WindowGroupLimit-pruned).  The ORDER BY is
     total (o_orderkey tiebreak), so the kept row per customer is
     deterministic."""
-    from ..plans import chsql
-
     _prep(spark)
     return chsql.run_sql(
         spark, _CHSQL_DISTINCT_ON_SQL, {"orders": t(spark, sf_dir, "orders")}
@@ -4495,8 +4459,6 @@ def q_chsql_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/ddl/visits.sql:229-233) -- instead of refusing.
     Tables without TableMeta keep the refusal.  Oracle: the
     cdc_collapse-style row_number latest-per-user replay."""
-    from ..plans import chsql
-
     _prep(spark)
     return chsql.run_sql(
         spark,
@@ -4540,8 +4502,6 @@ def q_chsql_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset of SAMPLE 0.2).  Tables without sample_by metadata keep
     the refusal.  sample_by (the DataFrame operator twin) proves the
     same semantics family on its own oracle."""
-    from ..plans import chsql
-
     _prep(spark)
     return chsql.run_sql(
         spark,
@@ -4577,8 +4537,6 @@ def q_chsql_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCD-2 validity join (/root/reference/README.md:280-302).  Shares
     asof_enrich's oracle: identical results by construction (same
     floor-rounding, DuckDB native ASOF LEFT JOIN)."""
-    from ..plans import chjoin
-
     _prep(spark)
     ev = t(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
@@ -4621,8 +4579,6 @@ def q_chsql_any_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-in-block-order pick, same deviation class as groupArray)
     and the statement continues as a plain INNER JOIN.  Oracle: the
     identical QUALIFY row_number dedup in DuckDB."""
-    from ..plans import chjoin
-
     _prep(spark)
     return chjoin.run_sql(
         spark,
@@ -4685,16 +4641,14 @@ def _metrica_model_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_chsql_model_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``FROM visits FINAL SAMPLE k`` on the METRICA MODEL with the
-    engine metadata parsed from the reference's own DDL files
+    engine metadata parsed from the reference's own DDL declaration
     (queries/metrica.run_model_sql -> chsql.table_meta_from_ddl over
-    /root/reference/ddl/visits.sql — round-10 verdict task 5 driven
-    through the driver surface: no hand-built TableMeta anywhere).
+    ddl.VISITS_DDL — round-10 verdict task 5 driven through the
+    driver surface: no hand-built TableMeta anywhere).
     SAMPLE filters the stored parts by the declared SAMPLE BY key
     first, FINAL collapses what was read — CH's order.  Oracle: the
     user-hash range filter + distinct live visits (every final
     version survives by ledger construction), weekly rollup."""
-    from . import metrica
-
     _prep(spark)
     return metrica.run_model_sql(
         spark,
@@ -4738,8 +4692,6 @@ def q_chsql_summap(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented strengthening of CH's approximate sketch), so a DuckDB
     oracle exists.  Same input prep and cent-string hashing as the
     operator entry ``sum_map_priority``."""
-    from ..plans import chsql
-
     _prep(spark)
     li = t(spark, sf_dir, "lineitem")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
@@ -4864,8 +4816,6 @@ def _quality_scored_sql(src: str, extra_cols: str = "") -> str:
 
 
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import corpus
-
     _prep(spark)
     return corpus.tfidf_top_terms(t(spark, sf_dir, "documents"), k=5)
 
@@ -4890,8 +4840,6 @@ FROM sc QUALIFY rnk <= 5
 
 
 def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import corpus
-
     _prep(spark)
     return corpus.bigram_lm_score(t(spark, sf_dir, "documents"))
 
@@ -4920,8 +4868,6 @@ GROUP BY bd.doc_id
 
 
 def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import corpus
-
     _prep(spark)
     return corpus.shard_assign(t(spark, sf_dir, "documents"), n_shards=8, seed="42")
 
@@ -4941,8 +4887,6 @@ FROM h
 
 
 def q_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import corpus
-
     _prep(spark)
     return corpus.domain_quota(
         t(spark, sf_dir, "documents"),
@@ -4962,8 +4906,6 @@ FROM scored QUALIFY rnk <= 15
 
 
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import corpus
-
     _prep(spark)
     docs = _docs_with_dups(spark, sf_dir)
     pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.6)
@@ -5155,127 +5097,9 @@ QUERIES: dict[str, QuerySpec] = {
 }
 
 
-# =========================================================================
-# driver verification window rotation
-# =========================================================================
-# The round driver verifies only the FIRST 50 ``queries()`` entries against
-# their DuckDB oracles; this registry is larger.  To guarantee every entry
-# cycles through the checked window without manual re-ordering, ``queries()``
-# emits entries ordered by the round in which they last had a green
-# driver-oracle row: never-verified entries first, then oldest-green, ties
-# broken by declaration order.  The history is read from the driver's own
-# CORRECTNESS_r*.json artifacts at the repo root (committed each round); with
-# no artifacts present the declaration order is used unchanged.  See
-# README "Driver verification window".
-
-DRIVER_WINDOW = 50  # driver-checked prefix length (round-5 verdict)
-
-# Entries whose SEMANTICS or implementation changed since their last
-# green driver row: rotated to the front as if never verified, so the
-# next CORRECTNESS file re-proves them.  Maintained per round; clear
-# once the round's CORRECTNESS file shows them green again.
-ROTATION_FORCE_FRONT: frozenset[str] = frozenset(
-    # round 20 (optimization round 2): CORRECTNESS_r19 shows the four
-    # r19-forced entries (3 IVF + json_funcs) green, which by this
-    # guard's own rule clears the r19 force.  This round's shared-scan
-    # compile for multi-frame structural statements lands inside
-    # plans/chsql.run_sql (base-view materialization + the
-    # _rewrite_summap lift), so every stale-tail entry whose closure
-    # reaches run_sql must be re-proven by the next driver window.
-    # chsql_summap is the one entry whose executed plan actually
-    # changes (three scans of the source -> one materialized base);
-    # for the other eight the compile is byte-identical (single-frame
-    # or non-structural statements never enter the shared path — the
-    # r20 test suite pins this), but the def-level closure changed, so
-    # the guard rightly demands driver re-proof.
-    # Also this round: dedup_embedding's signature stage moved to the
-    # Arrow numpy kernel (bit-identical by the r20 property battery,
-    # exceptAll-equal at sf0.01/sf0.1, but signlsh_pairs' closure
-    # changed — the verdict pre-sanctioned this +1 force), and
-    # curation_pipeline's keep predicate was rewritten to reference
-    # the quality expression once (value-equal at every SF + synthetic
-    # battery; builder-local closure changed).
-    # ngram_jaccard_pairs' salted hot join gained an explicit-width
-    # cell repartition (the 10x probe showed AQE's byte-based
-    # coalescing merging the salt grid back into one straggler task;
-    # the repartition is semantics-free — partitioning only — and the
-    # three reachable stale-tail entries re-prove via the window).
-    # After round 20: the one-pass call scan in chsql._rewrite_calls (SQL
-    # text byte-identical apart from count( now reaching Spark as the
-    # same-plan COUNT( spelling) changes the run_sql/run_script closure
-    # of eight more chsql entries, and streaming_roundtrip's
-    # start_append_stream now records the table schema.
-    # Forced + new = 23 + 0 leaves 27 LRU slots.
-    {
-        "chsql_any_join",
-        "chsql_asof",
-        "chsql_distinct_on",
-        "chsql_model_final",
-        "chsql_qualify",
-        "chsql_sample",
-        "chsql_summap",
-        "chsql_traffic_chart",
-        "chsql_visits_chart",
-        "dedup_embedding",
-        "curation_pipeline",
-        "dedup_ngram_jaccard",
-        "dedup_clusters",
-        "dedup_keep_best",
-        "chsql_s3_export",
-        "chsql_federated_enrich",
-        "chsql_word_count",
-        "chsql_array_join",
-        "chsql_daily_fill",
-        "chsql_fill_interpolate",
-        "chsql_limit_by",
-        "chsql_final",
-        "streaming_roundtrip",
-    }
-)
-
-
-def _last_green_rounds() -> dict[str, int]:
-    """name -> latest round with a green driver row (hash match, or a
-    completed rows-only check for oracle-less probabilistic entries)."""
-    root = Path(__file__).resolve().parents[2]
-    last: dict[str, int] = {}
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            green = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            )
-            if green:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def registry_order() -> list[str]:
-    """Registry names, least-recently-verified first (stable);
-    ROTATION_FORCE_FRONT entries count as never-verified."""
-    last = _last_green_rounds()
-    for name in ROTATION_FORCE_FRONT:
-        last.pop(name, None)
-    pos = {n: i for i, n in enumerate(QUERIES)}
-    return sorted(QUERIES, key=lambda n: (last.get(n, -1), pos[n]))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].build for name in registry_order()}
+    return {name: spec.build for name, spec in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: QUERIES[name].oracle
-        for name in registry_order()
-        if QUERIES[name].oracle
-    }
+    return {name: spec.oracle for name, spec in QUERIES.items() if spec.oracle}

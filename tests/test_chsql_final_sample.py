@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import pytest
 
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.ddl import TABLE_DDL, VISITS_DDL
 from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
 
 
@@ -202,9 +203,7 @@ def test_sample_offset_out_of_range_refuses(spark, ledger):
 def test_sample_filter_reaches_parquet_scan(spark):
     """The compiled SAMPLE predicate must be a scan-level DataFilter
     (pushdown-able at 100 TB), not a post-scan Filter only."""
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries import (
-        driver as d,
-    )
+    import registry as d
 
     df = d.q_chsql_sample(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -235,29 +234,9 @@ def test_sample_offset_filter_reaches_parquet_scan(spark):
 # TableMeta from ClickHouse DDL (the declarations CH itself reads)
 # ---------------------------------------------------------------------------
 
-# the reference's verbatim engine clause shapes
-# (/root/reference/ddl/visits.sql:229-239, ddl/hits.sql:112-119)
-_VISITS_DDL_TAIL = """
-CREATE TABLE metrica.visits (`VisitID` UInt64, `Sign` Int8,
-  `VisitVersion` UInt64, `CounterID` UInt32, `StartDate` Date,
-  `CounterUserIDHash` UInt64)
-ENGINE = ReplicatedVersionedCollapsingMergeTree
-('/clickhouse/tables/{shard}/metrica.visits_x_cdc',
- '{replica}',
- Sign,
- VisitVersion)
-PARTITION BY toMonday(StartDate)
-ORDER BY (CounterID,
- StartDate,
- CounterUserIDHash,
- VisitID)
-SAMPLE BY CounterUserIDHash
-SETTINGS index_granularity = 8192;
-"""
-
 
 def test_table_meta_from_reference_visits_ddl():
-    m = chsql.table_meta_from_ddl(_VISITS_DDL_TAIL)
+    m = chsql.table_meta_from_ddl(VISITS_DDL)
     assert m == chsql.TableMeta(
         key=("CounterID", "StartDate", "CounterUserIDHash", "VisitID"),
         version="VisitVersion",
@@ -267,13 +246,8 @@ def test_table_meta_from_reference_visits_ddl():
 
 
 def test_table_meta_from_real_reference_files():
-    import pathlib
-
-    for name, want_version in (("visits.sql", "VisitVersion"), ("hits.sql", None)):
-        p = pathlib.Path("/root/reference/ddl") / name
-        if not p.is_file():
-            pytest.skip("reference DDL not present")
-        m = chsql.table_meta_from_ddl(p.read_text())
+    for name, want_version in (("visits", "VisitVersion"), ("hits", None)):
+        m = chsql.table_meta_from_ddl(TABLE_DDL[name])
         assert m.sample_by == "CounterUserIDHash"
         assert m.version == want_version
         assert m.key[0] == "CounterID"

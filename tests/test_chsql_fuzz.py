@@ -597,7 +597,7 @@ def test_proven_corpus_mutations_preserve_result(spark):
     with apostrophe, line comment, blank lines) at every clause seam
     of the word-count and WITH FILL texts, run on the real sf0.001
     tables."""
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries import driver as d
+    import registry as d
 
     sf = "/root/testdata/sf0.001"
     docs = d.t(spark, sf, "documents")

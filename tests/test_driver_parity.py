@@ -3,17 +3,18 @@ catalog runs on Spark AND its DuckDB oracle, compared on row count,
 column names, and order-insensitive values (normalized).
 
 This is the test that must stay green before anything ships -- it is a
-faithful stand-in for CORRECTNESS_r{N}.json.
+faithful stand-in for the driver's own check.
 """
 
 from __future__ import annotations
 
 import math
 from datetime import date, datetime
+from pathlib import Path
 
 import pytest
 
-from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver import QUERIES
+from registry import QUERIES
 
 from conftest import SF_ORACLE
 
@@ -110,63 +111,30 @@ def test_rows_only_runs(name, spark):
     assert len(sdf.schema.fields) > 0
 
 
-def test_registry_rotation_contract():
-    """Driver-window rotation (README 'Driver verification window'):
-    queries()/oracle_sql() order is a deterministic permutation of the
-    registry that puts least-recently-verified entries first, so every
-    entry cycles through the driver's 50-entry checked prefix."""
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries import driver
+def test_entry_contract_is_the_registry():
+    """``__spark_entry__`` hands out the whole registry in declaration
+    order, with one oracle per entry."""
+    import __spark_entry__
 
-    order = driver.registry_order()
-    assert sorted(order) == sorted(QUERIES), "rotation must be a permutation"
-    assert order == driver.registry_order(), "rotation must be deterministic"
-    assert list(driver.queries()) == order
-    oracles = driver.oracle_sql()
-    assert list(oracles) == [n for n in order if QUERIES[n].oracle]
-
-    last = driver._last_green_rounds()
-    if last:  # with committed CORRECTNESS artifacts present
-        window = set(order[: driver.DRIVER_WINDOW])
-        # force-front entries count as never-verified (the documented
-        # rotation rule): their TRUE last-green round may be newer than
-        # tail entries', and that's the point -- their code changed, so
-        # they jump the queue.  Tail safety for everything they displace
-        # is enforced by tests/test_rotation_guard.py (provably
-        # unchanged since its green round), not by this recency sort.
-        eff = {
-            n: (-1 if n in driver.ROTATION_FORCE_FRONT else last.get(n, -1))
-            for n in QUERIES
-        }
-        worst_in = max(eff[n] for n in window)
-        best_out = min(
-            (eff[n] for n in order[driver.DRIVER_WINDOW :]),
-            default=10**9,
-        )
-        assert worst_in <= best_out, (
-            "an entry outside the window was verified less recently than "
-            "one inside it"
-        )
-        never = [n for n in QUERIES if n not in last]
-        assert all(n in window for n in never), (
-            f"never-verified entries must be in the checked window: "
-            f"{[n for n in never if n not in window]}"
-        )
-        forced = [n for n in driver.ROTATION_FORCE_FRONT if n in QUERIES]
-        assert all(n in window for n in forced), (
-            f"force-front (changed-semantics) entries must be in the "
-            f"checked window: {[n for n in forced if n not in window]}"
-        )
+    assert list(__spark_entry__.queries()) == list(QUERIES)
+    assert list(__spark_entry__.oracle_sql()) == list(QUERIES)
 
 
-def test_bench_covers_registry():
-    """Every registry entry has a bench row (r6 verdict task 7): the
-    bench set is exactly the registry, no more, no less."""
-    import bench
+def test_engine_package_does_not_load_registry():
+    """The registry is test support: importing the engine's front-end,
+    chart and streaming modules must not pull it in."""
+    import subprocess
+    import sys
 
-    bench_set = set(bench.HEADLINE) | set(bench.STREAMING) | set(bench.IO)
-    assert bench_set == set(QUERIES), (
-        f"missing from bench: {sorted(set(QUERIES) - bench_set)}; "
-        f"benched but not registered: {sorted(bench_set - set(QUERIES))}"
+    root = Path(__file__).resolve().parents[1]
+    code = (
+        "import sys\n"
+        "from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql\n"
+        "from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries import metrica\n"
+        "from yc_data_transfer_clickhouse_from_yandex_metrica_spark.streaming import cdc\n"
+        "print('registry' in sys.modules)\n"
     )
-    all_lists = bench.HEADLINE + bench.STREAMING + bench.IO
-    assert len(all_lists) == len(bench_set), "duplicate bench entries"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "False", out.stdout + out.stderr

@@ -124,9 +124,7 @@ def test_traffic_chart_shape_properties(spark):
     CAN check on any data: users <= visits (the least() cap),
     bounceRate in [0, 100], rows sorted by visits desc then source
     asc."""
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver import (
-        QUERIES,
-    )
+    from registry import QUERIES
 
     from conftest import SF_ORACLE
 
@@ -146,7 +144,7 @@ def test_chsql_charts_match_dataframe_charts_on_real_model(ledger, spark):
     source lookup with '' default, TOTALS channel): both reference
     chart texts produce byte-identical result sets."""
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver import (
+    from registry import (
         _CHSQL_PARAMS,
         _CHSQL_TRAFFIC_SQL,
         _CHSQL_VISITS_SQL,
@@ -209,12 +207,8 @@ def test_dotted_nested_view_matches_reference_layout(ledger):
 
 def test_final_sample_from_reference_ddl(ledger, spark):
     """FINAL / SAMPLE on the flagship model with metadata parsed from
-    the reference's OWN DDL (r10 verdict task 5) — no hand-built
-    TableMeta anywhere in the call."""
-    import pathlib
-
-    if not pathlib.Path("/root/reference/ddl/visits.sql").is_file():
-        pytest.skip("reference DDL not present")
+    the reference's OWN DDL declaration (ddl.VISITS_DDL, r10 verdict
+    task 5) — no hand-built TableMeta anywhere in the call."""
     out = metrica.run_model_sql(
         spark,
         "SELECT StartDate AS day, count(1) AS n "
@@ -241,12 +235,9 @@ def test_final_sample_from_reference_ddl(ledger, spark):
 
 
 def test_hits_ddl_meta_keeps_final_refused(ledger, spark):
-    """ddl/hits.sql declares a plain MergeTree: SAMPLE compiles from
-    its SAMPLE BY, FINAL keeps the refusal — CH's own behavior."""
-    import pathlib
-
-    if not pathlib.Path("/root/reference/ddl/hits.sql").is_file():
-        pytest.skip("reference DDL not present")
+    """ddl/hits.sql (ddl.HITS_DDL) declares a plain MergeTree: SAMPLE
+    compiles from its SAMPLE BY, FINAL keeps the refusal — CH's own
+    behavior."""
     with pytest.raises(ValueError, match="FINAL"):
         metrica.run_model_sql(
             spark, "SELECT 1 FROM hits FINAL", hits=ledger
@@ -255,3 +246,10 @@ def test_hits_ddl_meta_keeps_final_refused(ledger, spark):
         spark, "SELECT count(1) AS n FROM hits SAMPLE 1/2", hits=ledger
     ).collect()[0]["n"]
     assert n == 6  # hash values 7/8/9 all inside the half-range
+
+
+def test_undeclared_table_meta_refused():
+    """Only visits and hits carry engine declarations: any other name
+    is an error at the lookup, not a silently missing TableMeta."""
+    with pytest.raises(ValueError, match="no engine declaration"):
+        metrica.reference_table_meta("orders")

@@ -647,7 +647,7 @@ def test_write_table_parallelism_within_week(spark):
 
 
 def test_scd2_join_broadcasts_dim(spark):
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver import QUERIES
+    from registry import QUERIES
 
     from conftest import SF_SMOKE
 
@@ -657,7 +657,7 @@ def test_scd2_join_broadcasts_dim(spark):
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver import QUERIES
+    from registry import QUERIES
 
     from conftest import SF_SMOKE
 
@@ -759,7 +759,7 @@ def test_quantile_exact_plan_single_data_exchange(spark):
     (PLANS.md round-3 section)."""
     import re
 
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver import QUERIES
+    from registry import QUERIES
 
     from conftest import SF_SMOKE
 
@@ -2672,7 +2672,7 @@ def test_salted_join_matches_plain(spark):
 def test_results_invariant_to_shuffle_partitions(spark, qname):
     """Any first()/row_number() tie-break that silently depends on
     partition layout shows up as a diff between these two runs."""
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver import QUERIES
+    from registry import QUERIES
 
     from conftest import SF_SMOKE
 

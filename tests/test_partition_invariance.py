@@ -22,7 +22,7 @@ import os
 
 import pytest
 
-from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries import driver
+import registry
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
@@ -67,10 +67,10 @@ def _rowset(df):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_entry_rows_invariant_under_adversarial_layout(spark, name, monkeypatch):
-    spec = driver.QUERIES[name]
+    spec = registry.QUERIES[name]
     base = _rowset(spec.build(spark, SF))
 
-    orig_tune = driver.tune
+    orig_tune = registry.tune
 
     def tiny_tune(s, shuffle_partitions=None):
         out = orig_tune(s, shuffle_partitions=5)
@@ -80,7 +80,7 @@ def test_entry_rows_invariant_under_adversarial_layout(spark, name, monkeypatch)
         out.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
         return out
 
-    monkeypatch.setattr(driver, "tune", tiny_tune)
+    monkeypatch.setattr(registry, "tune", tiny_tune)
     try:
         got = _rowset(spec.build(spark, SF))
     finally:

@@ -1,6 +1,9 @@
 """Driver simulator: vanilla SparkSession + DuckDB oracle hash-compare,
 exactly as the external harness does.  Usage:
-    python /tmp/driver_sim.py [name ...]   # default: all queries
+    python tools/driver_sim.py [name ...]   # default: all queries
+
+Run it from the repository root: the Python workers of the
+mapInPandas stages resolve the package from the driver's cwd.
 """
 from __future__ import annotations
 
@@ -8,8 +11,9 @@ import decimal
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF = "/root/testdata/sf0.01"
 TABLES = [

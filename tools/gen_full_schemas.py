@@ -5,6 +5,9 @@ reference DDL (a data-model translation: ddl/hits.sql, ddl/visits.sql
 yc_data_transfer_clickhouse_from_yandex_metrica_spark/schemas_full.py
 so the repo stays standalone (the reference is NOT read at runtime).
 
+Usage:
+    python tools/gen_full_schemas.py <reference checkout>/ddl
+
 Type mapping per SURVEY.md section 1.2 (unsigned widened one step,
 UInt64 ids ride as LongType, FixedString -> StringType); ClickHouse
 Nested dotted parallel arrays -> array-of-struct groups (SURVEY 1.2
@@ -15,10 +18,10 @@ queries.metrica.dotted_nested_view.
 from __future__ import annotations
 
 import re
+import sys
 from collections import OrderedDict
 from pathlib import Path
 
-REF = Path("/root/reference/ddl")
 OUT = Path(__file__).resolve().parent.parent / (
     "yc_data_transfer_clickhouse_from_yandex_metrica_spark/schemas_full.py"
 )
@@ -100,9 +103,9 @@ def emit(table: str, cols: list[tuple[str, str, bool]]) -> tuple[str, str]:
     return "\n".join(lines), repr(dotted)
 
 
-def main() -> None:
-    hits = parse(REF / "hits.sql")
-    visits = parse(REF / "visits.sql")
+def main(ref: Path) -> None:
+    hits = parse(ref / "hits.sql")
+    visits = parse(ref / "visits.sql")
     hits_code, hits_dotted = emit("HITS_FULL_SCHEMA", hits)
     visits_code, visits_dotted = emit("VISITS_FULL_SCHEMA", visits)
     OUT.write_text(
@@ -126,4 +129,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(Path(sys.argv[1]))

@@ -2,8 +2,8 @@
 """Generate a deterministic sf1-scale PROBE dataset (10x sf0.1) for
 scale measurements only (r20 verdict task #2).  NOT driver data: the
 driver's own testdata stays untouched; this set lives outside the
-repo (default /root/sf1probe) and is never read by bench.py or the
-registry -- only by tools/probe_sf1.py.
+repo (``SF1_PROBE_DST``) and only tools/probe_sf1.py reads it, never
+the tests or the registry.
 
 Construction: 10 key-shifted copies of every sf0.1 fact table
 (shift = copy * 10_000_000, a multiple of 10 so the registry's

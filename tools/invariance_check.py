@@ -8,7 +8,7 @@ total order).  This is the local stand-in for "would a 1000-executor
 cluster agree with local[32]".
 
 Usage:
-    cd /root/repo && python tools/invariance_check.py [name ...]
+    python tools/invariance_check.py [name ...]   # from the repository root
 
 Entries with ``oracle=None`` (probabilistic sketches, streaming
 drains with engine-specific values) are skipped: their VALUES are
@@ -58,13 +58,13 @@ def main(only: set[str]) -> int:
     from pyspark.sql import SparkSession
 
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark import session as sess
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries import driver
+    import registry
 
     spark = SparkSession.builder.master("local[8]").getOrCreate()
 
     names = [
         n
-        for n, spec in driver.QUERIES.items()
+        for n, spec in registry.QUERIES.items()
         if spec.oracle is not None and (not only or n in only)
     ]
     print(f"checking {len(names)} deterministic entries")
@@ -72,12 +72,12 @@ def main(only: set[str]) -> int:
     baseline: dict[str, list] = {}
     for n in names:
         t0 = time.time()
-        baseline[n] = rowset(driver.QUERIES[n].build(spark, SF))
+        baseline[n] = rowset(registry.QUERIES[n].build(spark, SF))
         print(f"base {n}: {len(baseline[n])} rows ({time.time() - t0:.1f}s)")
 
-    # adversarial conf: wrap tune via the driver's imported binding so
+    # adversarial conf: wrap tune via the registry's imported binding so
     # every builder's self-configuration lands on the tiny layout
-    orig_tune = driver.tune
+    orig_tune = registry.tune
 
     def tiny_tune(s, shuffle_partitions=None):
         out = orig_tune(s, shuffle_partitions=5)
@@ -91,12 +91,12 @@ def main(only: set[str]) -> int:
         out.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
         return out
 
-    driver.tune = tiny_tune
+    registry.tune = tiny_tune
     failures = []
     try:
         for n in names:
             t0 = time.time()
-            got = rowset(driver.QUERIES[n].build(spark, SF))
+            got = rowset(registry.QUERIES[n].build(spark, SF))
             ok = got == baseline[n]
             print(
                 f"{'ok  ' if ok else 'DIFF'} {n}: {len(got)} rows "
@@ -110,7 +110,7 @@ def main(only: set[str]) -> int:
                 print(f"  baseline-only: {only_b}")
                 print(f"  adversarial-only: {only_g}")
     finally:
-        driver.tune = orig_tune
+        registry.tune = orig_tune
         orig_tune(spark)  # restore the tune-owned conf keys
         spark.conf.unset("spark.sql.files.openCostInBytes")
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")

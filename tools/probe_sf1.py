@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Scale probe (r20 verdict task #2): time registry entries at an
-arbitrary data dir / core count, bench-identical methodology (noop
-sink, interleaved passes, medians).  Not part of the bench contract
--- bench.py is untouched; this exists to measure ABOVE the sf0.1
+arbitrary data dir / core count (noop sink, interleaved passes,
+medians).  Not part of the benchmark (perfbench/); this exists to
+measure ABOVE the sf0.1
 fixture (the 8-core driver run beats 32-core there, so local deltas
 under ~0.5 s carry no scale signal).
 
@@ -39,7 +39,7 @@ if __name__ == "__main__":
     runs = int(os.environ.get("PROBE_RUNS", "2"))
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.queries.driver import QUERIES
+    from registry import QUERIES
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.session import get_spark
 
     spark = get_spark(

@@ -7,7 +7,8 @@ its semantics Spark-first:
 
 - ``schemas``     -- the Metrica data model (hits / visits / SCD-2 dim)
                      mapped onto Spark types (reference: ddl/hits.sql,
-                     ddl/visits.sql, csv/dim_browser_country.csv).
+                     ddl/visits.sql, csv/dim_browser_country.csv);
+                     ``ddl`` keeps the tables' engine declarations.
 - ``functions.ch``-- ClickHouse-compatible expression library
                      (indexOf, arr[i] default semantics, toMonday, ...).
 - ``plans``       -- query-construction rules ClickHouse has and Spark
@@ -19,8 +20,12 @@ its semantics Spark-first:
                      registry, warehouse layout writer, JDBC gateway.
 - ``streaming``   -- Structured Streaming CDC ingestion (the Data
                      Transfer replication analog).
-- ``queries``     -- the driver-facing query catalog (queries() +
-                     DuckDB oracle SQL) and Metrica-parity queries.
+- ``queries``     -- the reference's DataLens charts over the Metrica
+                     model, and ClickHouse SQL with the declared
+                     engine metadata attached (``metrica``).
+
+The test-query registry and its DuckDB oracles are not part of the
+package: they live in the root-level ``registry`` module.
 
 Everything is DataFrame-first: logical plans are declared with the
 DataFrame/SQL API and Catalyst picks the physical strategy.  Python

@@ -27,10 +27,6 @@ Pinned semantics (CH-documented defaults, deviations noted):
 - ``json_extract_keys`` returns keys SORTED: the variant encoding
   normalizes object key order (CH preserves document order) --
   documented deviation, deterministic on both engines.
-
-Lives in its own module (not functions/ch.py) so the rotation guard's
-whole-module staleness granularity doesn't force a re-verification of
-every ch.py-dependent registry entry when the JSON family evolves.
 """
 
 from __future__ import annotations

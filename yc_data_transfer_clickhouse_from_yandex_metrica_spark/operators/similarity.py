@@ -43,7 +43,7 @@ from ..functions import ch
 # Auto-switch point between the SQL-literal centroid form (JVM
 # codegen'd HOF fold — zero Python, best for tiny centroid sets) and
 # the broadcast-numpy + Arrow-UDF form.  MEASURED crossover
-# (tools/probe_ivf.py --arrow + the crossover sweep, PLANS.md r17,
+# (the literal vs broadcast-UDF crossover sweep, PLANS.md r17,
 # 200k rows x dim 16): the literal fold scales linearly in nlist x dim
 # (0.42 s at 128 elems -> 19.6 s at 16k) while the arrow path stays
 # flat (~0.4-0.6 s — BLAS matmul is trivial at these sizes; the cost
@@ -1842,7 +1842,7 @@ def _footer_row_counts(spark, path: str) -> dict[int, int]:
 def index_stats(spark, path: str) -> dict:
     """Maintenance signals for a persisted IVF index — the
     rebuild/compact decision the r17 append-drift probe computed
-    tool-side (tools/probe_ivf.py --append), as a library call
+    tool-side (incremental-append curve, PLANS.md r17), as a library call
     (r17 verdict #4a).  ``append_ivf_index`` writes one file set per
     batch into each ``cid=`` directory, so a real ingest cadence
     grows BOTH list-size skew (drifted data concentrates in few

@@ -1,3 +1,1 @@
-from .driver import QUERIES, oracle_sql, queries
-
-__all__ = ["QUERIES", "queries", "oracle_sql"]
+"""Metrica-parity chart queries over the visits model (``metrica``)."""

@@ -148,33 +148,26 @@ def traffic_sources(
     )
 
 
-_REFERENCE_DDL_DIR = "/root/reference/ddl"
-
-
-def reference_table_meta(ddl_dir: str = _REFERENCE_DDL_DIR):
-    """TableMeta for the metrica model's tables parsed from the
-    reference's OWN DDL files (``visits.sql`` / ``hits.sql``) via
-    ``plans/chsql.table_meta_from_ddl`` — the same declarations
-    ClickHouse itself reads (round-10 verdict task 5: no hand-built
-    TableMeta).  visits declares
+def reference_table_meta(name: str):
+    """TableMeta for one of the metrica model's tables, parsed from the
+    reference's own engine declarations (``ddl.TABLE_DDL``) via
+    ``plans/chsql.table_meta_from_ddl`` -- the same declarations
+    ClickHouse itself reads, no hand-built TableMeta.  visits declares
     ``VersionedCollapsingMergeTree(Sign, VisitVersion)`` + ``ORDER
     BY`` + ``SAMPLE BY`` (ddl/visits.sql:229-239), so both ``FROM
     visits FINAL`` and ``SAMPLE k`` compile; hits is a plain
     MergeTree with ``SAMPLE BY`` (ddl/hits.sql:113-119), so SAMPLE
-    compiles and FINAL keeps chsql's refusal — exactly CH's behavior
-    for that engine.  Missing DDL files are simply absent from the
-    returned map (their decorations then refuse with the declare-it
-    pointer)."""
-    from pathlib import Path
-
+    compiles and FINAL keeps chsql's refusal -- exactly CH's behavior
+    for that engine.  A table with no declaration raises ValueError."""
+    from ..ddl import TABLE_DDL
     from ..plans.chsql import table_meta_from_ddl
 
-    out = {}
-    for name in ("visits", "hits"):
-        p = Path(ddl_dir) / f"{name}.sql"
-        if p.is_file():
-            out[name] = table_meta_from_ddl(p.read_text())
-    return out
+    if name not in TABLE_DDL:
+        raise ValueError(
+            f"metrica: no engine declaration for table {name!r} "
+            f"(declared: {sorted(TABLE_DDL)})"
+        )
+    return table_meta_from_ddl(TABLE_DDL[name])
 
 
 def run_model_sql(
@@ -183,7 +176,6 @@ def run_model_sql(
     visits: DataFrame | None = None,
     hits: DataFrame | None = None,
     params: dict[str, str] | None = None,
-    ddl_dir: str = _REFERENCE_DDL_DIR,
 ) -> DataFrame:
     """ClickHouse-dialect SQL over the Metrica model with the
     reference-DDL engine metadata attached: ``FROM visits FINAL`` and
@@ -196,13 +188,12 @@ def run_model_sql(
         tables["visits"] = visits
     if hits is not None:
         tables["hits"] = hits
-    meta = reference_table_meta(ddl_dir)
     return chsql.run_sql(
         spark,
         sql,
         tables,
         params=params,
-        table_meta={k: v for k, v in meta.items() if k in tables},
+        table_meta={k: reference_table_meta(k) for k in tables},
     )
 
 

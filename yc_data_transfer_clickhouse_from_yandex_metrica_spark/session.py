@@ -30,8 +30,8 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     conf = {
         "spark.sql.session.timeZone": "UTC",
         # the driver's synthetic events.parquet carries TIMESTAMP(NANOS)
-        # which Spark's vectorized reader rejects; read as long + convert
-        # (see queries.driver.t)
+        # which Spark's vectorized reader rejects; read as long and let
+        # the reader convert it (the test registry's ``t`` does)
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.ansi.enabled": "false",
         "spark.sql.adaptive.enabled": "true",
