@@ -568,3 +568,151 @@ def test_qew_nested_placement_keeps_parametrized_refusal(spark, weighted):
             "FROM t) s",
             {"t": weighted},
         )
+
+
+# One statement per refusal of the statement-level structural compiler
+# (_rewrite_summap and its sequence-pattern grammar), each with its
+# full message.  Pure text: no session is needed, the refusals fire
+# before any SQL reaches Spark.
+_STRUCT_REFUSALS = [
+    ("distinct", "SELECT DISTINCT k, sumMap(a, b) AS m FROM t GROUP BY k",
+     "chsql: sumMap family cannot combine with DISTINCT"),
+    ("map_alias", "SELECT k, sumMap(a, b) FROM t GROUP BY k",
+     "chsql: alias the sumMap(...) item (AS name) -- the result is a "
+     "STRUCT(keys, values) column"),
+    ("map_args", "SELECT k, minMap(a) AS m FROM t GROUP BY k",
+     "chsql: minMap takes (keys_array, values_array) -- the single-tuple "
+     "CH form is not mapped"),
+    ("topk_alias", "SELECT topK(3)(x) FROM t",
+     "chsql: alias the topK(...)(...) item (AS name) -- the result is an "
+     "ARRAY column"),
+    ("topk_param", "SELECT topK(0)(x) AS t3 FROM t",
+     "chsql: topK needs a literal positive integer parameter, got '0'"),
+    ("topk_args", "SELECT topKWeighted(3)(x) AS t3 FROM t",
+     "chsql: topKWeighted takes exactly 2 argument(s) after the parameter "
+     "list"),
+    ("qew_alias", "SELECT quantileExactWeighted(0.5)(x, w) FROM t",
+     "chsql: alias the quantileExactWeighted(...)(...) item (AS name)"),
+    ("qew_levels", "SELECT quantilesExactWeighted(0.5, 2)(x, w) AS q FROM t",
+     "chsql: quantilesExactWeighted needs literal quantile level(s) in "
+     "[0, 1], got '0.5, 2'"),
+    ("qew_one_level",
+     "SELECT quantileExactWeighted(0.25, 0.75)(x, w) AS q FROM t",
+     "chsql: quantileExactWeighted takes ONE level; use "
+     "quantilesExactWeighted for a list"),
+    ("qew_args", "SELECT quantileExactWeighted(0.5)(x) AS q FROM t",
+     "chsql: quantileExactWeighted takes (value, weight) after the level "
+     "list"),
+    ("wf_alias", "SELECT windowFunnel(60)(ts, c1, c2) FROM t",
+     "chsql: alias the windowFunnel(...)(...) item (AS name)"),
+    ("wf_window", "SELECT windowFunnel(w)(ts, c1) AS d FROM t",
+     "chsql: windowFunnel needs a literal window length in seconds, got "
+     "'w'"),
+    ("wf_mode", "SELECT windowFunnel(60, 'strict_dedup')(ts, c1) AS d FROM t",
+     "chsql: windowFunnel mode 'strict_dedup' has no SQL compile (the "
+     "default compile IS strict_increase binding; 'strict_order' compiles "
+     "the instant-collapse chain) -- operators/funnel.window_funnel for "
+     "anything else"),
+    ("wf_args", "SELECT windowFunnel(60)(ts) AS d FROM t",
+     "chsql: windowFunnel takes (timestamp, cond1, ...) -- at least one "
+     "condition"),
+    ("wf_cap",
+     "SELECT windowFunnel(60)(ts, "
+     + ", ".join(f"c{i}" for i in range(1, 14)) + ") AS d FROM t",
+     "chsql: windowFunnel SQL compile caps at 12 steps (k(k-1)/2 window "
+     "layers); use operators/funnel.window_funnel directly"),
+    ("seq_alias", "SELECT sequenceMatch('(?1).*(?2)')(ts, c1, c2) FROM t",
+     "chsql: alias the sequenceMatch(...)(...) item (AS name)"),
+    ("seq_param", "SELECT sequenceMatch(1)(ts, c1) AS m FROM t",
+     "chsql: sequenceMatch needs ONE literal pattern string parameter, "
+     "got '1'"),
+    ("seq_args", "SELECT sequenceCount('(?1)')(ts) AS n FROM t",
+     "chsql: sequenceCount takes (timestamp, cond1, ...) after the pattern "
+     "-- at least one condition"),
+    ("seq_cap",
+     "SELECT sequenceMatch('" + ".*".join(["(?1)"] * 33)
+     + "')(ts, c1) AS m FROM t",
+     "chsql: sequenceMatch pattern exceeds the CH cap of 32 steps"),
+    ("seqcount_pair",
+     "SELECT sequenceCount('(?1)(?t<=5)(?2)')(ts, c1, c2) AS n FROM t",
+     "chsql: sequenceCount compiles the '(?i).*(?j)' pair form only; use "
+     "operators/funnel.sequence_count_pairs (longer patterns have no "
+     "run-length collapse)"),
+    ("hist_alias", "SELECT histogram(4)(x) FROM t",
+     "chsql: alias the histogram(...)(...) item (AS name) -- the result is "
+     "an ARRAY of (lower, upper, height) structs"),
+    ("hist_bins", "SELECT histogram(0)(x) AS h FROM t",
+     "chsql: histogram needs a literal positive bin count, got '0'"),
+    ("hist_args", "SELECT histogram(4)(x, y) AS h FROM t",
+     "chsql: histogram takes exactly one value argument after the bin "
+     "count"),
+    ("span_alias", "SELECT intervalLengthSum(s, e) FROM t",
+     "chsql: alias the intervalLengthSum(...) item (AS name)"),
+    ("span_args", "SELECT maxIntersections(s) AS m FROM t",
+     "chsql: maxIntersections takes exactly (start, end)"),
+    ("entropy_alias", "SELECT entropy(x) FROM t",
+     "chsql: alias the entropy(...) item (AS name)"),
+    ("entropy_args", "SELECT entropy(x, y) AS e FROM t",
+     "chsql: entropy takes exactly one argument (the value whose "
+     "distribution is measured)"),
+    ("map_nested", "SELECT k, 1 + sumMap(a, b) AS m FROM t GROUP BY k",
+     "chsql: sumMap/minMap/maxMap compile only as a whole aliased "
+     "top-level SELECT item; found one nested in '1 + sumMap(a, b)' -- "
+     "use operators/maps.agg_map"),
+    ("with_totals",
+     "SELECT k, sumMap(a, b) AS m FROM t GROUP BY k WITH TOTALS",
+     "chsql: sumMap family cannot combine with WITH TOTALS"),
+    ("grouping_sets", "SELECT k, sumMap(a, b) AS m FROM t GROUP BY ROLLUP(k)",
+     "chsql: sumMap family compiles over a plain GROUP BY (no GROUPING "
+     "SETS/ROLLUP/CUBE)"),
+    ("having_refs_struct",
+     "SELECT k, sumMap(a, b) AS m FROM t GROUP BY k HAVING size(m.keys) > 0",
+     "chsql: HAVING cannot reference the sumMap/topK-family aggregate "
+     "(compute it in an outer query)"),
+    ("positional_group_by", "SELECT k, sumMap(a, b) AS m FROM t GROUP BY 1",
+     "chsql: positional GROUP BY is not supported with the sumMap family "
+     "-- spell the expression"),
+    ("computed_item_alias",
+     "SELECT k + 1, sumMap(a, b) AS m FROM t GROUP BY k + 1",
+     "chsql: with the sumMap family every computed SELECT item needs an "
+     "alias; add AS to 'k + 1'"),
+    ("order_by_output",
+     "SELECT k, sumMap(a, b) AS m FROM t GROUP BY k ORDER BY z",
+     "chsql: with the sumMap family ORDER BY items must be output columns; "
+     "'z' is not one of ['k', 'm']"),
+    ("pattern_step", "SELECT sequenceMatch('x')(ts, c1) AS m FROM t",
+     "chsql: sequenceMatch pattern 'x': expected a step reference (?i) at "
+     "position 0; the compiled grammar is (?i) atoms joined by .* or "
+     "(?t<=N) -- operators/funnel for anything else"),
+    ("pattern_ref_range", "SELECT sequenceMatch('(?3)')(ts, c1) AS m FROM t",
+     "chsql: sequenceMatch pattern references (?3) but only 1 condition(s) "
+     "were passed"),
+    ("pattern_gap",
+     "SELECT sequenceMatch('(?1)(?2)')(ts, c1, c2) AS m FROM t",
+     "chsql: sequenceMatch pattern '(?1)(?2)': expected .* or (?t<=N) at "
+     "position 4; strict adjacency and (?t>N) have no compile -- "
+     "operators/funnel"),
+    ("pattern_ends", "SELECT sequenceMatch('(?1).*')(ts, c1) AS m FROM t",
+     "chsql: sequenceMatch pattern '(?1).*' must start and end with a (?i) "
+     "step reference"),
+    # order of checks: the alias refusal precedes the family's own
+    # checks, and a call that is not the whole item is not claimed
+    ("alias_before_param", "SELECT topK(0)(x, y) FROM t",
+     "chsql: alias the topK(...)(...) item (AS name) -- the result is an "
+     "ARRAY column"),
+    ("map_not_whole_item", "SELECT k, sumMap(a, b).keys AS m FROM t GROUP BY k",
+     "chsql: sumMap/minMap/maxMap compile only as a whole aliased "
+     "top-level SELECT item; found one nested in 'sumMap(a, b).keys' -- "
+     "use operators/maps.agg_map"),
+]
+
+
+@pytest.mark.parametrize(
+    "sql,msg",
+    [c[1:] for c in _STRUCT_REFUSALS],
+    ids=[c[0] for c in _STRUCT_REFUSALS],
+)
+def test_structural_refusal_messages_are_pinned(sql, msg):
+    with pytest.raises(ValueError) as ei:
+        chsql._rewrite_summap(sql)
+    assert str(ei.value) == msg
