@@ -4,8 +4,8 @@
 rewrite (flat max-flag algebra -- the exact plan
 ``operators/funnel.retention`` builds, oracle-proven via the
 ``retention_cohort`` registry entry).  ``entropy(x)`` compiles through
-the statement-level structural planner (``_rewrite_summap`` kind
-"ent") onto the same two-level aggregate as
+the statement-level structural planner (``_rewrite_summap``, table
+entry "entropy") onto the same two-level aggregate as
 ``operators/stats.entropy`` (oracle-proven via ``type_entropy``).
 
 Every behavioral test pins SQL output == operator output, plus an

@@ -1772,7 +1772,9 @@ def test_ivf_arrow_assignment_matches_literal(spark):
     SQL parser) assigns IDENTICALLY to the literal path — exact and
     two-level — including the degenerate rows (NULL vector, NaN
     element, wrong length, all-zero vector), which land in the first
-    candidate list under both forms."""
+    candidate list under both forms.  The centroid set is small, so
+    ``assign_lists`` takes the literal form; the Arrow form is called
+    directly on the same centroids."""
     import numpy as np
 
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
@@ -1795,24 +1797,31 @@ def test_ivf_arrow_assignment_matches_literal(spark):
     def cids(df):
         return {r["nn_id"]: r["cid"] for r in df.select("nn_id", "cid").collect()}
 
-    for groups in (None, 3):
-        lit = cids(similarity.assign_lists(vecs, cents, coarse_groups=groups, use_arrow=False))
-        arr = cids(similarity.assign_lists(vecs, cents, coarse_groups=groups, use_arrow=True))
-        assert lit == arr, f"coarse_groups={groups}"
-    # the auto-switch picks arrow past the measured crossover, and a
-    # FORCED literal past the parser budget refuses with types instead
-    # of dying opaquely in the SQL parser
-    assert similarity._use_arrow(cents, None) is False
-    assert similarity._use_arrow([[0.0] * 16] * 256, None) is True
-    assert similarity._use_arrow([[0.0] * 1024] * 65536, None) is True
-    with pytest.raises(ValueError, match="parser budget"):
-        similarity._use_arrow([[0.0] * 1024] * 65536, False)
+    base = vecs.select(
+        F.col("vec_id").alias("nn_id"), similarity.as_double("embedding").alias("nv")
+    )
+    unit = similarity._unit_matrix(cents)
+    assert not similarity._use_arrow(cents)
+    lit = cids(similarity.assign_lists(vecs, cents))
+    assert lit == cids(similarity._arrow_assign(base, unit, None, None))
+    members, reps = similarity._coarse_cells(unit, 3)
+    lit = cids(similarity.assign_lists(vecs, cents, coarse_groups=3))
+    arr = similarity._arrow_assign(base, unit, members, np.array(reps))
+    assert lit == cids(arr)
+    # the size rule picks arrow past the measured crossover
+    # (_ARROW_AUTO_ELEMS = 1024 doubles, nlist x dim)
+    assert similarity._use_arrow([[0.0] * 16] * 64) is False
+    assert similarity._use_arrow([[0.0] * 16] * 65) is True
+    assert similarity._use_arrow([[0.0] * 16] * 256) is True
+    assert similarity._use_arrow([[0.0] * 1024] * 65536) is True
 
 
 def test_ivf_arrow_probe_serving_matches_literal(spark):
-    """r17: end-to-end ivf_topk and ivf_topk_pruned under
-    use_arrow=True (broadcast probe + assignment) return exactly the
-    literal-path results — same probe selection, same rescoring."""
+    """r17: the broadcast probe + assignment return exactly the
+    literal-path results of ivf_topk — same probe selection, same
+    rescoring — and ivf_topk_pruned agrees with ivf_topk on either
+    side of the size rule (a small centroid set serves in literal
+    form, one past _ARROW_AUTO_ELEMS in Arrow form)."""
     import numpy as np
 
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
@@ -1832,19 +1841,33 @@ def test_ivf_arrow_probe_serving_matches_literal(spark):
         F.col("vec_id").alias("query_id"), "embedding"
     ).unionByName(degenerate_q)
     cents = similarity.train_centroids(vecs, nlist=8)
+    # past the crossover: 110 lists x 10 dims
+    big = [[float(x) for x in row] for row in rng.normal(size=(110, 10))]
+    assert not similarity._use_arrow(cents) and similarity._use_arrow(big)
     as_set = lambda df: {tuple(r) for r in df.collect()}
-    lit = as_set(similarity.ivf_topk(vecs, qs, k=5, nprobe=3, centroids=cents, use_arrow=False))
-    arr = as_set(similarity.ivf_topk(vecs, qs, k=5, nprobe=3, centroids=cents, use_arrow=True))
+    lit = as_set(similarity.ivf_topk(vecs, qs, k=5, nprobe=3, centroids=cents))
+    unit = similarity._unit_matrix(cents)
+    base_v = vecs.select(
+        F.col("vec_id").alias("nn_id"), similarity.as_double("embedding").alias("nv")
+    )
+    arr = as_set(
+        similarity._rank_candidates(
+            similarity._arrow_probe_frame(qs, unit, 3, "query_id", "embedding"),
+            similarity._arrow_assign(base_v, unit, None, None),
+            5,
+        )
+    )
     assert lit == arr and len(lit)
+    big_topk = as_set(similarity.ivf_topk(vecs, qs, k=5, nprobe=3, centroids=big))
+    assert len(big_topk)
 
     base = tempfile.mkdtemp(prefix="ym_ivf_arrow_")
     try:
-        path = f"{base}/idx"
-        similarity.write_ivf_index(vecs, cents, path, use_arrow=True)
-        pruned = as_set(
-            similarity.ivf_topk_pruned(spark, path, qs, k=5, nprobe=3, use_arrow=True)
-        )
-        assert pruned == lit
+        for c, want in ((cents, lit), (big, big_topk)):
+            path = f"{base}/idx{len(c)}"
+            similarity.write_ivf_index(vecs, c, path)
+            pruned = as_set(similarity.ivf_topk_pruned(spark, path, qs, k=5, nprobe=3))
+            assert pruned == want
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

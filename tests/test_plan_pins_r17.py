@@ -4,7 +4,8 @@ driver-local probe frame (advice #2 closure).
 
 What must stay true at 100 TB:
 
-- ``assign_lists(use_arrow=True)`` is STILL a pure map-side pass — one
+- ``assign_lists`` in its Arrow form (a centroid set past
+  ``_ARROW_AUTO_ELEMS``) is STILL a pure map-side pass — one
   ArrowEvalPython stage over the scan, zero Exchange — exactly like
   the literal-path pin (test_ivf_assignment_is_map_side).  The whole
   point of the index build is that it never shuffles N rows.
@@ -39,6 +40,15 @@ def _vectors(spark, n=300, dim=8, seed=3):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
+def _big_centroids(dim=8, seed=3):
+    """130 lists x 8 dims: past _ARROW_AUTO_ELEMS, so assign_lists
+    takes the broadcast (Arrow) form."""
+    rng = np.random.RandomState(seed)
+    cents = [[float(x) for x in row] for row in rng.normal(size=(130, dim))]
+    assert similarity._use_arrow(cents)
+    return cents
+
+
 def _scanned_vectors(spark, tmp, n=300, dim=8, seed=3):
     """Vectors round-tripped through parquet so the pinned plan reads
     from a real multi-file scan (6 files), like a persisted corpus."""
@@ -55,10 +65,7 @@ def test_arrow_assign_is_map_side(spark):
     base = tempfile.mkdtemp(prefix="ym_pin17a_")
     try:
         vecs = _scanned_vectors(spark, f"{base}/v")
-        cents = similarity.train_centroids(vecs, nlist=4)
-        fmt = _formatted(
-            similarity.assign_lists(vecs, cents, use_arrow=True)
-        )
+        fmt = _formatted(similarity.assign_lists(vecs, _big_centroids()))
         tree = _final_tree(fmt)
         assert "ArrowEvalPython" in tree, tree
         assert "Exchange" not in tree, tree
@@ -76,9 +83,8 @@ def test_arrow_two_level_assign_is_map_side(spark):
     base = tempfile.mkdtemp(prefix="ym_pin17b_")
     try:
         vecs = _scanned_vectors(spark, f"{base}/v", seed=5)
-        cents = similarity.train_centroids(vecs, nlist=6)
         fmt = _formatted(
-            similarity.assign_lists(vecs, cents, coarse_groups=2, use_arrow=True)
+            similarity.assign_lists(vecs, _big_centroids(seed=5), coarse_groups=2)
         )
         tree = _final_tree(fmt)
         assert "ArrowEvalPython" in tree and "Exchange" not in tree, tree

@@ -8,8 +8,9 @@ to the expression form: the kernel reproduces the fold's exact IEEE
 operation order (dimension-ascending accumulation), Spark's NaN-above-
 everything comparison semantics (``NaN > 0`` is TRUE in Spark SQL,
 false in IEEE/numpy), and the NULL-element poisoning of the zip_with
-fold (signature 0).  These tests pin all of that against the retained
-expression form, which stays in the module as the semantic reference.
+fold (signature 0).  These tests pin all of that against the
+expression form, ``sign_signature``, which stays in the module as the
+semantic reference.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.functions import ch
 from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import (
     similarity as sim,
 )
@@ -93,20 +95,62 @@ def test_kernel_bit_identical_on_adversarial_battery(
     assert a == b
 
 
-def test_pairs_identical_and_scaled_copies_still_collide(spark, monkeypatch):
+def _expression_pairs(emb, threshold, dim, nplanes, ntables):
+    """The pairs of signlsh_pairs with its signature stage spelled as
+    the per-table ``sign_signature`` expression battery: same buckets,
+    same exact-cosine verify."""
+    base = emb.select(
+        F.col("vec_id").alias("id"), sim.as_double("embedding").alias("v")
+    )
+    sigs = base.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        sim.sign_signature(
+                            F.col("v"), dim, nplanes, seed=42 + t
+                        ).alias("sig"),
+                    )
+                    for t in range(ntables)
+                ]
+            )
+        ).alias("s"),
+    ).select("id", "s.tbl", "s.sig")
+    a, b = sigs.alias("a"), sigs.alias("b")
+    cands = (
+        a.join(
+            b,
+            (F.col("a.tbl") == F.col("b.tbl"))
+            & (F.col("a.sig") == F.col("b.sig"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
+    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
+    return (
+        cands.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn("cos", sim.cosine(F.col("va"), F.col("vb")))
+        .where(F.col("cos") >= F.lit(threshold))
+        .select("id_a", "id_b", ch.round_to(F.col("cos"), 4).alias("cos"))
+    )
+
+
+def test_pairs_identical_and_scaled_copies_still_collide(spark):
     emb = _emb(spark)
-    monkeypatch.setattr(sim, "_ARROW_SIGS", True)
     new = sim.signlsh_pairs(emb, threshold=0.5, dim=64, nplanes=16, ntables=4)
     rows_new = sorted(map(tuple, new.collect()))
-    monkeypatch.setattr(sim, "_ARROW_SIGS", False)
-    old = sim.signlsh_pairs(emb, threshold=0.5, dim=64, nplanes=16, ntables=4)
+    old = _expression_pairs(emb, threshold=0.5, dim=64, nplanes=16, ntables=4)
     rows_old = sorted(map(tuple, old.collect()))
     assert rows_new == rows_old and len(rows_new) > 0
 
 
 def test_signature_stage_is_one_arrow_node(spark):
     emb = _emb(spark, n=50)
-    assert sim._ARROW_SIGS  # shipped default
     out = sim.signlsh_pairs(emb, threshold=0.5, dim=64, nplanes=16, ntables=4)
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"

@@ -156,12 +156,15 @@ def test_unit_matrix_memoizes_ndarray_inputs_only(spark, served_index):
 
 def test_arrow_paths_reuse_one_broadcast_per_payload(spark):
     """End-to-end: two assign_lists calls with the same centroids on
-    the arrow path create ONE broadcast, and repeated pruned serving
-    against one index does not grow the memo."""
+    the arrow path (a centroid set past _ARROW_AUTO_ELEMS) create ONE
+    broadcast, and repeated pruned serving against one index does not
+    grow the memo."""
     similarity._bcast_cache.clear()
     vecs = _vectors(spark, n=40, dim=4, seed=3)
-    cents = similarity.train_centroids(vecs, nlist=3)
-    similarity.assign_lists(vecs, cents, use_arrow=True).collect()
+    rng = np.random.RandomState(3)
+    cents = [[float(x) for x in row] for row in rng.normal(size=(257, 4))]
+    assert similarity._use_arrow(cents)
+    similarity.assign_lists(vecs, cents).collect()
     n1 = len(similarity._bcast_cache)
-    similarity.assign_lists(vecs, cents, use_arrow=True).collect()
+    similarity.assign_lists(vecs, cents).collect()
     assert len(similarity._bcast_cache) == n1 == 1

@@ -1,7 +1,13 @@
 """Similarity search over embedding columns (array<float>).
 
-Primitives are pure higher-order-function expressions (zip_with +
-aggregate dot products -- JVM, codegen'd, no Python).  Three levels:
+Primitives are higher-order-function expressions (zip_with + aggregate
+dot products -- JVM, codegen'd, no Python) wherever their size allows.
+Two stages run as Arrow numpy kernels instead: the sign-LSH signatures
+(always; bit-identical to ``sign_signature``, which stays as their
+reference), and IVF assignment and probing once the centroid set
+passes ``_ARROW_AUTO_ELEMS`` doubles, where a centroid literal stops
+paying for itself and then stops parsing at all (``assign_lists``).
+Size is the only selector.  Three levels:
 
 - brute_topk      : exact cosine top-k, query side broadcast.  The
                     correctness baseline; fine when |queries| is small
@@ -52,14 +58,6 @@ from ..functions import ch
 # startup on tiny inputs and keeps the pinned registry entries
 # (nlist=8 x dim=64 = 512) on the fully-JVM literal plan.
 _ARROW_AUTO_ELEMS = 1024
-
-# Hard ceiling for an EXPLICITLY forced literal (use_arrow=False):
-# each element renders as ~18 chars of SQL, so 2^18 elems is already
-# ~5 MB of expression text through the parser and py4j, and the
-# 65k-list/1024-dim serving target (6.7e7 elems) would be >1 GB — far
-# past any parser.  Forcing a literal past this refuses with types
-# instead of dying opaquely in the parser (r16 advice #4).
-_MAX_LITERAL_ELEMS = 1 << 18
 
 _CENTROID_SIDECAR = "_centroids.json"
 
@@ -166,14 +164,6 @@ def sign_signature(vec: Column, dim: int, nplanes: int = 16, seed: int = 42) -> 
     )
 
 
-# r20: signlsh_pairs signature stage backend.  True = one Arrow numpy
-# kernel for all tables' signatures (guide §4: the expression form is
-# ntables*nplanes interpreted lambda dots per row, exempt from codegen
-# CSE); False pins the legacy per-table expression battery (kept for
-# A/Bs and the bit-equality property tests).
-_ARROW_SIGS = True
-
-
 def _sign_signatures_kernel(
     dim: int, nplanes: int, ntables: int, seed0: int = 42
 ):
@@ -269,34 +259,17 @@ def signlsh_pairs(
     # banded rows carry ONLY (id, tbl, sig): the bucket self-join
     # shuffles 20 bytes/row; vectors are attached per side AFTER the
     # candidate pairs exist (|candidates| << |vectors| x ntables)
-    if _ARROW_SIGS:
-        # r20: one Arrow batch pass computes every table's signature
-        # (bit-identical to the expression battery -- see
-        # _sign_signatures_kernel); the expression form evaluated
-        # ntables*nplanes interpreted lambda dots per row (guide §4).
-        # posexplode's position IS the table index (array built in
-        # seed order).  The kernel is NOT a lambda HOF, so sitting
-        # under the Generate is safe: ArrowEvalPython materializes the
-        # array column before the explode consumes it.
-        kern = _sign_signatures_kernel(dim, nplanes, ntables, seed0=42)
-        sigs = base.select(
-            "id", F.posexplode(kern(F.col("v"))).alias("tbl", "sig")
-        )
-    else:
-        sigs = base.select(
-            "id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            sign_signature(F.col("v"), dim, nplanes, seed=42 + t).alias("sig"),
-                        )
-                        for t in range(ntables)
-                    ]
-                )
-            ).alias("s"),
-        ).select("id", F.col("s.tbl").alias("tbl"), F.col("s.sig").alias("sig"))
+    # r20: one Arrow batch pass computes every table's signature
+    # (bit-identical to sign_signature -- see _sign_signatures_kernel);
+    # the expression form evaluated ntables*nplanes interpreted lambda
+    # dots per row (guide §4).  posexplode's position IS the table
+    # index (array built in seed order).  The kernel is NOT a lambda
+    # HOF, so sitting under the Generate is safe: ArrowEvalPython
+    # materializes the array column before the explode consumes it.
+    kern = _sign_signatures_kernel(dim, nplanes, ntables, seed0=42)
+    sigs = base.select(
+        "id", F.posexplode(kern(F.col("v"))).alias("tbl", "sig")
+    )
     # shuffle_hash on BOTH sides: broadcast would compute the signature
     # lineage twice (build + probe); the shuffled join materializes the
     # sig exchange once and reuses it -- measured 4.4x at sf0.1, and at
@@ -460,25 +433,14 @@ def _unit_matrix(centroids: list[list[float]]) -> "np.ndarray":
     return unit
 
 
-def _use_arrow(centroids: list[list[float]], use_arrow: bool | None) -> bool:
-    """Literal vs broadcast-UDF path choice: explicit flag wins (a
-    forced literal past the parser budget refuses with types), else
-    auto-switch at the measured performance crossover
+def _use_arrow(centroids: list[list[float]]) -> bool:
+    """Literal vs broadcast-UDF form, by size alone: the broadcast form
+    once nlist x dim passes the measured crossover
     (``_ARROW_AUTO_ELEMS``).  Accepts a list-of-lists or a 2-D
     ndarray (the sidecar cache hands back the latter — r17 advice
     #3)."""
     dim = len(centroids[0]) if len(centroids) else 0
-    elems = len(centroids) * dim
-    if use_arrow is not None:
-        if not use_arrow and elems > _MAX_LITERAL_ELEMS:
-            raise ValueError(
-                f"use_arrow=False forces a {elems}-double centroid "
-                f"literal — past the {_MAX_LITERAL_ELEMS} parser budget "
-                "(multi-MB SQL text); drop the flag or pass "
-                "use_arrow=True for the broadcast path"
-            )
-        return bool(use_arrow)
-    return elems > _ARROW_AUTO_ELEMS
+    return len(centroids) * dim > _ARROW_AUTO_ELEMS
 
 
 def _valid_rows(
@@ -791,13 +753,28 @@ def _coarse_partition(
     return [m for m in out if m]
 
 
+def _coarse_cells(
+    unit: "np.ndarray", coarse_groups: int
+) -> tuple[list[list[int]], list[list[float]]]:
+    """Two-level assignment cells: the member cids of each coarse cell
+    and its representative, the renormalized member mean (the k-means
+    cells' own centroids, rebuilt from the final membership so
+    expression and partition agree)."""
+    members = _coarse_partition(unit, coarse_groups)
+    reps = []
+    for m in members:
+        mean = unit[m].mean(axis=0)
+        n = float(np.linalg.norm(mean))
+        reps.append((mean / n if n > 0 else unit[m[0]]).tolist())
+    return members, reps
+
+
 def assign_lists(
     vectors: DataFrame,
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     coarse_groups: int | None = None,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """IVF index build: (nn_id, nv, cid) — every vector tagged with
     its nearest-centroid list id in ONE map-side pass (no join, no
@@ -829,23 +806,25 @@ def assign_lists(
     N x nlist dots stop being affordable (1e9 vectors x 65k lists =
     6.5e13 dots exact vs ~5e11 two-level).
 
-    ``use_arrow`` picks the expression form: ``False`` embeds the
-    centroids as a single SQL literal (JVM codegen, zero Python — best
-    for tiny centroid sets; refuses past the parser budget), ``True``
-    ships them as a broadcast numpy matrix consumed by an
-    Arrow-batched pandas UDF, and ``None`` (default) auto-switches to
-    the broadcast form once nlist x dim passes the MEASURED crossover
-    (``_ARROW_AUTO_ELEMS``): the literal fold's per-row cost is linear
-    in nlist x dim while the arrow path rides BLAS and stays flat —
-    35x at 1024 x 16 (probe_ivf --arrow, PLANS.md r17) — and the r16
-    advice's 65k x 1024 target is ~1.3 GB of SQL text in literal form,
-    parser-impossible outright."""
+    The size of the centroid set picks the expression form.  Up to
+    ``_ARROW_AUTO_ELEMS`` doubles (nlist x dim) the centroids are one
+    SQL literal (JVM codegen, zero Python — best for small centroid
+    sets); past it they ship as a broadcast numpy matrix consumed by
+    an Arrow-batched pandas UDF.  The threshold is the MEASURED
+    crossover: the literal fold's per-row cost is linear in nlist x
+    dim while the arrow path rides BLAS and stays flat — 35x at 1024 x
+    16 (probe_ivf --arrow, PLANS.md r17) — and the r16 advice's 65k x
+    1024 target is ~1.3 GB of SQL text in literal form,
+    parser-impossible outright.  Small sets stay literal: the Arrow
+    form's Python workers and batch transfer are a fixed cost (forced
+    at 16 lists x 32 dims it made a perfbench curation pass ~1.5x
+    slower on a 4-core host)."""
     if coarse_groups is not None and coarse_groups < 1:
         raise ValueError(f"coarse_groups must be >= 1, got {coarse_groups}")
     base = vectors.select(
         F.col(id_col).alias("nn_id"), as_double(vec_col).alias("nv")
     )
-    arrow = _use_arrow(centroids, use_arrow)
+    arrow = _use_arrow(centroids)
     if coarse_groups is None or min(int(coarse_groups), len(centroids)) >= len(
         centroids
     ):
@@ -860,15 +839,7 @@ def assign_lists(
         )
 
     unit = _unit_matrix(centroids)
-    members = _coarse_partition(unit, coarse_groups)
-    # coarse cell representatives: renormalized member means (the
-    # k-means cells' own centroids, rebuilt from the final membership
-    # so expression and partition agree)
-    reps = []
-    for m in members:
-        mean = unit[m].mean(axis=0)
-        n = float(np.linalg.norm(mean))
-        reps.append((mean / n if n > 0 else unit[m[0]]).tolist())
+    members, reps = _coarse_cells(unit, coarse_groups)
     if arrow:
         return _arrow_assign(
             base, unit, members, np.array(reps, dtype=np.float64)
@@ -922,7 +893,6 @@ def ivf_topk(
     query_id_col: str = "query_id",
     centroids: list[list[float]] | None = None,
     assigned: DataFrame | None = None,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """IVF ANN: coarse-quantize vectors to nlist k-means centroids
     (trained by `train_centroids` on a bounded hash sample unless
@@ -986,12 +956,8 @@ def ivf_topk(
     # hidden exchange that kills a 100 TB run.
     nprobe = min(int(nprobe), len(centroids))
     if assigned is None:
-        assigned = assign_lists(
-            vectors, centroids, id_col, vec_col, use_arrow=use_arrow
-        )
-    probes = _build_probes(
-        queries, centroids, nprobe, query_id_col, vec_col, use_arrow
-    )
+        assigned = assign_lists(vectors, centroids, id_col, vec_col)
+    probes = _build_probes(queries, centroids, nprobe, query_id_col, vec_col)
     return _rank_candidates(probes, assigned, k)
 
 
@@ -1001,13 +967,12 @@ def _build_probes(
     nprobe: int,
     query_id_col: str,
     vec_col: str,
-    use_arrow: bool | None,
 ) -> DataFrame:
     """Probe fan-out, literal or broadcast form by the same size rule
     as ``assign_lists`` — the query side is |Q|-bounded in rows, but
     its centroid LITERAL is nlist x dim either way, so large nlist
     needs the broadcast path here too."""
-    if _use_arrow(centroids, use_arrow):
+    if _use_arrow(centroids):
         return _arrow_probe_frame(
             queries, _unit_matrix(centroids), nprobe, query_id_col, vec_col
         )
@@ -1439,7 +1404,6 @@ def write_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     coarse_groups: int | None = None,
-    use_arrow: bool | None = None,
     files_per_list: int | None = 1,
 ) -> None:
     """Persist the ``assign_lists`` index PARTITIONED BY cid — the
@@ -1459,9 +1423,7 @@ def write_ivf_index(
     serving can never silently probe a foreign cid space (r16 advice
     #1)."""
     spark = vectors.sparkSession
-    assigned = assign_lists(
-        vectors, centroids, id_col, vec_col, coarse_groups, use_arrow
-    )
+    assigned = assign_lists(vectors, centroids, id_col, vec_col, coarse_groups)
     # full-corpus write: explicit nlist-wide fan-out (the operator
     # sized nlist to the corpus; AQE cannot SPLIT a narrow shuffle)
     keys = (
@@ -1479,7 +1441,6 @@ def append_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     coarse_groups: int | None = None,
-    use_arrow: bool | None = None,
     files_per_list: int | None = 1,
 ) -> None:
     """Append NEW vectors to an existing persisted index — the 100 TB
@@ -1513,9 +1474,7 @@ def append_ivf_index(
             "an index built by write_ivf_index (appending with foreign "
             "centroids would corrupt the cid space)"
         )
-    assigned = assign_lists(
-        vectors, cents, id_col, vec_col, coarse_groups, use_arrow
-    )
+    assigned = assign_lists(vectors, cents, id_col, vec_col, coarse_groups)
     _bounded_by_list(assigned, files_per_list).write.mode(
         "append"
     ).partitionBy("cid").parquet(path)
@@ -1567,7 +1526,6 @@ def _ingest_apply(
     id_col: str,
     vec_col: str,
     coarse_groups: int | None,
-    use_arrow: bool | None,
     files_per_list: int | None = 1,
 ) -> bool:
     """One micro-batch of ``append_ivf_index_stream`` (module-level so
@@ -1610,8 +1568,7 @@ def _ingest_apply(
             if batch_id <= seen.get("last_batch", -1):
                 return False  # replay of an already-applied batch
         append_ivf_index(
-            batch_df, path, id_col, vec_col, coarse_groups, use_arrow,
-            files_per_list,
+            batch_df, path, id_col, vec_col, coarse_groups, files_per_list,
         )
         _write_ingest_progress(
             spark, path,
@@ -1631,7 +1588,6 @@ def append_ivf_index_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     coarse_groups: int | None = None,
-    use_arrow: bool | None = None,
     available_now: bool = True,
     files_per_list: int | None = 1,
 ):
@@ -1720,7 +1676,7 @@ def append_ivf_index_stream(
             )
         _ingest_apply(
             batch_df, batch_id, path, lineage, qid_memo["qid"],
-            id_col, vec_col, coarse_groups, use_arrow, files_per_list,
+            id_col, vec_col, coarse_groups, files_per_list,
         )
 
     writer = (
@@ -2004,7 +1960,6 @@ def rebuild_ivf_index(
     dest: str,
     nlist: int | None = None,
     coarse_groups: int | None = None,
-    use_arrow: bool | None = None,
 ) -> dict:
     """THE drift fix, as one call: re-train centroids on the grown
     corpus (read back from the index itself — at scale the index IS
@@ -2064,7 +2019,7 @@ def rebuild_ivf_index(
     write_ivf_index(
         corpus, cents, dest,
         id_col="nn_id", vec_col="nv",
-        coarse_groups=coarse_groups, use_arrow=use_arrow,
+        coarse_groups=coarse_groups,
     )
     _write_json_sidecar(
         spark, dest, _REBUILD_SIDECAR,
@@ -2279,7 +2234,6 @@ def ivf_topk_pruned(
     nprobe: int = 4,
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
-    use_arrow: bool | None = None,
     max_query_rows: int = 100_000,
 ) -> DataFrame:
     """IVF serving over a persisted cid-partitioned index (built by
@@ -2402,9 +2356,9 @@ def ivf_topk_pruned(
             )
         qv_by_id[r["query_id"]] = r["qv"]
     q_local = spark.createDataFrame(q_rows, q.schema)
-    pairs = _build_probes(
-        q_local, centroids, nprobe, "query_id", "qv", use_arrow
-    ).select("query_id", "cid")
+    pairs = _build_probes(q_local, centroids, nprobe, "query_id", "qv").select(
+        "query_id", "cid"
+    )
     pair_rows = pairs.collect()
     cids = sorted({r["cid"] for r in pair_rows})
     # probe rows rebuilt driver-side from the SAME collected pairs the

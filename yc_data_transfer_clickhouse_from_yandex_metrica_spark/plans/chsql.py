@@ -60,24 +60,28 @@ vocabulary):
   replaces the plain column with its element; LEFT fills the CH
   element-type default ('' / 0) and needs known array columns
   (all-empty rows keep one defaults row in the multi form).
-- ``sumMap(k, v)`` / ``minMap`` / ``maxMap`` (r12): compiled onto the
-  structural plan of operators/maps.agg_map when each call is a whole
-  ALIASED top-level SELECT item -- output STRUCT(keys, values),
-  sorted keys, element-wise aggregated values; other aggregates in
-  the same statement ride a residual GROUP BY joined null-safely on
-  the group keys.  Any other placement keeps the pointer refusal.
-- ``topK(N)(x)`` / ``topKWeighted(N)(x, w)`` (r12): same
-  statement-level compiler -- EXACT top-N by (frequency DESC, value
-  ASC), a deterministic strengthening of CH's approximate sketch
-  (documented deviation); NULLs skipped, all-NULL groups keep [].
-  The global (no GROUP BY) spelling compiles to ORDER BY + LIMIT
-  (TakeOrdered), never a single-partition window.
-- ``quantileExactWeighted(p)(x, w)`` / ``quantilesExactWeighted``
-  (r12): same statement-level compiler; the text twin of
-  operators/stats.quantile_exact_weighted ('low' variant) over the
-  COMPRESSED (group, distinct value, weight) distribution.
-  All-invalid groups survive with a NULL quantile (the engine's
+- structural aggregates (r12 on): ``sumMap(k, v)`` / ``minMap`` /
+  ``maxMap``, ``topK(N)(x)`` / ``topKWeighted(N)(x, w)``,
+  ``quantileExactWeighted(p)(x, w)`` / ``quantilesExactWeighted``,
+  ``entropy``, ``windowFunnel``, ``sequenceMatch`` / ``sequenceCount``,
+  ``intervalLengthSum``, ``maxIntersections`` and ``histogram`` compile
+  when each call is a whole ALIASED top-level SELECT item.  One table,
+  ``_STRUCT_AGGS``, keyed by the CH name, holds each family's parameter
+  spelling, refusals, chain builder and output column; the chains are
+  text twins of ``operators/`` formulations (the sumMap chain is
+  operators/maps.agg_map's plan: STRUCT(keys, values) output, sorted
+  keys, element-wise aggregated values).  Other aggregates in the same
+  statement ride a residual GROUP BY joined null-safely on the group
+  keys.  Any other placement keeps the pointer refusal.  Documented
+  deviations: topK is EXACT top-N by (frequency DESC, value ASC), a
+  deterministic strengthening of CH's approximate sketch (NULLs
+  skipped, all-NULL groups keep []), and its global (no GROUP BY)
+  spelling compiles to ORDER BY + LIMIT (TakeOrdered), never a
+  single-partition window; quantileExactWeighted is the 'low' variant
+  over the COMPRESSED (group, distinct value, weight) distribution,
+  and all-invalid groups survive with a NULL quantile (the engine's
   NULL-over-NaN rule).
+  Adding a family: see ``_rewrite_summap``.
 - ``PREWHERE`` (CH's scan-stage filter hint) merged into WHERE --
   Catalyst pushes filters to the scan on its own, so the hint costs
   nothing and the semantics (one more conjunct) are identical.
@@ -257,7 +261,7 @@ import datetime
 import re
 from dataclasses import dataclass
 from fractions import Fraction
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2274,7 +2278,7 @@ _STRUCTURAL_OPS = {
     "maxMap": "operators/maps.agg_map(how='max'), or place maxMap(k, v)"
     " as a whole aliased top-level SELECT item",
     # windowFunnel DOES compile as a whole aliased top-level SELECT
-    # item (_rewrite_summap kind "wf"); this refusal is any other
+    # item (its _STRUCT_AGGS entry); this refusal is any other
     # placement
     "windowFunnel": "operators/funnel.window_funnel, or place "
     "windowFunnel(W)(ts, cond1, ...) as a whole aliased top-level "
@@ -2308,7 +2312,7 @@ _STRUCTURAL_OPS = {
     "maxIntersections(start, end) as a whole aliased top-level SELECT "
     "item",
     # entropy DOES compile as a whole aliased top-level SELECT item
-    # (_rewrite_summap kind "ent"); this refusal is any other placement
+    # (its _STRUCT_AGGS entry); this refusal is any other placement
     "entropy": "operators/stats.entropy, or place entropy(x) as a "
     "whole aliased top-level SELECT item",
 }
@@ -3848,22 +3852,6 @@ def _rewrite_array_join(sql: str, defaults: dict[str, str]) -> str:
         )
 
 
-_MAP_AGG_RE = re.compile(r"\b(sumMap|minMap|maxMap)\s*\(")
-_MAP_AGG_HOW = {"sumMap": "sum", "minMap": "min", "maxMap": "max"}
-_TOPK_RE = re.compile(r"(topKWeighted|topK)\s*\(")
-_QEW_RE = re.compile(r"(quantilesExactWeighted|quantileExactWeighted)\s*\(")
-_ENTROPY_RE = re.compile(r"(entropy)\s*\(")
-_WF_RE = re.compile(r"(windowFunnel)\s*\(")
-_SEQ_RE = re.compile(r"(sequenceMatch|sequenceCount)\s*\(")
-_SPAN_RE = re.compile(r"(intervalLengthSum|maxIntersections)\s*\(")
-_HIST_RE = re.compile(r"(histogram)\s*\(")
-# every aggregate the statement-level structural compiler may claim
-_STRUCT_AGG_GATE = re.compile(
-    r"\b(sumMap|minMap|maxMap|topKWeighted|topK|"
-    r"quantilesExactWeighted|quantileExactWeighted|entropy|"
-    r"windowFunnel|sequenceMatch|sequenceCount|"
-    r"intervalLengthSum|maxIntersections|histogram)\s*\("
-)
 # output-name shapes an ORDER BY/unaliased item may take: a (possibly
 # qualified) identifier or an integer position
 _PLAIN_OUT_RE = re.compile(r"(`[^`]+`|\w+)(\s*\.\s*(`[^`]+`|\w+))*")
@@ -3905,6 +3893,33 @@ def _flat_strs(x) -> list[str]:
     return []
 
 
+class _ChainScan(NamedTuple):
+    """The group-key prologue every structural chain starts from (all
+    but ``sql`` are empty without a GROUP BY)."""
+
+    sql: str  # SELECT <key> AS __smg<i>, ..., <cols> FROM ... [WHERE ...]
+    lead: str  # "__smg0, __smg1, "
+    part: str  # "PARTITION BY __smg0, __smg1 "
+    group: str  # " GROUP BY __smg0, __smg1"
+
+
+def _chain_scan(
+    gk: list[str], cols: str, from_txt: str, where_txt: str | None,
+) -> _ChainScan:
+    """Project the group keys as ``__smg<i>`` ahead of the chain's own
+    ``cols`` over the statement's FROM/WHERE (or the shared base)."""
+    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
+    sql = f"SELECT {gk_sel}{cols} {from_txt}" + (
+        f" {where_txt}" if where_txt else ""
+    )
+    if not gk:
+        return _ChainScan(sql, "", "", "")
+    names = ", ".join(f"__smg{i}" for i in range(len(gk)))
+    return _ChainScan(
+        sql, f"{names}, ", f"PARTITION BY {names} ", f" GROUP BY {names}"
+    )
+
+
 def _summap_chain(
     how: str, karg: str, varg: str, gk: list[str], from_txt: str,
     where_txt: str | None,
@@ -3918,13 +3933,10 @@ def _summap_chain(
     filler row).  The keys/values arrays are projected to attributes
     BEFORE the Generate so posexplode never wraps a higher-order
     expression (the measured ~20x interpreted-eval trap, PLANS.md)."""
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    lead = f"{gk_names}, " if gk else ""
-    a = (
-        f"SELECT {gk_sel}({karg}) AS __smka, ({varg}) AS __smva "
-        f"{from_txt}" + (f" {where_txt}" if where_txt else "")
+    g = _chain_scan(
+        gk, f"({karg}) AS __smka, ({varg}) AS __smva", from_txt, where_txt
     )
+    a, lead = g.sql, g.lead
     guard = (
         "assert_true((CASE WHEN __smka IS NULL THEN 0 ELSE size(__smka) END)"
         " = (CASE WHEN __smva IS NULL THEN 0 ELSE size(__smva) END), "
@@ -3943,7 +3955,7 @@ def _summap_chain(
     return (
         f"SELECT {lead}sort_array(collect_list(CASE WHEN NOT __smf THEN "
         f"named_struct('k', __smk, 'v', __smvv) END)) AS __smkv "
-        f"FROM ({c})" + (f" GROUP BY {gk_names}" if gk else "")
+        f"FROM ({c}){g.group}"
     )
 
 
@@ -3967,15 +3979,10 @@ def _topk_chain(
     stream, partitioned by group; the global (no GROUP BY) spelling
     avoids the single-partition window entirely via ORDER BY + LIMIT
     (TakeOrdered)."""
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    lead = f"{gk_names}, " if gk else ""
     wsel = f", ({warg}) AS __tkw" if warg else ""
     agg = "sum(__tkw)" if warg else "count(1)"
-    a = (
-        f"SELECT {gk_sel}({xarg}) AS __tkx{wsel} {from_txt}"
-        + (f" {where_txt}" if where_txt else "")
-    )
+    g = _chain_scan(gk, f"({xarg}) AS __tkx{wsel}", from_txt, where_txt)
+    a, lead = g.sql, g.lead
     pack = (
         "transform(sort_array(collect_list(CASE WHEN NOT __tkf THEN "
         "named_struct('c', -__tkc, 'x', __tkx) END)), __s -> __s.x) "
@@ -3999,16 +4006,16 @@ def _topk_chain(
     )
     c = (
         f"SELECT {lead}__tkx, __tkf, __tkc, row_number() OVER "
-        f"(PARTITION BY {gk_names} ORDER BY __tkf ASC, __tkc DESC, "
+        f"({g.part}ORDER BY __tkf ASC, __tkc DESC, "
         f"__tkx ASC) AS __tkr FROM ({b})"
     )
     c2 = f"SELECT * FROM ({c}) WHERE __tkr <= {n} OR __tkf"
-    return f"SELECT {lead}{pack} FROM ({c2}) GROUP BY {gk_names}"
+    return f"SELECT {lead}{pack} FROM ({c2}){g.group}"
 
 
 def _qew_chain(
-    ps: list[float], xarg: str, warg: str, gk: list[str], from_txt: str,
-    where_txt: str | None, scalar: bool,
+    ps: list[float], xarg: str, warg: str, scalar: bool, gk: list[str],
+    from_txt: str, where_txt: str | None,
 ) -> str:
     """``quantileExactWeighted(p)(x, w)`` / ``quantilesExactWeighted``
     chain: the text twin of operators/stats.quantile_exact_weighted
@@ -4023,15 +4030,11 @@ def _qew_chain(
     to a (NULL, weight 0) filler distribution row so all-invalid
     groups survive with a NULL quantile (the engine's NULL-over-NaN
     convention, as avgWeighted)."""
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    lead = f"{gk_names}, " if gk else ""
-    part = f"PARTITION BY {gk_names} " if gk else ""
-    a = (
-        f"SELECT {gk_sel}({xarg}) AS __qv0, "
-        f"CAST(({warg}) AS BIGINT) AS __qw0 {from_txt}"
-        + (f" {where_txt}" if where_txt else "")
+    g = _chain_scan(
+        gk, f"({xarg}) AS __qv0, CAST(({warg}) AS BIGINT) AS __qw0",
+        from_txt, where_txt,
     )
+    a, lead, part = g.sql, g.lead, g.part
     b = (
         f"SELECT {lead}__qvm AS __qv, sum(__qwm) AS __qw FROM ("
         f"SELECT {lead}CASE WHEN __qv0 IS NOT NULL AND __qw0 > 0 "
@@ -4056,10 +4059,7 @@ def _qew_chain(
             f"THEN __qv END)"
         )
     out = picks[0] if scalar else "array(" + ", ".join(picks) + ")"
-    return (
-        f"SELECT {lead}{out} AS __qq FROM ({c})"
-        + (f" GROUP BY {gk_names}" if gk else "")
-    )
+    return f"SELECT {lead}{out} AS __qq FROM ({c}){g.group}"
 
 
 def _entropy_chain(
@@ -4077,28 +4077,20 @@ def _entropy_chain(
     identically.  NULL is kept as a category, as the operator's
     groupBy does -- a documented strengthening of CH's Nullable
     aggregate skip."""
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    lead = f"{gk_names}, " if gk else ""
-    part = f"PARTITION BY {gk_names}" if gk else ""
-    a = (
-        f"SELECT {gk_sel}({xarg}) AS __ex {from_txt}"
-        + (f" {where_txt}" if where_txt else "")
-    )
+    g = _chain_scan(gk, f"({xarg}) AS __ex", from_txt, where_txt)
+    a, lead = g.sql, g.lead
     b = f"SELECT {lead}__ex, count(1) AS __ec FROM ({a}) GROUP BY {lead}__ex"
     c = (
-        f"SELECT {lead}CAST(__ec AS DOUBLE) / sum(__ec) OVER ({part}) "
+        f"SELECT {lead}CAST(__ec AS DOUBLE) / sum(__ec) OVER "
+        f"({g.part.rstrip()}) "
         f"AS __ep FROM ({b})"
     )
-    return (
-        f"SELECT {lead}(-sum(__ep * log2(__ep))) AS __he FROM ({c})"
-        + (f" GROUP BY {gk_names}" if gk else "")
-    )
+    return f"SELECT {lead}(-sum(__ep * log2(__ep))) AS __he FROM ({c}){g.group}"
 
 
 def _window_funnel_chain(
-    win_s: int, ts: str, conds: list[str], gk: list[str], from_txt: str,
-    where_txt: str | None,
+    win_s: int, ts: str, conds: list[str], mode: str | None, gk: list[str],
+    from_txt: str, where_txt: str | None,
 ) -> str:
     """``windowFunnel(W)(ts, c1..ck)`` chain: the text twin of
     ``operators/funnel.window_funnel``'s default mode (oracle-proven
@@ -4115,18 +4107,19 @@ def _window_funnel_chain(
     default equal-timestamp chaining depends on CH block order and is
     not reproduced.  The global (no GROUP BY) spelling is a
     single-partition window -- CH's global windowFunnel is likewise
-    one group; use a GROUP BY key at scale."""
+    one group; use a GROUP BY key at scale.  ``mode='strict_order'``
+    continues the same scan in _window_funnel_strict_chain."""
     k = len(conds)
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    part = f"PARTITION BY {gk_names} " if gk else ""
     csel = ", ".join(
         f"CAST(({c}) AS BOOLEAN) AS __c{i}" for i, c in enumerate(conds, 1)
     )
-    cur = (
-        f"SELECT {gk_sel}unix_micros(CAST(({ts}) AS TIMESTAMP)) AS __u, "
-        f"{csel} {from_txt}" + (f" {where_txt}" if where_txt else "")
+    g = _chain_scan(
+        gk, f"unix_micros(CAST(({ts}) AS TIMESTAMP)) AS __u, {csel}",
+        from_txt, where_txt,
     )
+    if mode == "strict_order":
+        return _window_funnel_strict_chain(win_s, k, g)
+    cur, part = g.sql, g.part
     wspec = (
         f"OVER ({part}ORDER BY __u RANGE BETWEEN 1 FOLLOWING "
         f"AND UNBOUNDED FOLLOWING)"
@@ -4146,15 +4139,12 @@ def _window_funnel_chain(
     )
     depth = f"CASE WHEN __c1 THEN 1{terms} ELSE 0 END"
     return (
-        f"SELECT {gk_names + ', ' if gk else ''}CAST(max({depth}) AS INT) "
-        f"AS __wfd FROM ({cur})" + (f" GROUP BY {gk_names}" if gk else "")
+        f"SELECT {g.lead}CAST(max({depth}) AS INT) AS __wfd "
+        f"FROM ({cur}){g.group}"
     )
 
 
-def _window_funnel_strict_chain(
-    win_s: int, ts: str, conds: list[str], gk: list[str], from_txt: str,
-    where_txt: str | None,
-) -> str:
+def _window_funnel_strict_chain(win_s: int, k: int, g: _ChainScan) -> str:
     """``windowFunnel(W, 'strict_order')(ts, c1..ck)`` chain: the text
     twin of ``operators/funnel._strict_order_funnel`` (property-tested
     vs the pure-python reference; driver entry ``funnel_strict``) --
@@ -4168,19 +4158,9 @@ def _window_funnel_strict_chain(
     k+3 projection layers; no per-user arrays.  Tie rule (the
     operator's, deterministic where CH depends on block order):
     events sharing one timestamp form one instant and any matching
-    event advances the chain."""
-    k = len(conds)
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    part = f"PARTITION BY {gk_names} " if gk else ""
-    order = f"OVER ({part}ORDER BY __u"
-    csel = ", ".join(
-        f"CAST(({c}) AS BOOLEAN) AS __c{i}" for i, c in enumerate(conds, 1)
-    )
-    cur = (
-        f"SELECT {gk_sel}unix_micros(CAST(({ts}) AS TIMESTAMP)) AS __u, "
-        f"{csel} {from_txt}" + (f" {where_txt}" if where_txt else "")
-    )
+    event advances the chain.  ``g`` is _window_funnel_chain's scan
+    of (__u, __c1..__ck)."""
+    cur, order = g.sql, f"OVER ({g.part}ORDER BY __u"
     flags = ", ".join(
         f"max(CASE WHEN __c{s} THEN 1 END) {order} RANGE BETWEEN "
         f"CURRENT ROW AND CURRENT ROW) = 1 AS __f{s}"
@@ -4208,8 +4188,8 @@ def _window_funnel_strict_chain(
     )
     depth = f"CASE WHEN __f1 THEN least(__d1, __iw + 1) ELSE 0 END"
     return (
-        f"SELECT {gk_names + ', ' if gk else ''}CAST(max({depth}) AS INT) "
-        f"AS __wfd FROM ({cur})" + (f" GROUP BY {gk_names}" if gk else "")
+        f"SELECT {g.lead}CAST(max({depth}) AS INT) AS __wfd "
+        f"FROM ({cur}){g.group}"
     )
 
 
@@ -4274,17 +4254,15 @@ def _seq_match_chain(
     constraint); a group matches iff any row completes the full
     chain.  k layers, ONE hash(group) exchange, no per-user arrays."""
     k = len(refs)
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    part = f"PARTITION BY {gk_names} " if gk else ""
     csel = ", ".join(
         f"CAST(({conds[r - 1]}) AS BOOLEAN) AS __c{s}"
         for s, r in enumerate(refs, 1)
     )
-    cur = (
-        f"SELECT {gk_sel}unix_micros(CAST(({ts}) AS TIMESTAMP)) AS __u, "
-        f"{csel} {from_txt}" + (f" {where_txt}" if where_txt else "")
+    g = _chain_scan(
+        gk, f"unix_micros(CAST(({ts}) AS TIMESTAMP)) AS __u, {csel}",
+        from_txt, where_txt,
     )
+    cur, part = g.sql, g.part
     cur = (
         f"SELECT *, CASE WHEN __c{k} THEN __u END AS __e{k} FROM ({cur})"
     )
@@ -4301,17 +4279,17 @@ def _seq_match_chain(
             f"END AS __e{s} FROM ({cur})"
         )
     return (
-        f"SELECT {gk_names + ', ' if gk else ''}CAST(max(CASE WHEN "
+        f"SELECT {g.lead}CAST(max(CASE WHEN "
         f"__e1 IS NOT NULL THEN 1 ELSE 0 END) AS INT) AS __sqm "
-        f"FROM ({cur})" + (f" GROUP BY {gk_names}" if gk else "")
+        f"FROM ({cur}){g.group}"
     )
 
 
 def _seq_count_chain(
-    first: str, second: str, ts: str, gk: list[str], from_txt: str,
-    where_txt: str | None,
+    refs: list[int], _gaps: list[int | None], ts: str, conds: list[str],
+    gk: list[str], from_txt: str, where_txt: str | None,
 ) -> str:
-    """``sequenceCount('(?1).*(?2)')(ts, c1, c2)`` chain: the text
+    """``sequenceCount('(?i).*(?j)')(ts, c1, ...)`` chain: the text
     twin of ``operators/funnel.sequence_count_pairs`` (oracle-proven
     via ``sequence_count``) -- greedy non-overlapping first->second
     counting collapsed to run-length algebra: label rows 1/2 (second
@@ -4320,16 +4298,15 @@ def _seq_count_chain(
     floor(len/2).  One hash(group) exchange.  Ties at one timestamp
     break arbitrarily, exactly the CH block-order latitude the
     operator documents (pass tiebreak_col there for determinism)."""
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    lead = f"{gk_names}, " if gk else ""
-    part = f"PARTITION BY {gk_names} " if gk else ""
-    a = (
-        f"SELECT {gk_sel}unix_micros(CAST(({ts}) AS TIMESTAMP)) AS __u, "
-        f"CASE WHEN ({first}) THEN 1 WHEN ({second}) AND NOT "
-        f"({first}) THEN 2 END AS __lab {from_txt}"
-        + (f" {where_txt}" if where_txt else "")
+    first, second = conds[refs[0] - 1], conds[refs[1] - 1]
+    g = _chain_scan(
+        gk,
+        f"unix_micros(CAST(({ts}) AS TIMESTAMP)) AS __u, CASE WHEN "
+        f"({first}) THEN 1 WHEN ({second}) AND NOT ({first}) THEN 2 END "
+        "AS __lab",
+        from_txt, where_txt,
     )
+    a, lead, part = g.sql, g.lead, g.part
     b = (
         f"SELECT {lead}__u, __lab, last(__lab, true) OVER ({part}"
         f"ORDER BY __u ROWS BETWEEN UNBOUNDED PRECEDING AND 1 "
@@ -4343,8 +4320,7 @@ def _seq_count_chain(
     d = (
         f"SELECT {lead}sum(__keep) AS __m, "
         f"min_by(CASE WHEN __keep = 1 THEN __lab END, "
-        f"CASE WHEN __keep = 1 THEN __u END) AS __lab0 FROM ({c})"
-        + (f" GROUP BY {gk_names}" if gk else "")
+        f"CASE WHEN __keep = 1 THEN __u END) AS __lab0 FROM ({c}){g.group}"
     )
     return (
         f"SELECT {lead}CAST(floor((__m - (CASE WHEN __lab0 = 2 THEN 1 "
@@ -4367,14 +4343,8 @@ def _ils_chain(
     ``toUnixTimestamp`` (the CH idiom) or use the operator's exact
     integer-microsecond path; raw timestamp arithmetic is refused by
     Spark's analyzer, never silently approximated."""
-    gk_sel = "".join(f"{x} AS __smg{i}, " for i, x in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    lead = f"{gk_names}, " if gk else ""
-    part = f"PARTITION BY {gk_names} " if gk else ""
-    a = (
-        f"SELECT {gk_sel}({s}) AS __s, ({e}) AS __e {from_txt}"
-        + (f" {where_txt}" if where_txt else "")
-    )
+    g = _chain_scan(gk, f"({s}) AS __s, ({e}) AS __e", from_txt, where_txt)
+    a, lead, part = g.sql, g.lead, g.part
     b = (
         f"SELECT {lead}__s, __e, max(__e) OVER ({part}ORDER BY __s, __e "
         f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS __pe "
@@ -4384,10 +4354,7 @@ def _ils_chain(
         f"SELECT {lead}greatest(__e - greatest(__s, coalesce(__pe, __s)), "
         f"0) AS __cv FROM ({b})"
     )
-    return (
-        f"SELECT {lead}sum(__cv) AS __ils FROM ({c})"
-        + (f" GROUP BY {gk_names}" if gk else "")
-    )
+    return f"SELECT {lead}sum(__cv) AS __ils FROM ({c}){g.group}"
 
 
 def _mxi_chain(
@@ -4403,14 +4370,8 @@ def _mxi_chain(
     replaces the operator's two-scan union; one hash(group) exchange.
     Type-agnostic: ordering + integer deltas only, so timestamps work
     directly."""
-    gk_sel = "".join(f"{x} AS __smg{i}, " for i, x in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    lead = f"{gk_names}, " if gk else ""
-    part = f"PARTITION BY {gk_names} " if gk else ""
-    a = (
-        f"SELECT {gk_sel}({s}) AS __s, ({e}) AS __e {from_txt}"
-        + (f" {where_txt}" if where_txt else "")
-    )
+    g = _chain_scan(gk, f"({s}) AS __s, ({e}) AS __e", from_txt, where_txt)
+    a, lead, part = g.sql, g.lead, g.part
     ev = (
         f"SELECT {lead}__mx.p AS __pt, __mx.d AS __d FROM ({a}) "
         f"LATERAL VIEW explode(array(named_struct('p', __s, 'd', 1), "
@@ -4421,10 +4382,7 @@ def _mxi_chain(
         f"BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __open "
         f"FROM ({ev})"
     )
-    return (
-        f"SELECT {lead}CAST(max(__open) AS BIGINT) AS __mxi FROM ({w})"
-        + (f" GROUP BY {gk_names}" if gk else "")
-    )
+    return f"SELECT {lead}CAST(max(__open) AS BIGINT) AS __mxi FROM ({w}){g.group}"
 
 
 def _hist_chain(
@@ -4443,13 +4401,8 @@ def _hist_chain(
     bin.  Two pruned scans + one hash aggregate + the per-group pack;
     groups whose values are all NULL drop, as the operator's
     pre-group filter does."""
-    gk_sel = "".join(f"{e} AS __smg{i}, " for i, e in enumerate(gk))
-    gk_names = ", ".join(f"__smg{i}" for i in range(len(gk)))
-    lead = f"{gk_names}, " if gk else ""
-    a = (
-        f"SELECT {gk_sel}CAST(({x}) AS DOUBLE) AS __v {from_txt}"
-        + (f" {where_txt}" if where_txt else "")
-    )
+    g = _chain_scan(gk, f"CAST(({x}) AS DOUBLE) AS __v", from_txt, where_txt)
+    a, lead = g.sql, g.lead
     src = (
         f"SELECT * FROM ({a}) CROSS JOIN (SELECT min(__v) AS __hlo, "
         f"max(__v) AS __hhi FROM ({a})) __hb"
@@ -4476,10 +4429,234 @@ def _hist_chain(
         "named_struct('lower', __hs.lower, 'upper', __hs.upper, "
         "'height', __hs.height)) AS __hg"
     )
-    return (
-        f"SELECT {lead}{pack} FROM ({counts})"
-        + (f" GROUP BY {gk_names}" if gk else "")
-    )
+    return f"SELECT {lead}{pack} FROM ({counts}){g.group}"
+
+
+def _int_param(text: str) -> int | None:
+    """A literal non-negative integer parameter, or None."""
+    m = re.fullmatch(r"\s*(\d+)\s*", text)
+    return int(m.group(1)) if m else None
+
+
+# Payload builders, one per family: (name, parameter text or None,
+# arguments) -> the chain's leading arguments, raising the family's
+# refusals.  Arguments arrive stripped, so an empty one is falsy.
+
+
+def _map_payload(name: str, _params: None, args: list[str]) -> tuple:
+    if len(args) != 2 or not all(args):
+        raise ValueError(
+            f"chsql: {name} takes (keys_array, values_array) -- the "
+            "single-tuple CH form is not mapped"
+        )
+    return name.removesuffix("Map"), args[0], args[1]
+
+
+def _topk_payload(name: str, params: str, args: list[str]) -> tuple:
+    n = _int_param(params)
+    if not n:
+        raise ValueError(
+            f"chsql: {name} needs a literal positive integer parameter, "
+            f"got {params!r}"
+        )
+    want = 2 if name == "topKWeighted" else 1
+    if len(args) != want or not all(args):
+        raise ValueError(
+            f"chsql: {name} takes exactly {want} argument(s) after the "
+            "parameter list"
+        )
+    return n, args[0], args[1] if want == 2 else None
+
+
+def _qew_payload(name: str, params: str, args: list[str]) -> tuple:
+    try:
+        ps = [float(p) for p in _split_top(params)]
+    except ValueError:
+        ps = []
+    if not ps or not all(0.0 <= p <= 1.0 for p in ps):
+        raise ValueError(
+            f"chsql: {name} needs literal quantile level(s) in [0, 1], "
+            f"got {params!r}"
+        )
+    scalar = name == "quantileExactWeighted"
+    if scalar and len(ps) != 1:
+        raise ValueError(
+            "chsql: quantileExactWeighted takes ONE level; use "
+            "quantilesExactWeighted for a list"
+        )
+    if len(args) != 2 or not all(args):
+        raise ValueError(
+            f"chsql: {name} takes (value, weight) after the level list"
+        )
+    return ps, args[0], args[1], scalar
+
+
+def _entropy_payload(_name: str, _params: None, args: list[str]) -> tuple:
+    if len(args) != 1 or not args[0]:
+        raise ValueError(
+            "chsql: entropy takes exactly one argument (the value whose "
+            "distribution is measured)"
+        )
+    return (args[0],)
+
+
+def _funnel_payload(_name: str, params: str, args: list[str]) -> tuple:
+    ps = _split_top(params)
+    win_s = _int_param(ps[0])
+    if win_s is None:
+        raise ValueError(
+            "chsql: windowFunnel needs a literal window length in "
+            f"seconds, got {params!r}"
+        )
+    mode = None
+    if len(ps) > 1:
+        mode = ps[1].strip("'")
+        if mode not in ("strict_increase", "strict_order"):
+            raise ValueError(
+                f"chsql: windowFunnel mode {mode!r} has no SQL compile "
+                "(the default compile IS strict_increase binding; "
+                "'strict_order' compiles the instant-collapse chain) -- "
+                "operators/funnel.window_funnel for anything else"
+            )
+    if len(args) < 2 or not all(args):
+        raise ValueError(
+            "chsql: windowFunnel takes (timestamp, cond1, ...) -- at "
+            "least one condition"
+        )
+    if len(args) - 1 > 12:
+        raise ValueError(
+            "chsql: windowFunnel SQL compile caps at 12 steps (k(k-1)/2 "
+            "window layers); use operators/funnel.window_funnel directly"
+        )
+    return win_s, args[0], args[1:], mode
+
+
+def _sequence_payload(name: str, params: str, args: list[str]) -> tuple:
+    ps = _split_top(params)
+    pm = re.fullmatch(r"'([^']*)'", ps[0])
+    if len(ps) != 1 or not pm:
+        raise ValueError(
+            f"chsql: {name} needs ONE literal pattern string parameter, "
+            f"got {params!r}"
+        )
+    if len(args) < 2 or not all(args):
+        raise ValueError(
+            f"chsql: {name} takes (timestamp, cond1, ...) after the "
+            "pattern -- at least one condition"
+        )
+    refs, gaps = _seq_pattern_parse(pm.group(1), len(args) - 1, name)
+    if len(refs) > 32:
+        raise ValueError(
+            f"chsql: {name} pattern exceeds the CH cap of 32 steps"
+        )
+    if name == "sequenceCount" and (len(refs) != 2 or gaps != [None]):
+        raise ValueError(
+            "chsql: sequenceCount compiles the '(?i).*(?j)' pair form "
+            "only; use operators/funnel.sequence_count_pairs (longer "
+            "patterns have no run-length collapse)"
+        )
+    return refs, gaps, args[0], args[1:]
+
+
+def _span_payload(name: str, _params: None, args: list[str]) -> tuple:
+    if len(args) != 2 or not all(args):
+        raise ValueError(f"chsql: {name} takes exactly (start, end)")
+    return args[0], args[1]
+
+
+def _histogram_payload(_name: str, params: str, args: list[str]) -> tuple:
+    nbins = _int_param(params)
+    if not nbins:
+        raise ValueError(
+            "chsql: histogram needs a literal positive bin count, got "
+            f"{params!r}"
+        )
+    if len(args) != 1 or not args[0]:
+        raise ValueError(
+            "chsql: histogram takes exactly one value argument after the "
+            "bin count"
+        )
+    return nbins, args[0]
+
+
+class _StructAgg(NamedTuple):
+    """One family of the statement-level structural compiler."""
+
+    parametric: bool  # spelled name(params)(args), not name(args)
+    alias_note: str  # tail of the alias refusal
+    payload: Callable[[str, str | None, list[str]], tuple]
+    chain: Callable[..., str]  # chain(*payload, gk, from_txt, where_txt)
+    out: str  # the output column over frame tag {t}
+
+
+_MAP_AGGS = ("sumMap", "minMap", "maxMap")
+# every aggregate the statement-level structural compiler claims, by
+# CH name (_rewrite_summap docstring: adding a family)
+_STRUCT_AGGS: dict[str, _StructAgg] = {
+    **dict.fromkeys(_MAP_AGGS, _StructAgg(
+        False, " -- the result is a STRUCT(keys, values) column",
+        _map_payload, _summap_chain,
+        "named_struct('keys', transform({t}.__smkv, __sms -> __sms.k), "
+        "'values', transform({t}.__smkv, __sms -> __sms.v))",
+    )),
+    **dict.fromkeys(("topK", "topKWeighted"), _StructAgg(
+        True, " -- the result is an ARRAY column", _topk_payload, _topk_chain,
+        "{t}.__tkarr",
+    )),
+    **dict.fromkeys(
+        ("quantileExactWeighted", "quantilesExactWeighted"),
+        _StructAgg(True, "", _qew_payload, _qew_chain, "{t}.__qq"),
+    ),
+    "entropy": _StructAgg(False, "", _entropy_payload, _entropy_chain, "{t}.__he"),
+    "windowFunnel": _StructAgg(
+        True, "", _funnel_payload, _window_funnel_chain, "{t}.__wfd"
+    ),
+    "sequenceMatch": _StructAgg(
+        True, "", _sequence_payload, _seq_match_chain, "{t}.__sqm"
+    ),
+    "sequenceCount": _StructAgg(
+        True, "", _sequence_payload, _seq_count_chain, "{t}.__sqc"
+    ),
+    "intervalLengthSum": _StructAgg(False, "", _span_payload, _ils_chain, "{t}.__ils"),
+    "maxIntersections": _StructAgg(False, "", _span_payload, _mxi_chain, "{t}.__mxi"),
+    "histogram": _StructAgg(
+        True, " -- the result is an ARRAY of (lower, upper, height) structs",
+        _histogram_payload, _hist_chain, "{t}.__hg",
+    ),
+}
+_STRUCT_AGG_GATE = re.compile(rf"\b({'|'.join(_STRUCT_AGGS)})\s*\(")
+_CALL_HEAD_RE = re.compile(r"([A-Za-z_]\w*)\s*\(")
+
+
+def _struct_item(expr: str, alias: str | None) -> tuple[str, tuple] | None:
+    """``(name, payload)`` when the select item ``expr`` is, as a whole,
+    one call of a _STRUCT_AGGS family; None otherwise (the item then
+    stays an ordinary one).  Refuses a missing alias first, then
+    whatever the family's payload builder refuses."""
+    masked = _mask(expr)
+    m = _CALL_HEAD_RE.match(masked)
+    agg = _STRUCT_AGGS.get(m.group(1)) if m else None
+    if agg is None:
+        return None
+    name, open_ = m.group(1), m.end() - 1
+    close = _match_paren(masked, open_)
+    params = None
+    if agg.parametric:
+        j = close + 1
+        while j < len(expr) and expr[j].isspace():
+            j += 1
+        if j == len(expr) or expr[j] != "(":
+            return None
+        params, open_ = expr[open_ + 1 : close], j
+        close = _match_paren(masked, j)
+    if close != len(expr.rstrip()) - 1:
+        return None
+    if alias is None:
+        raise ValueError(
+            f"chsql: alias the {name}(...){'(...)' if agg.parametric else ''} "
+            f"item (AS name){agg.alias_note}"
+        )
+    return name, agg.payload(name, params, _split_top(expr[open_ + 1 : close]))
 
 
 def _rewrite_summap(
@@ -4487,20 +4664,35 @@ def _rewrite_summap(
     view_cols: dict[str, list[str]] | None = None,
     shared_out: list[tuple[str, str]] | None = None,
 ) -> str:
-    """Compile the CH map-aggregate combinators (``sumMap(keys, vals)``
-    / ``minMap`` / ``maxMap``) when each call is a whole ALIASED item
-    of the top-level SELECT list -- the canonical Metrica shape
-    (``Goals.ID``/``Goals.Revenue`` Nested pairs,
-    /root/reference/ddl/visits.sql).  Output is a
+    """Compile CH's structural aggregates -- the _STRUCT_AGGS families
+    (sumMap/minMap/maxMap, topK/topKWeighted, quantile(s)ExactWeighted,
+    entropy, windowFunnel, sequenceMatch/sequenceCount,
+    intervalLengthSum, maxIntersections, histogram) -- when each call
+    is a whole ALIASED item of the top-level SELECT list.  The
+    canonical Metrica shape is a map aggregate over a Nested pair
+    (``Goals.ID``/``Goals.Revenue``, SURVEY.md 1.2): the output is a
     STRUCT(keys ARRAY, values ARRAY) with the keys sorted ascending
     and values element-wise aggregated -- CH returns the same pair as
     a tuple; field access is ``alias.keys`` / ``alias.values`` here.
 
+    One table drives every family.  _struct_item claims an item (the
+    call is the whole item, the alias is present) and hands the
+    parameter text and arguments to the entry's payload builder, which
+    raises the family's refusals; each claimed item becomes one FRAME,
+    ``entry.chain(*payload, gk, from, where)``, keyed by the GROUP BY
+    expressions as ``__smg<i>``; the final SELECT reads ``entry.out``
+    from that frame.  Adding a family is one _STRUCT_AGGS entry plus its
+    chain, which starts from _chain_scan.  Placements this compiler
+    leaves alone reach the pointer refusals of _rewrite_calls
+    (_STRUCTURAL_OPS) and _rewrite_parametrized, so a new family also
+    names its operator there.
+
     Plan shapes (PLANS.md "sumMap compile"):
 
     - FAST PATH (no HAVING, every other SELECT item is a group key):
-      the map chain IS the statement -- one scan, two hash
-      aggregates, exactly operators/maps.agg_map's plan.
+      the frame chain IS the statement -- for a map aggregate, one
+      scan and two hash aggregates, exactly operators/maps.agg_map's
+      plan.
     - RESIDUAL PATH (other aggregates or HAVING present): the
       non-map items compute in a residual GROUP BY over the same
       FROM/WHERE, then a null-safe equi-join on the group keys merges
@@ -4553,311 +4745,18 @@ def _rewrite_summap(
         return re.sub(rf"^{kw}\s+", "", sql[s:e].strip(), flags=re.I)
 
     # ---- classify select items -------------------------------------
-    # (idx, kind, payload, alias): kind "map" -> (how, keys, vals);
-    # kind "topk" -> (n, value, weight|None)
+    # struct_items: (idx, CH name, payload, alias), one frame each
     struct_items: list[tuple[int, str, tuple, str]] = []
     other: list[tuple[int, str, str | None]] = []
     for idx, (expr, alias) in enumerate(parsed):
-        im = _MAP_AGG_RE.match(_mask(expr))
-        if im:
-            open_idx = expr.index("(", im.end(1))
-            close = _match_paren(_mask(expr), open_idx)
-            if close == len(expr.rstrip()) - 1:
-                if alias is None:
-                    raise ValueError(
-                        f"chsql: alias the {im.group(1)}(...) item "
-                        "(AS name) -- the result is a STRUCT(keys, "
-                        "values) column"
-                    )
-                args = _split_top(expr[open_idx + 1 : close])
-                if len(args) != 2 or not all(a.strip() for a in args):
-                    raise ValueError(
-                        f"chsql: {im.group(1)} takes (keys_array, "
-                        "values_array) -- the single-tuple CH form is "
-                        "not mapped"
-                    )
-                struct_items.append(
-                    (idx, "map", (_MAP_AGG_HOW[im.group(1)], args[0], args[1]), alias)
-                )
-                continue
-        tm = _TOPK_RE.match(_mask(expr))
-        if tm:
-            p_open = expr.index("(", tm.end(1))
-            p_close = _match_paren(_mask(expr), p_open)
-            k = p_close + 1
-            while k < len(expr) and expr[k].isspace():
-                k += 1
-            if k < len(expr) and expr[k] == "(":
-                a_close = _match_paren(_mask(expr), k)
-                if a_close == len(expr.rstrip()) - 1:
-                    name = tm.group(1)
-                    if alias is None:
-                        raise ValueError(
-                            f"chsql: alias the {name}(...)(...) item "
-                            "(AS name) -- the result is an ARRAY column"
-                        )
-                    pm = re.fullmatch(r"\s*(\d+)\s*", expr[p_open + 1 : p_close])
-                    if not pm or int(pm.group(1)) < 1:
-                        raise ValueError(
-                            f"chsql: {name} needs a literal positive "
-                            f"integer parameter, got "
-                            f"{expr[p_open + 1:p_close]!r}"
-                        )
-                    args = _split_top(expr[k + 1 : a_close])
-                    want = 2 if name == "topKWeighted" else 1
-                    if len(args) != want or not all(a.strip() for a in args):
-                        raise ValueError(
-                            f"chsql: {name} takes exactly {want} "
-                            "argument(s) after the parameter list"
-                        )
-                    struct_items.append(
-                        (
-                            idx, "topk",
-                            (
-                                int(pm.group(1)), args[0],
-                                args[1] if want == 2 else None,
-                            ),
-                            alias,
-                        )
-                    )
-                    continue
-        qm = _QEW_RE.match(_mask(expr))
-        if qm:
-            p_open = expr.index("(", qm.end(1))
-            p_close = _match_paren(_mask(expr), p_open)
-            k = p_close + 1
-            while k < len(expr) and expr[k].isspace():
-                k += 1
-            if k < len(expr) and expr[k] == "(":
-                a_close = _match_paren(_mask(expr), k)
-                if a_close == len(expr.rstrip()) - 1:
-                    name = qm.group(1)
-                    if alias is None:
-                        raise ValueError(
-                            f"chsql: alias the {name}(...)(...) item (AS name)"
-                        )
-                    try:
-                        ps = [
-                            float(p) for p in _split_top(expr[p_open + 1 : p_close])
-                        ]
-                    except ValueError:
-                        ps = []
-                    if not ps or not all(0.0 <= p <= 1.0 for p in ps):
-                        raise ValueError(
-                            f"chsql: {name} needs literal quantile "
-                            f"level(s) in [0, 1], got "
-                            f"{expr[p_open + 1:p_close]!r}"
-                        )
-                    scalar = name == "quantileExactWeighted"
-                    if scalar and len(ps) != 1:
-                        raise ValueError(
-                            "chsql: quantileExactWeighted takes ONE "
-                            "level; use quantilesExactWeighted for a "
-                            "list"
-                        )
-                    args = _split_top(expr[k + 1 : a_close])
-                    if len(args) != 2 or not all(a.strip() for a in args):
-                        raise ValueError(
-                            f"chsql: {name} takes (value, weight) "
-                            "after the level list"
-                        )
-                    struct_items.append(
-                        (idx, "qew", (ps, args[0], args[1], scalar), alias)
-                    )
-                    continue
-        wm = _WF_RE.match(_mask(expr))
-        if wm:
-            p_open = expr.index("(", wm.end(1))
-            p_close = _match_paren(_mask(expr), p_open)
-            j = p_close + 1
-            while j < len(expr) and expr[j].isspace():
-                j += 1
-            if j < len(expr) and expr[j] == "(":
-                a_close = _match_paren(_mask(expr), j)
-                if a_close == len(expr.rstrip()) - 1:
-                    if alias is None:
-                        raise ValueError(
-                            "chsql: alias the windowFunnel(...)(...) "
-                            "item (AS name)"
-                        )
-                    params = _split_top(expr[p_open + 1 : p_close])
-                    wp = re.fullmatch(r"\s*(\d+)\s*", params[0] if params else "")
-                    if not wp:
-                        raise ValueError(
-                            "chsql: windowFunnel needs a literal "
-                            "window length in seconds, got "
-                            f"{expr[p_open + 1:p_close]!r}"
-                        )
-                    mode = None
-                    if len(params) > 1:
-                        mode = params[1].strip().strip("'")
-                        if mode not in ("strict_increase", "strict_order"):
-                            raise ValueError(
-                                f"chsql: windowFunnel mode {mode!r} "
-                                "has no SQL compile (the default "
-                                "compile IS strict_increase binding; "
-                                "'strict_order' compiles the "
-                                "instant-collapse chain) -- "
-                                "operators/funnel.window_funnel for "
-                                "anything else"
-                            )
-                    args = _split_top(expr[j + 1 : a_close])
-                    if len(args) < 2 or not all(a.strip() for a in args):
-                        raise ValueError(
-                            "chsql: windowFunnel takes (timestamp, "
-                            "cond1, ...) -- at least one condition"
-                        )
-                    if len(args) - 1 > 12:
-                        raise ValueError(
-                            "chsql: windowFunnel SQL compile caps at "
-                            "12 steps (k(k-1)/2 window layers); use "
-                            "operators/funnel.window_funnel directly"
-                        )
-                    struct_items.append(
-                        (
-                            idx, "wf",
-                            (int(wp.group(1)), args[0], args[1:], mode),
-                            alias,
-                        )
-                    )
-                    continue
-        sm = _SEQ_RE.match(_mask(expr))
-        if sm:
-            p_open = expr.index("(", sm.end(1))
-            p_close = _match_paren(_mask(expr), p_open)
-            j = p_close + 1
-            while j < len(expr) and expr[j].isspace():
-                j += 1
-            if j < len(expr) and expr[j] == "(":
-                a_close = _match_paren(_mask(expr), j)
-                if a_close == len(expr.rstrip()) - 1:
-                    name = sm.group(1)
-                    if alias is None:
-                        raise ValueError(
-                            f"chsql: alias the {name}(...)(...) item "
-                            "(AS name)"
-                        )
-                    params = _split_top(expr[p_open + 1 : p_close])
-                    pm = re.fullmatch(
-                        r"\s*'([^']*)'\s*", params[0] if params else ""
-                    )
-                    if len(params) != 1 or not pm:
-                        raise ValueError(
-                            f"chsql: {name} needs ONE literal pattern "
-                            f"string parameter, got "
-                            f"{expr[p_open + 1:p_close]!r}"
-                        )
-                    args = _split_top(expr[j + 1 : a_close])
-                    if len(args) < 2 or not all(a.strip() for a in args):
-                        raise ValueError(
-                            f"chsql: {name} takes (timestamp, cond1, "
-                            "...) after the pattern -- at least one "
-                            "condition"
-                        )
-                    refs, sgaps = _seq_pattern_parse(
-                        pm.group(1), len(args) - 1, name
-                    )
-                    if len(refs) > 32:
-                        raise ValueError(
-                            f"chsql: {name} pattern exceeds the CH cap "
-                            "of 32 steps"
-                        )
-                    if name == "sequenceCount" and (
-                        len(refs) != 2 or sgaps != [None]
-                    ):
-                        raise ValueError(
-                            "chsql: sequenceCount compiles the "
-                            "'(?i).*(?j)' pair form only; use "
-                            "operators/funnel.sequence_count_pairs "
-                            "(longer patterns have no run-length "
-                            "collapse)"
-                        )
-                    struct_items.append(
-                        (
-                            idx,
-                            "seqm" if name == "sequenceMatch" else "seqc",
-                            (refs, sgaps, args[0], args[1:]),
-                            alias,
-                        )
-                    )
-                    continue
-        hm = _HIST_RE.match(_mask(expr))
-        if hm:
-            p_open = expr.index("(", hm.end(1))
-            p_close = _match_paren(_mask(expr), p_open)
-            j = p_close + 1
-            while j < len(expr) and expr[j].isspace():
-                j += 1
-            if j < len(expr) and expr[j] == "(":
-                a_close = _match_paren(_mask(expr), j)
-                if a_close == len(expr.rstrip()) - 1:
-                    if alias is None:
-                        raise ValueError(
-                            "chsql: alias the histogram(...)(...) item "
-                            "(AS name) -- the result is an ARRAY of "
-                            "(lower, upper, height) structs"
-                        )
-                    hp = re.fullmatch(
-                        r"\s*(\d+)\s*", expr[p_open + 1 : p_close]
-                    )
-                    if not hp or int(hp.group(1)) < 1:
-                        raise ValueError(
-                            "chsql: histogram needs a literal positive "
-                            "bin count, got "
-                            f"{expr[p_open + 1:p_close]!r}"
-                        )
-                    args = _split_top(expr[j + 1 : a_close])
-                    if len(args) != 1 or not args[0].strip():
-                        raise ValueError(
-                            "chsql: histogram takes exactly one value "
-                            "argument after the bin count"
-                        )
-                    struct_items.append(
-                        (idx, "hist", (int(hp.group(1)), args[0]), alias)
-                    )
-                    continue
-        spm = _SPAN_RE.match(_mask(expr))
-        if spm:
-            open_idx = expr.index("(", spm.end(1))
-            close = _match_paren(_mask(expr), open_idx)
-            if close == len(expr.rstrip()) - 1:
-                name = spm.group(1)
-                if alias is None:
-                    raise ValueError(
-                        f"chsql: alias the {name}(...) item (AS name)"
-                    )
-                args = _split_top(expr[open_idx + 1 : close])
-                if len(args) != 2 or not all(a.strip() for a in args):
-                    raise ValueError(
-                        f"chsql: {name} takes exactly (start, end)"
-                    )
-                struct_items.append(
-                    (
-                        idx,
-                        "ils" if name == "intervalLengthSum" else "mxi",
-                        (args[0], args[1]),
-                        alias,
-                    )
-                )
-                continue
-        em = _ENTROPY_RE.match(_mask(expr))
-        if em:
-            open_idx = expr.index("(", em.end(1))
-            close = _match_paren(_mask(expr), open_idx)
-            if close == len(expr.rstrip()) - 1:
-                if alias is None:
-                    raise ValueError(
-                        "chsql: alias the entropy(...) item (AS name)"
-                    )
-                args = _split_top(expr[open_idx + 1 : close])
-                if len(args) != 1 or not args[0].strip():
-                    raise ValueError(
-                        "chsql: entropy takes exactly one argument "
-                        "(the value whose distribution is measured)"
-                    )
-                struct_items.append((idx, "ent", (args[0],), alias))
-                continue
-        if _MAP_AGG_RE.search(_mask(expr)):
+        claimed = _struct_item(expr, alias)
+        if claimed:
+            struct_items.append((idx, *claimed, alias))
+            continue
+        if any(
+            m.group(1) in _MAP_AGGS
+            for m in _STRUCT_AGG_GATE.finditer(_mask(expr))
+        ):
             raise ValueError(
                 "chsql: sumMap/minMap/maxMap compile only as a whole "
                 "aliased top-level SELECT item; found one nested in "
@@ -4929,7 +4828,7 @@ def _rewrite_summap(
                     f"{_collapse_ws(expr)!r}"
                 )
             out_names[idx] = re.split(r"\s*\.\s*", expr.strip())[-1].strip("`")
-    for idx, _kind, _payload, alias in struct_items:
+    for idx, _fn, _payload, alias in struct_items:
         out_names[idx] = alias
 
     # ---- ORDER BY items must be output columns ----------------------
@@ -5024,43 +4923,8 @@ def _rewrite_summap(
         if having_b:
             resid += f" HAVING CAST(({having_b}) AS BOOLEAN)"
         frames.append(("__smr", resid))
-    for n, (_idx, kind, payload, _alias) in enumerate(struct_items):
-        if kind == "map":
-            how, karg, varg = payload
-            chain = _summap_chain(how, karg, varg, gk, use_frm, use_where)
-        elif kind == "topk":
-            topn, xarg, warg = payload
-            chain = _topk_chain(topn, xarg, warg, gk, use_frm, use_where)
-        elif kind == "ent":
-            chain = _entropy_chain(payload[0], gk, use_frm, use_where)
-        elif kind == "wf":
-            win_s, ts_arg, conds, wf_mode = payload
-            builder = (
-                _window_funnel_strict_chain
-                if wf_mode == "strict_order"
-                else _window_funnel_chain
-            )
-            chain = builder(win_s, ts_arg, conds, gk, use_frm, use_where)
-        elif kind == "seqm":
-            refs, sgaps, ts_arg, conds = payload
-            chain = _seq_match_chain(
-                refs, sgaps, ts_arg, conds, gk, use_frm, use_where
-            )
-        elif kind == "seqc":
-            refs, _sgaps, ts_arg, conds = payload
-            chain = _seq_count_chain(
-                conds[refs[0] - 1], conds[refs[1] - 1], ts_arg, gk,
-                use_frm, use_where,
-            )
-        elif kind == "ils":
-            chain = _ils_chain(payload[0], payload[1], gk, use_frm, use_where)
-        elif kind == "mxi":
-            chain = _mxi_chain(payload[0], payload[1], gk, use_frm, use_where)
-        elif kind == "hist":
-            chain = _hist_chain(payload[0], payload[1], gk, use_frm, use_where)
-        else:
-            ps, xarg, warg, scalar = payload
-            chain = _qew_chain(ps, xarg, warg, gk, use_frm, use_where, scalar)
+    for n, (_idx, fn, payload, _alias) in enumerate(struct_items):
+        chain = _STRUCT_AGGS[fn].chain(*payload, gk, use_frm, use_where)
         frames.append((f"__smm{n}", chain))
 
     base_tag = frames[0][0]
@@ -5077,45 +4941,17 @@ def _rewrite_summap(
 
     # ---- final select in original item order --------------------------
     items_out: list[str] = []
-    item_tag = {idx: f"__smm{n}" for n, (idx, *_rest) in enumerate(struct_items)}
-    item_kind = {idx: kind for idx, kind, _p, _a in struct_items}
+    item_frame = {
+        idx: (f"__smm{n}", fn)
+        for n, (idx, fn, _p, _a) in enumerate(struct_items)
+    }
     other_pos = {idx: j for j, (idx, _e, _a) in enumerate(other)}
     for idx, (expr, _alias) in enumerate(parsed):
         name = out_names[idx]
-        if idx in item_tag:
-            tag = item_tag[idx]
-            if item_kind[idx] == "topk":
-                items_out.append(f"{tag}.__tkarr AS `{name}`")
-                continue
-            if item_kind[idx] == "qew":
-                items_out.append(f"{tag}.__qq AS `{name}`")
-                continue
-            if item_kind[idx] == "ent":
-                items_out.append(f"{tag}.__he AS `{name}`")
-                continue
-            if item_kind[idx] == "wf":
-                items_out.append(f"{tag}.__wfd AS `{name}`")
-                continue
-            if item_kind[idx] == "seqm":
-                items_out.append(f"{tag}.__sqm AS `{name}`")
-                continue
-            if item_kind[idx] == "seqc":
-                items_out.append(f"{tag}.__sqc AS `{name}`")
-                continue
-            if item_kind[idx] == "ils":
-                items_out.append(f"{tag}.__ils AS `{name}`")
-                continue
-            if item_kind[idx] == "mxi":
-                items_out.append(f"{tag}.__mxi AS `{name}`")
-                continue
-            if item_kind[idx] == "hist":
-                items_out.append(f"{tag}.__hg AS `{name}`")
-                continue
-            items_out.append(
-                f"named_struct('keys', transform({tag}.__smkv, __sms -> "
-                f"__sms.k), 'values', transform({tag}.__smkv, __sms -> "
-                f"__sms.v)) AS `{name}`"
-            )
+        if idx in item_frame:
+            tag, fn = item_frame[idx]
+            out_col = _STRUCT_AGGS[fn].out.format(t=tag)
+            items_out.append(f"{out_col} AS `{name}`")
         elif fast:
             items_out.append(
                 f"{base_tag}.__smg{gk_norm[_norm_expr(expr)]} AS `{name}`"
