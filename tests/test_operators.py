@@ -3437,6 +3437,59 @@ def test_chsql_yq_schema_and_with_read(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
+# One statement per refusal of run_script and of the YQ schema parser
+# it calls, each with its full message.  Every refusal fires before
+# any SQL reaches Spark.
+_BIND = "`c`.`/metrica/hits*.csv.gz`"
+_S3_URL = "https://storage.example.net/b/hits/hits.csv.gz"
+_SCRIPT_REFUSALS = [
+    ("read_url", "SELECT k FROM `c`.`/metrica/visits*.csv.gz` WITH "
+     "(format=csv_with_names, Schema=(k int64))",
+     "chsql: no url_map entry for '`c`.`/metrica/visits*.csv.gz`'"),
+    ("read_format", f"SELECT k FROM {_BIND} WITH (format=parquet, "
+     "Schema=(k int64))",
+     "chsql: unsupported binding format 'parquet'"),
+    ("read_schema", f"SELECT k FROM {_BIND} WITH (format=csv_with_names)",
+     "chsql: binding read requires Schema=(...)"),
+    ("yq_item", f"SELECT k FROM {_BIND} WITH (format=csv_with_names, "
+     "Schema=(k int64 default 1))",
+     "chsql: unsupported YQ schema item 'k int64 default 1'"),
+    ("yq_type", f"SELECT k FROM {_BIND} WITH (format=csv_with_names, "
+     "Schema=(k blob))",
+     "chsql: unsupported YQ type 'blob'"),
+    ("insert_url", "insert into `c`.`/metrica/out/` WITH "
+     "(format='csv_with_names') SELECT 1 AS k",
+     "chsql: no url_map entry for '`c`.`/metrica/out/`'"),
+    ("insert_format", f"insert into {_BIND} WITH (format='parquet') "
+     "SELECT 1 AS k",
+     "chsql: unsupported insert format 'parquet'"),
+    ("s3_format", f"create table s3t as src ENGINE = S3('{_S3_URL}', "
+     "'Parquet', 'none')",
+     "chsql: unsupported S3 format 'Parquet'/'none'"),
+    ("s3_url", "create table s3t as src ENGINE = S3("
+     "'https://storage.example.net/b/other.csv.gz', 'CSVWithNames', 'gzip')",
+     "chsql: no url_map entry for "
+     "'https://storage.example.net/b/other.csv.gz'"),
+    ("insert_unknown", "insert into nope select 1 AS k",
+     "chsql: INSERT into unknown S3 table 'nope'"),
+]
+
+
+@pytest.mark.parametrize(
+    "script,message",
+    [c[1:] for c in _SCRIPT_REFUSALS],
+    ids=[c[0] for c in _SCRIPT_REFUSALS],
+)
+def test_chsql_run_script_refusals(spark, script, message):
+    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
+
+    src = spark.createDataFrame([(1,)], "k long")
+    url_map = {_BIND: "/nonexistent/hits*.csv.gz", _S3_URL: "/nonexistent"}
+    with pytest.raises(ValueError) as ei:
+        chsql.run_script(spark, script, {"src": src}, url_map)
+    assert str(ei.value) == message
+
+
 def test_chsql_combinator_vocabulary(spark):
     """The wider CH vocabulary through the front-end: -If combinators
     with their 0-not-null empty-set contract, argMax/groupUniqArray,
