@@ -53,7 +53,6 @@ from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import (
     text,
 )
 from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import (
-    chjoin,
     chsql,
     inline_aliases,
     with_totals,
@@ -4547,7 +4546,7 @@ def q_chsql_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")  # unique (key, time) for determinism
         .agg(F.max("value").alias("purchase_value"))
     )
-    return chjoin.run_sql(
+    return chsql.run_sql(
         spark, _CHSQL_ASOF_SQL, {"clicks": clicks, "purchases": purchases}
     )
 
@@ -4580,7 +4579,7 @@ def q_chsql_any_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the statement continues as a plain INNER JOIN.  Oracle: the
     identical QUALIFY row_number dedup in DuckDB."""
     _prep(spark)
-    return chjoin.run_sql(
+    return chsql.run_sql(
         spark,
         _CHSQL_ANY_JOIN_SQL,
         {

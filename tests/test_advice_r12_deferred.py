@@ -47,7 +47,7 @@ from __future__ import annotations
 
 import pytest
 
-from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chjoin, chsql
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
 
 
 def test_ipv4_cidr_negative_literal_bits_refused():
@@ -73,7 +73,7 @@ def test_asof_bare_column_colliding_with_cast_type_still_refuses(spark):
     # must close the matching-case form without relying on that
     # accident.)
     with pytest.raises(ValueError, match="ambiguous"):
-        chjoin.run_sql(
+        chsql.run_sql(
             spark,
             "SELECT l.k, CAST(l.date AS date) AS d, date "
             "FROM l ASOF JOIN r ON l.k = r.k AND l.lt >= r.rt",

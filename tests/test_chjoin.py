@@ -1,6 +1,6 @@
 """plans/chjoin: CH ASOF / ANY join strictness modifiers compiled
-onto operators/rangejoin.asof_join and a deterministic keep-one dedup,
-then delegated to plans/chsql.run_sql (round-10 verdict tasks 3-4).
+onto operators/rangejoin.asof_join and a deterministic keep-one dedup
+inside plans/chsql.run_sql (round-10 verdict tasks 3-4).
 
 Oracles: DuckDB's native ASOF JOIN and a QUALIFY row_number dedup
 mirroring the documented deterministic refinement of CH ANY.
@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chjoin
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chjoin, chsql
 
 from conftest import SF_ORACLE
 
@@ -47,7 +47,7 @@ class TestAsof:
 
     def test_matches_duckdb_asof(self, spark, duck):
         clicks, purchases = _clicks_purchases(spark)
-        got = chjoin.run_sql(
+        got = chsql.run_sql(
             spark, self.SQL, {"clicks": clicks, "purchases": purchases}
         )
         want = duck.sql(
@@ -71,10 +71,10 @@ class TestAsof:
 
     def test_inner_drops_unmatched(self, spark):
         clicks, purchases = _clicks_purchases(spark)
-        left = chjoin.run_sql(
+        left = chsql.run_sql(
             spark, self.SQL, {"clicks": clicks, "purchases": purchases}
         )
-        inner = chjoin.run_sql(
+        inner = chsql.run_sql(
             spark,
             self.SQL.replace("ASOF LEFT JOIN", "ASOF JOIN"),
             {"clicks": clicks, "purchases": purchases},
@@ -85,10 +85,10 @@ class TestAsof:
 
     def test_flipped_inequality_and_modifier_order(self, spark):
         clicks, purchases = _clicks_purchases(spark)
-        base = chjoin.run_sql(
+        base = chsql.run_sql(
             spark, self.SQL, {"clicks": clicks, "purchases": purchases}
         )
-        flipped = chjoin.run_sql(
+        flipped = chsql.run_sql(
             spark,
             """
             SELECT event_id, user_id, p.purchase_value AS pv, p.ts AS pts
@@ -108,7 +108,7 @@ class TestAsof:
             [("a", 1, 5, 1.0), ("a", 1, 15, 2.0), ("b", 3, 19, 3.0)],
             "g string, k long, t long, v double",
         )
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             """
             SELECT id, r.v AS v FROM l ASOF LEFT JOIN r
@@ -125,7 +125,7 @@ class TestAsof:
     def test_bare_and_aliased_references(self, spark):
         clicks, purchases = _clicks_purchases(spark)
         # bare right-only column + alias reusing the right column name
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             """
             SELECT event_id,
@@ -144,7 +144,7 @@ class TestAny:
     def test_matches_qualify_oracle(self, spark, duck):
         orders = spark.read.parquet(f"{SF_ORACLE}/orders.parquet")
         li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
-        got = chjoin.run_sql(
+        got = chsql.run_sql(
             spark,
             """
             SELECT o.o_orderkey AS ok, l.l_partkey AS pk,
@@ -175,7 +175,7 @@ class TestAny:
     def test_left_multiplicity_preserved(self, spark):
         orders = spark.read.parquet(f"{SF_ORACLE}/orders.parquet")
         li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             "SELECT o.o_orderkey AS ok FROM orders o ANY LEFT JOIN "
             "lineitem l ON o.o_orderkey = l.l_orderkey",
@@ -188,7 +188,7 @@ class TestAny:
         li = spark.createDataFrame(
             [(1, 5), (1, 3), (2, 7)], "lok long, qty long"
         )
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             "SELECT ok, l.qty AS qty FROM orders o ANY INNER JOIN li l "
             "ON o.ok = l.lok ORDER BY ok",
@@ -202,7 +202,7 @@ class TestAny:
             [(1, None, "z"), (1, 5, "a"), (1, 5, "b")],
             "rk long, a int, b string",
         )
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             "SELECT l.a AS a, l.b AS b FROM left_t ANY LEFT JOIN "
             "right_t l ON left_t.k = l.rk",
@@ -219,7 +219,7 @@ class TestAsofComparators:
     @pytest.mark.parametrize("op", [">", "<=", "<"])
     def test_matches_duckdb(self, spark, duck, op):
         clicks, purchases = _clicks_purchases(spark)
-        got = chjoin.run_sql(
+        got = chsql.run_sql(
             spark,
             f"""
             SELECT event_id, p.purchase_value AS pv, p.ts AS pts
@@ -250,7 +250,7 @@ class TestAsofComparators:
 class TestUsing:
     def test_asof_using_matches_on_form(self, spark):
         clicks, purchases = _clicks_purchases(spark)
-        on_form = chjoin.run_sql(
+        on_form = chsql.run_sql(
             spark,
             """
             SELECT event_id, p.purchase_value AS pv
@@ -259,7 +259,7 @@ class TestUsing:
             """,
             {"clicks": clicks, "purchases": purchases},
         )
-        using_form = chjoin.run_sql(
+        using_form = chsql.run_sql(
             spark,
             """
             SELECT event_id, p.purchase_value AS pv
@@ -274,7 +274,7 @@ class TestUsing:
         li = spark.createDataFrame(
             [(1, 5), (1, 3), (2, 7)], "k long, qty long"
         )
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             "SELECT k, l.qty AS qty FROM orders o ANY LEFT JOIN li l "
             "USING (k) ORDER BY k",
@@ -286,7 +286,7 @@ class TestUsing:
     def test_any_using_bare_column(self, spark):
         orders = spark.createDataFrame([(1,), (2,)], "k long")
         li = spark.createDataFrame([(1, 5), (2, 7)], "k long, qty long")
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             "SELECT k, l.qty AS qty FROM orders o ANY INNER JOIN li l "
             "USING k ORDER BY k",
@@ -298,13 +298,13 @@ class TestUsing:
         c = spark.createDataFrame([(1, 2)], "k long, t long")
         p = spark.createDataFrame([(1, 2, 3)], "k long, t long, v long")
         with pytest.raises(ValueError, match="at least one equality"):
-            chjoin.run_sql(
+            chsql.run_sql(
                 spark,
                 "SELECT 1 FROM c ASOF JOIN p USING (t)",
                 {"c": c, "p": p},
             )
         with pytest.raises(ValueError, match="not on table"):
-            chjoin.run_sql(
+            chsql.run_sql(
                 spark,
                 "SELECT 1 FROM c ANY LEFT JOIN p USING (v)",
                 {"c": c, "p": p},
@@ -321,7 +321,7 @@ class TestRefusals:
 
     def _refused(self, sql, *frag):
         with pytest.raises(ValueError) as ei:
-            chjoin.run_sql(None, sql, {"c": self.c, "p": self.p})
+            chsql.run_sql(None, sql, {"c": self.c, "p": self.p})
         for f in frag:
             assert f in str(ei.value)
 
@@ -411,7 +411,7 @@ class TestRefusals:
             "AND c.t >= p.t WHERE `t` > 0",
             "ambiguous after an ASOF join",
         )
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             "SELECT c.t AS lt, p.t AS rt FROM c ASOF JOIN p "
             "ON c.k = p.k AND c.t >= p.t",
@@ -422,7 +422,7 @@ class TestRefusals:
     def test_using_columns_stay_bare_referencable(self, spark):
         """USING columns are coalesced by CH — a bare reference to one
         is NOT ambiguous and returns the joined (left) value."""
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             "SELECT k, t, p.v AS v FROM c ASOF JOIN p USING (k, t)",
             {"c": self.c, "p": self.p},
@@ -443,7 +443,7 @@ class TestRefusals:
         )
 
     def test_passthrough_without_modifier(self, spark):
-        out = chjoin.run_sql(
+        out = chsql.run_sql(
             spark,
             "SELECT c.k AS k, p.v AS v FROM c JOIN p ON c.k = p.k",
             {"c": self.c, "p": self.p},
@@ -464,7 +464,7 @@ def test_subquery_alias_refusal_is_deliberate(spark):
     p = spark.createDataFrame([(1, 2, 3)], "k long, t long, v long")
     o = spark.createDataFrame([(1,)], "x long")
     with pytest.raises(ValueError, match="ambiguous"):
-        chjoin.run_sql(
+        chsql.run_sql(
             spark,
             "SELECT c.k AS k, p.v AS v FROM c ASOF JOIN p "
             "ON c.k = p.k AND c.t >= p.t "
@@ -473,7 +473,7 @@ def test_subquery_alias_refusal_is_deliberate(spark):
         )
     # qualifying the inner reference (or renaming the inner alias so it
     # no longer collides with the both-side name) compiles
-    out = chjoin.run_sql(
+    out = chsql.run_sql(
         spark,
         "SELECT c.k AS k, p.v AS v FROM c ASOF JOIN p "
         "ON c.k = p.k AND c.t >= p.t "

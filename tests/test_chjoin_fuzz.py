@@ -13,7 +13,7 @@ from hypothesis import strategies as st
 from py4j.protocol import Py4JJavaError
 from pyspark.errors.exceptions.base import PySparkException
 
-from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chjoin
+from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
 
 _CLEAN = (ValueError, PySparkException, Py4JJavaError)
 
@@ -57,7 +57,7 @@ def _orows(con, sql):
 
 def _contract(spark, frames, duck, ch_sql, duck_sql, require=None):
     try:
-        got = _rows(chjoin.run_sql(spark, ch_sql, dict(frames)))
+        got = _rows(chsql.run_sql(spark, ch_sql, dict(frames)))
     except _CLEAN:
         assert require in (None, "refused"), f"unexpected refusal: {ch_sql!r}"
         return
@@ -180,5 +180,5 @@ _SLOTS = [len("SELECT"), len("SELECT k, x, b.v AS v FROM"), len(_BASE)]
 )
 def test_neutral_injection_invariant(spark, frames, duck, slot, neutral):
     mutated = _BASE[:slot] + neutral + _BASE[slot:]
-    got = _rows(chjoin.run_sql(spark, mutated, dict(frames)))
+    got = _rows(chsql.run_sql(spark, mutated, dict(frames)))
     assert got == _orows(duck, _ASOF_ORACLE)

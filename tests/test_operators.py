@@ -2050,13 +2050,12 @@ def test_video_frame_sampling_counts(spark):
 # Bindings (S5) -- named external tables queried by name
 # --------------------------------------------------------------------------
 def test_binding_registry_glob_csv(spark):
+    """A YQ binding is a glob read bound in run_sql's table map under
+    its YQ spelling, dash included."""
     from pyspark.sql import types as T
 
+    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.sources import csvgz
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.sources.bindings import (
-        Binding,
-        BindingRegistry,
-    )
 
     tmp = tempfile.mkdtemp(prefix="ym_bind_")
     try:
@@ -2067,11 +2066,13 @@ def test_binding_registry_glob_csv(spark):
         schema = T.StructType(
             [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
         )
-        reg = BindingRegistry(spark)
-        reg.register(Binding("metrica-hits-s3", f"{tmp}/hits*.csv.gz", "csv_with_names", schema))
+        hits = csvgz.read_csv(spark, f"{tmp}/hits*.csv.gz", schema)
         # query by name, exactly like YQ (README.md:200-216)
-        out = spark.sql(
-            "SELECT count(1) AS n, count(distinct _file) AS files FROM metrica_hits_s3"
+        out = chsql.run_sql(
+            spark,
+            "SELECT count(1) AS n, count(distinct _file) AS files "
+            "FROM `metrica-hits-s3`",
+            {"`metrica-hits-s3`": hits},
         ).collect()[0]
         assert (out["n"], out["files"]) == (4, 2)
     finally:
@@ -2657,13 +2658,6 @@ def test_jdbc_scd2_dim_roundtrip_derby(spark):
         }
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_binding_rejects_unknown_format(spark):
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.sources.bindings import Binding
-
-    with pytest.raises(ValueError, match="unsupported binding format"):
-        Binding("x", "/tmp/none", "avro").load(spark)
 
 
 def test_salted_join_matches_plain(spark):
@@ -3472,6 +3466,12 @@ _SCRIPT_REFUSALS = [
      "'https://storage.example.net/b/other.csv.gz'"),
     ("insert_unknown", "insert into nope select 1 AS k",
      "chsql: INSERT into unknown S3 table 'nope'"),
+    ("insert_caller_table", "insert into src select 1 AS k",
+     "chsql: INSERT into unknown S3 table 'src'"),
+    ("s3_source", f"create table s3t as nope ENGINE = S3('{_S3_URL}', "
+     "'CSVWithNames', 'gzip')",
+     "chsql: CREATE TABLE source 'nope' is neither a caller table nor an "
+     "S3 table of this script"),
 ]
 
 
@@ -3488,6 +3488,28 @@ def test_chsql_run_script_refusals(spark, script, message):
     with pytest.raises(ValueError) as ei:
         chsql.run_script(spark, script, {"src": src}, url_map)
     assert str(ei.value) == message
+
+
+@pytest.mark.parametrize(
+    "stmt,value",
+    [
+        ("select arr[5] as v from t", ""),
+        ("select notEmpty(arr) as v from t", 1),
+        ("select arraySum(f) as v from t", 4.0),
+    ],
+    ids=["index_default", "not_empty_array", "float_array_sum"],
+)
+def test_chsql_run_script_schema_rewrites(spark, stmt, value):
+    """A script statement gets run_sql's schema-driven rewrites: the
+    caller's tables reach it through run_sql's table map."""
+    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
+
+    t = spark.createDataFrame(
+        [(["a", "b"], [1.5, 2.5])], "arr array<string>, f array<double>"
+    )
+    want = chsql.run_sql(spark, stmt, {"t": t}).collect()
+    got = chsql.run_script(spark, stmt, {"t": t}, {}).collect()
+    assert want == got and got[0]["v"] == value
 
 
 def test_chsql_combinator_vocabulary(spark):

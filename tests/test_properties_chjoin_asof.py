@@ -1,5 +1,5 @@
 """chjoin ASOF/ANY rewrite contract (r13 verdict task 5): on random
-inputs, the SQL compile path (plans/chjoin.run_sql scanning the
+inputs, the SQL compile path (plans/chsql.run_sql scanning the
 verbatim CH statement) must produce exactly the rows of the
 DataFrame operator it claims to compile onto —
 ``operators/rangejoin.asof_join`` for ASOF, keep-one-per-key + equi
@@ -61,7 +61,7 @@ def test_asof_sql_equals_operator(
     spark, lrows, rrows, op, direction, mod_first, eq_first, reversed_ineq
 ):
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import rangejoin
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chjoin
+    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
 
     left = spark.createDataFrame(
         [(i, k, t) for i, (k, t) in enumerate(lrows)],
@@ -86,7 +86,7 @@ def test_asof_sql_equals_operator(
         "SELECT l.lid AS lid, l.k AS k, l.lt AS lt, r.v AS v "
         f"FROM lf l {join_kw} rgt r ON {conj}"
     )
-    got = chjoin.run_sql(spark, sql, {"lf": left, "rgt": right})
+    got = chsql.run_sql(spark, sql, {"lf": left, "rgt": right})
 
     how = "left" if direction == "LEFT" else "inner"
     want = rangejoin.asof_join(
@@ -105,7 +105,7 @@ def test_asof_using_equals_operator_default_comparator(
     spark, lrows, rrows, direction
 ):
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import rangejoin
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chjoin
+    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
 
     # USING shares names: both sides carry (k, t); right adds v
     left = spark.createDataFrame(
@@ -117,7 +117,7 @@ def test_asof_using_equals_operator_default_comparator(
         "k long, t long, v long",
     )
     join_kw = "ASOF JOIN" if direction == "INNER" else "ASOF LEFT JOIN"
-    got = chjoin.run_sql(
+    got = chsql.run_sql(
         spark,
         f"SELECT l.lid AS lid, l.k AS k, l.t AS t, r.v AS v "
         f"FROM lf l {join_kw} rgt r USING (k, t)",
@@ -153,7 +153,7 @@ def test_any_sql_equals_keep_one_then_join(spark, lrows, rrows, direction):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chjoin
+    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
 
     left = spark.createDataFrame(
         [(i, k, t) for i, (k, t) in enumerate(lrows)],
@@ -164,7 +164,7 @@ def test_any_sql_equals_keep_one_then_join(spark, lrows, rrows, direction):
         "k long, rt long, rid long",
     )
     join_kw = "ANY JOIN" if direction == "INNER" else "ANY LEFT JOIN"
-    got = chjoin.run_sql(
+    got = chsql.run_sql(
         spark,
         "SELECT l.lid AS lid, l.k AS k, r.rt AS rt, r.rid AS rid "
         f"FROM lf l {join_kw} rgt r ON l.k = r.k",

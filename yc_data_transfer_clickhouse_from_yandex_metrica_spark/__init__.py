@@ -16,8 +16,8 @@ its semantics Spark-first:
 - ``operators``   -- CDC sign-ledger / version collapse, deterministic
                      sampling, dedup family, similarity search, text
                      analysis, multimodal column plumbing.
-- ``sources``     -- CSV-gz glob I/O with virtual columns, binding
-                     registry, warehouse layout writer, JDBC gateway.
+- ``sources``     -- CSV-gz glob I/O with virtual columns, warehouse
+                     layout writer, JDBC gateway.
 - ``streaming``   -- Structured Streaming CDC ingestion (the Data
                      Transfer replication analog).
 - ``queries``     -- the reference's DataLens charts over the Metrica

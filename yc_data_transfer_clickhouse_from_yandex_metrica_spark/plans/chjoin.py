@@ -1,5 +1,5 @@
 """ClickHouse ASOF / ANY join strictness modifiers, compiled onto the
-engine's operators and delegated to :mod:`plans.chsql`.
+engine's operators by :func:`plans.chsql.run_sql`.
 
 ClickHouse SQL extends the JOIN clause with a *strictness* word that
 changes row multiplicity — the two this module compiles:
@@ -52,11 +52,13 @@ sides, more than one strictness join per statement, and expression
 (non-column) ON terms all raise with a pointer instead of silently
 joining with the wrong multiplicity.
 
-Layering note: this is a PRE-compiler — it scans the raw statement,
-executes the strictness join through the DataFrame operator, binds
-the result as a synthetic table, rewrites the statement to reference
-it, and hands the remainder to ``chsql.run_sql`` unchanged.  chsql's
-own ASOF/ANY refusals still guard direct ``chsql.run_sql`` calls.
+Layering note: this is a PRE-compiler that ``chsql.run_sql`` calls
+first, on the raw statement and its table map.
+:func:`compile_strictness_joins` executes the strictness join through
+the DataFrame operator, binds the result as a synthetic table and
+rewrites the statement to reference it; ``run_sql`` then compiles
+the remainder.  chsql's own ASOF/ANY refusals are the backstop for
+shapes this pre-compiler cannot bind.
 """
 
 from __future__ import annotations
@@ -501,18 +503,3 @@ def compile_strictness_joins(
             )
     rest[_VIEW] = frame
     return out_sql, rest
-
-
-def run_sql(
-    spark: SparkSession,
-    query: str,
-    tables: dict[str, DataFrame],
-    params: dict[str, str] | None = None,
-    table_meta: dict[str, "chsql.TableMeta"] | None = None,
-) -> DataFrame:
-    """Alias of ``chsql.run_sql``: the strictness compile is folded
-    into the core front-end (r12 — the r11 layering was a rotation
-    constraint, not a design); kept for the r11 call sites."""
-    return chsql.run_sql(
-        spark, query, tables, params=params, table_meta=table_meta
-    )

@@ -258,10 +258,12 @@ vocabulary):
 from __future__ import annotations
 
 import datetime
+import glob
 import re
 from dataclasses import dataclass
 from fractions import Fraction
-from typing import Callable, NamedTuple
+from types import MappingProxyType
+from typing import Callable, Mapping, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -443,6 +445,9 @@ class _SchemaCtx(NamedTuple):
     # scalar columns of NON-float numeric type (int/decimal): CH
     # round() ties away from zero for these, banker's for floats
     halfup_cols: frozenset = frozenset()
+    # array column -> its element type's CH default ('' / typed 0),
+    # for out-of-range indexing and LEFT ARRAY JOIN's empty rows
+    elem_defaults: Mapping[str, str] = MappingProxyType({})
 
 
 _EMPTY_CTX = _SchemaCtx()
@@ -2387,8 +2392,8 @@ def _dict_refusal(name: str):
     def fn(a):
         raise ValueError(
             f"chsql: {name}() needs a dictionary engine; model the "
-            f"dictionary as a bound dimension table (sources/bindings"
-            f", sources/csvgz dim upload) and JOIN -- broadcast for "
+            f"dictionary as a dimension table in run_sql's tables map "
+            f"(sources/csvgz dim upload) and JOIN -- broadcast for "
             f"in-memory-dictionary-sized dims, operators/rangejoin "
             f"for SCD-2 validity-interval history"
         )
@@ -3615,54 +3620,32 @@ def _rewrite_postfix_indexing(sql: str) -> str:
 _IDENT_BRACKET = re.compile(r"(`[^`]+`|[A-Za-z_][\w]*(?:\.[\w]+)*)\s*\[")
 
 
-def _elem_defaults(tables: dict[str, DataFrame]) -> dict[str, str]:
-    out: dict[str, str] = {}
-    for df in tables.values():
-        for f in df.schema.fields:
-            if not isinstance(f.dataType, T.ArrayType):
-                continue
-            et = f.dataType.elementType
-            if isinstance(et, T.StringType):
-                out[f.name] = "''"
-            elif isinstance(et, T.NumericType):
-                out[f.name] = f"CAST(0 AS {et.simpleString()})"
-    return out
-
-
-def _fractional_array_cols(tables: dict[str, DataFrame]) -> frozenset:
-    """Column names whose type is array-of-fractional (float, double,
-    decimal) across the queried tables -- the schema context arraySum/
-    sumArray use to pick the CH-typed accumulator (Float64 for float
-    arrays, Int64 otherwise)."""
-    out = set()
-    for df in tables.values():
-        for f in df.schema.fields:
-            if isinstance(f.dataType, T.ArrayType) and isinstance(
-                f.dataType.elementType,
-                (T.FloatType, T.DoubleType, T.DecimalType),
-            ):
-                out.add(f.name)
-    return frozenset(out)
-
-
 def _schema_ctx(tables: dict[str, DataFrame]) -> _SchemaCtx:
-    arrays = frozenset(
-        f.name
-        for df in tables.values()
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.ArrayType)
-    )
-    halfup = frozenset(
-        f.name
-        for df in tables.values()
-        for f in df.schema.fields
-        if isinstance(f.dataType, T.NumericType)
-        and not isinstance(f.dataType, (T.FloatType, T.DoubleType))
-    )
+    """One walk over the queried tables' schemas.  A column name two
+    tables share takes the later table's element default."""
+    floats, arrays, halfup = set(), set(), set()
+    defaults: dict[str, str] = {}
+    for df in tables.values():
+        for f in df.schema.fields:
+            dt = f.dataType
+            if isinstance(dt, T.ArrayType):
+                arrays.add(f.name)
+                et = dt.elementType
+                if isinstance(et, (T.FloatType, T.DoubleType, T.DecimalType)):
+                    floats.add(f.name)
+                if isinstance(et, T.StringType):
+                    defaults[f.name] = "''"
+                elif isinstance(et, T.NumericType):
+                    defaults[f.name] = f"CAST(0 AS {et.simpleString()})"
+            elif isinstance(dt, T.NumericType) and not isinstance(
+                dt, (T.FloatType, T.DoubleType)
+            ):
+                halfup.add(f.name)
     return _SchemaCtx(
-        float_array_cols=_fractional_array_cols(tables),
-        array_cols=arrays,
-        halfup_cols=halfup,
+        float_array_cols=frozenset(floats),
+        array_cols=frozenset(arrays),
+        halfup_cols=frozenset(halfup),
+        elem_defaults=defaults,
     )
 
 
@@ -3673,7 +3656,7 @@ _AJ_END = re.compile(
 )
 
 
-def _rewrite_array_join(sql: str, defaults: dict[str, str]) -> str:
+def _rewrite_array_join(sql: str, ctx: _SchemaCtx) -> str:
     """CH ``[LEFT] ARRAY JOIN <expr> [AS alias]`` CLAUSE (the dialect
     already supports the arrayJoin() function): hoisted into an inner
     explode projection over the whole FROM target, so WHERE/GROUP
@@ -3690,6 +3673,7 @@ def _rewrite_array_join(sql: str, defaults: dict[str, str]) -> str:
     per-row equal-size guard in the WHERE (CH throws on unequal
     sizes; assert_true here — never arrays_zip's silent NULL
     padding); LEFT keeps all-empty rows as one defaults row."""
+    defaults = ctx.elem_defaults
     while True:
         masked = _mask(sql)
         m = _AJ_CLAUSE.search(masked)
@@ -5098,9 +5082,10 @@ def _rewrite_running(sql: str) -> str:
         sql = sql[: m.start()] + repl + sql[close + 1 :]
 
 
-def _rewrite_indexing(sql: str, defaults: dict[str, str]) -> str:
+def _rewrite_indexing(sql: str, ctx: _SchemaCtx) -> str:
     """``col[idx]`` -> CH 1-based type-default access (ch.array_at
     CASE form) for columns with known array element types."""
+    defaults = ctx.elem_defaults
     while True:
         masked = _mask(sql)
         for m in _IDENT_BRACKET.finditer(masked):
@@ -5501,10 +5486,11 @@ def run_sql(
         df.createOrReplaceTempView(view)
         view_cols[view] = list(df.columns)
         sql = _replace_name(sql, name, view)
-    sql = _rewrite_indexing(sql, _elem_defaults(tables))
+    ctx = _schema_ctx(tables)
+    sql = _rewrite_indexing(sql, ctx)
     sql = _rewrite_array_literals(sql)
     sql = _rewrite_postfix_indexing(sql)
-    sql = _rewrite_array_join(sql, _elem_defaults(tables))
+    sql = _rewrite_array_join(sql, ctx)
     # shared_bases collects (view name, base SELECT) pairs the
     # structural compiler wants materialized ONCE instead of scanning
     # the source once per aggregate frame (see _rewrite_summap)
@@ -5512,7 +5498,6 @@ def run_sql(
     sql = _rewrite_summap(
         sql, view_cols, shared_bases if _SHARED_SCAN else None
     )
-    ctx = _schema_ctx(tables)
 
     def _post_rewrites(text: str) -> str:
         # every text-level rewrite that runs AFTER the structural
@@ -6217,17 +6202,63 @@ _INSERT_BINDING = re.compile(
 )
 
 
+def _binding(
+    stmt: str, m: re.Match, url_map: dict[str, str], kind: str
+) -> tuple[str, dict[str, str], str | None, int]:
+    """(spelling, options, schema body, index of the closing paren) of
+    the YQ binding ``m`` matched; the spelling must have a ``url_map``
+    entry and the format must be csv_with_names."""
+    spelling = re.sub(r"\s*\.\s*", ".", m.group(1).strip())
+    if spelling not in url_map:
+        raise ValueError(f"chsql: no url_map entry for {spelling!r}")
+    close = _match_paren(_mask(stmt), m.end() - 1)
+    opts, schema_body = _parse_with_block(stmt[m.end() : close])
+    if opts.get("format", "").lower() != "csv_with_names":
+        raise ValueError(
+            f"chsql: unsupported {kind} format {opts.get('format')!r}"
+        )
+    return spelling, opts, schema_body, close
+
+
+def _bind_reads(
+    spark: SparkSession,
+    sql: str,
+    url_map: dict[str, str],
+    tables: dict[str, DataFrame],
+) -> str:
+    """Rewrite each ``FROM `conn`.`path` WITH (format=csv_with_names,
+    ..., Schema=(...))`` read to ``FROM <synthetic name>`` and bind that
+    name in ``tables`` to a schema-on-read frame over
+    ``url_map[spelling]``."""
+    from ..sources import csvgz
+
+    n = 0
+    while m := _FROM_BINDING.search(_mask(sql)):
+        spelling, _, schema_body, close = _binding(sql, m, url_map, "binding")
+        if schema_body is None:
+            raise ValueError("chsql: binding read requires Schema=(...)")
+        name = f"__chsql_b{n}"
+        n += 1
+        tables[name] = csvgz.read_csv(
+            spark, url_map[spelling], parse_yq_schema(schema_body)
+        )
+        sql = sql[: m.start()] + f"FROM {name} " + sql[close + 1 :]
+    return sql
+
+
 # ---------------------------------------------------------------------------
 # multi-statement scripts (the reference's S3 workflow, README.md:135-167)
 # ---------------------------------------------------------------------------
 
+# names and sources are matched as the script spells them: a source
+# such as ``hits_<id трансфера>`` contains a space
 _CREATE_S3 = re.compile(
-    r"^\s*create\s+table\s+(\S+?)(?:\s+on\s+cluster\s+.+?)?\s+as\s+(\S+)\s+"
+    r"^\s*create\s+table\s+(\S+?)(?:\s+on\s+cluster\s+.+?)?\s+as\s+(.+?)\s+"
     r"ENGINE\s*=\s*S3\(\s*'([^']+)'\s*,\s*'([^']+)'\s*,\s*'([^']+)'\s*\)",
     re.I | re.S,
 )
 _INSERT = re.compile(
-    r"^\s*insert\s+into\s+(\S+)\s+(?:settings\s+[^\s,]+(?:\s*,\s*\S+)*\s+)?"
+    r"^\s*insert\s+into\s+(.+?)\s+(?:settings\s+[^\s,]+(?:\s*,\s*\S+)*\s+)?"
     r"(select\b.*)$",
     re.I | re.S,
 )
@@ -6256,6 +6287,20 @@ def _split_union_all(sql: str) -> list[str]:
     return [p.strip() for p in parts]
 
 
+def _s3_frame(spark: SparkSession, dir_: str, schema: T.StructType) -> DataFrame:
+    """The S3 table stored under ``dir_``, listed now; a table with no
+    objects yet reads as empty (CH's S3 table over zero objects)."""
+    from ..sources import csvgz
+
+    if glob.glob(dir_ + "/*.csv.gz"):
+        return csvgz.read_csv(spark, dir_ + "/*.csv.gz", schema)
+    return (
+        spark.createDataFrame([], schema)
+        .withColumn("_path", F.lit(None).cast("string"))
+        .withColumn("_file", F.lit(None).cast("string"))
+    )
+
+
 def run_script(
     spark: SparkSession,
     script: str,
@@ -6264,149 +6309,93 @@ def run_script(
     params: dict[str, str] | None = None,
 ) -> DataFrame | None:
     """Execute a multi-statement ClickHouse script covering the
-    reference's S3 export workflow VERBATIM (README.md:135-167):
+    reference's S3 export workflow VERBATIM (README.md:135-167) and its
+    YQ bindings (README.md:190-216):
 
     - ``CREATE TABLE x [ON CLUSTER ...] AS src ENGINE = S3(url,
       'CSVWithNames', 'gzip') [SETTINGS ...]`` -- registers an
-      S3-backed CSV-gz table: schema comes from ``src``
-      (schema-on-read, never inferred), the object URL maps to a
-      local/object-store directory through ``url_map``.
+      S3-backed CSV-gz table, under ``x`` and (when ``x`` is
+      db-qualified) its bare name: the schema comes from ``src``, a
+      caller table or an earlier S3 table (schema-on-read, never
+      inferred); the object URL maps to a local/object-store
+      directory through ``url_map``.
     - ``INSERT INTO x [SETTINGS s3_create_new_file_on_insert=1]
       SELECT ...`` -- one new csv.gz object per insert with the
       ClickHouse naming convention (sources/csvgz.insert_csv).
-    - ``SELECT``s over both regular and S3 tables, with ClickHouse's
-      virtual ``_path``/``_file`` columns and PER-BRANCH ``LIMIT``
-      inside top-level ``UNION ALL`` (CH binds LIMIT to each SELECT;
-      ANSI would bind it to the union -- branches are compiled
-      separately and unioned).
+    - ``FROM `conn`.`path` WITH (format=csv_with_names, ...,
+      Schema=(...))`` reads and ``INSERT INTO `conn`.`path` WITH
+      (format='csv_with_names', ...) SELECT ...`` writes, each path
+      mapped through ``url_map`` by its spelling.
+    - ``SELECT``s over caller, S3 and binding tables, with
+      ClickHouse's virtual ``_path``/``_file`` columns on S3 tables
+      and PER-BRANCH ``LIMIT`` inside top-level ``UNION ALL``.
 
-    Returns the LAST select's DataFrame (None if the script ends
-    with DDL/DML).  Each statement flows through the same dialect
-    pipeline as :func:`run_sql`.
+    Every SELECT (a statement, or an INSERT's source) compiles through
+    :func:`run_sql`, whose ``tables`` map binds the caller's tables,
+    every S3 table (read from its directory when the statement runs,
+    so it sees the objects earlier inserts wrote) and the statement's
+    binding reads.  Returns the LAST statement's DataFrame when it is a
+    SELECT, else None.
     """
     from ..sources import csvgz
 
     text = strip_comments(script)
     for name, val in (params or {}).items():
         text = text.replace("{{" + name + "}}", val)
-    repl: dict[str, str] = {}
-    for i, (name, df) in enumerate(sorted(tables.items(), key=lambda kv: -len(kv[0]))):
-        view = f"__chsql_s{i}"
-        df.createOrReplaceTempView(view)
-        repl[name] = view
-
-    def _apply_repl(stmt: str) -> str:
-        for name in sorted(repl, key=len, reverse=True):
-            stmt = _replace_name(stmt, name, repl[name])
-        return stmt
-
-    s3_meta: dict[str, dict] = {}  # view name -> {dir, basename, schema}
+    # S3 table spelling -> (dir, object basename, schema)
+    s3: dict[str, tuple[str, str, T.StructType]] = {}
     last_df: DataFrame | None = None
 
-    def _refresh_s3_views() -> None:
-        # re-list the object dirs so SELECTs observe objects written
-        # by earlier inserts in this script; a not-yet-written table
-        # reads as empty (CH's S3 table over zero objects)
-        import glob as _glob
-
-        for view, meta in s3_meta.items():
-            if _glob.glob(meta["dir"] + "/*.csv.gz"):
-                df = csvgz.read_csv(
-                    spark, meta["dir"] + "/*.csv.gz", meta["schema"]
-                )
-            else:
-                df = (
-                    spark.createDataFrame([], meta["schema"])
-                    .withColumn("_path", F.lit(None).cast("string"))
-                    .withColumn("_file", F.lit(None).cast("string"))
-                )
-            df.createOrReplaceTempView(view)
-
-    binding_n = [0]
-
-    def _rewrite_from_bindings(stmt: str) -> str:
-        # `conn`.`path` WITH (format=..., compression=..., Schema=(...))
-        # -> a registered schema-on-read view over url_map[spelling]
-        while True:
-            masked = _mask(stmt)
-            m = _FROM_BINDING.search(masked)
-            if not m:
-                return stmt
-            close = _match_paren(masked, m.end() - 1)
-            spelling = re.sub(r"\s*\.\s*", ".", m.group(1).strip())
-            if spelling not in url_map:
-                raise ValueError(f"chsql: no url_map entry for {spelling!r}")
-            opts, schema_body = _parse_with_block(stmt[m.end() : close])
-            if opts.get("format", "").lower() != "csv_with_names":
-                raise ValueError(
-                    f"chsql: unsupported binding format {opts.get('format')!r}"
-                )
-            if schema_body is None:
-                raise ValueError("chsql: binding read requires Schema=(...)")
-            view = f"__chsql_b{binding_n[0]}"
-            binding_n[0] += 1
-            csvgz.read_csv(
-                spark, url_map[spelling], parse_yq_schema(schema_body)
-            ).createOrReplaceTempView(view)
-            stmt = stmt[: m.start()] + f"FROM {view} " + stmt[close + 1 :]
+    def _compile(sql: str) -> DataFrame:
+        # one read per S3 table, bound under each of its spellings
+        frames = {m: _s3_frame(spark, m[0], m[2]) for m in set(s3.values())}
+        bound = {**tables, **{n: frames[m] for n, m in s3.items()}}
+        sql = _bind_reads(spark, sql, url_map, bound)
+        return run_sql(spark, sql, bound)
 
     for stmt in _split_statements(text):
-        stmt = _apply_repl(stmt)
+        last_df = None
         mb = _INSERT_BINDING.match(stmt)
         if mb:
-            spelling = re.sub(r"\s*\.\s*", ".", mb.group(1).strip())
-            if spelling not in url_map:
-                raise ValueError(f"chsql: no url_map entry for {spelling!r}")
-            masked = _mask(stmt)
-            close = _match_paren(masked, mb.end() - 1)
-            opts, _ = _parse_with_block(stmt[mb.end() : close])
-            if opts.get("format", "").lower() != "csv_with_names":
-                raise ValueError(
-                    f"chsql: unsupported insert format {opts.get('format')!r}"
-                )
-            select_sql = _rewrite_from_bindings(stmt[close + 1 :].strip())
-            _refresh_s3_views()
-            df = run_sql(spark, select_sql, {})
+            spelling, opts, _, close = _binding(stmt, mb, url_map, "insert")
+            df = _compile(stmt[close + 1 :].strip())
             path_part = spelling.rsplit(".`", 1)[-1].strip("`")
             base = [s for s in path_part.split("/") if s][-1] if path_part.strip("/") else "out"
             csvgz.insert_csv(
                 df, url_map[spelling], base,
                 compression=opts.get("compression", "none"),
             )
-            last_df = None
             continue
-        stmt = _rewrite_from_bindings(stmt)
         m = _CREATE_S3.match(stmt)
         if m:
-            name, src_view, url, fmt, codec = m.groups()
+            name, src, url, fmt, codec = m.groups()
             if fmt.lower() != "csvwithnames" or codec.lower() != "gzip":
                 raise ValueError(f"chsql: unsupported S3 format {fmt!r}/{codec!r}")
             if url not in url_map:
                 raise ValueError(f"chsql: no url_map entry for {url!r}")
-            base = url.rsplit("/", 1)[-1].split(".")[0]
-            view = f"__chsql_s3_{len(s3_meta)}"
-            s3_meta[view] = {
-                "dir": url_map[url],
-                "basename": base,
-                "schema": spark.table(src_view).schema,
-            }
-            # the script may name it db-qualified and refer to it bare
-            repl[name] = view
+            if src in s3:
+                schema = s3[src][2]
+            elif src in tables:
+                schema = tables[src].schema
+            else:
+                raise ValueError(
+                    f"chsql: CREATE TABLE source {src!r} is neither a "
+                    f"caller table nor an S3 table of this script"
+                )
+            meta = (url_map[url], url.rsplit("/", 1)[-1].split(".")[0], schema)
+            s3[name] = meta
             if "." in name:
-                repl[name.split(".", 1)[1]] = view
+                s3[name.split(".", 1)[1]] = meta
             continue
         m = _INSERT.match(stmt)
         if m:
             target, select_sql = m.groups()
-            if target not in s3_meta:
+            if target not in s3:
                 raise ValueError(f"chsql: INSERT into unknown S3 table {target!r}")
-            _refresh_s3_views()
-            df = run_sql(spark, select_sql, {})
-            meta = s3_meta[target]
-            csvgz.insert_csv(df, meta["dir"], meta["basename"])
+            df = _compile(select_sql)
+            csvgz.insert_csv(df, s3[target][0], s3[target][1])
             continue
         # a SELECT (run_sql itself applies CH's per-branch LIMIT
         # binding for top-level UNION ALL)
-        _refresh_s3_views()
-        last_df = run_sql(spark, stmt, {})
+        last_df = _compile(stmt)
     return last_df

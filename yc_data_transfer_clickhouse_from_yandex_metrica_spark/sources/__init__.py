@@ -1,3 +1,3 @@
-from . import bindings, csvgz, jdbc, warehouse
+from . import csvgz, jdbc, warehouse
 
-__all__ = ["bindings", "csvgz", "jdbc", "warehouse"]
+__all__ = ["csvgz", "jdbc", "warehouse"]
