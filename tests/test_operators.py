@@ -3512,6 +3512,26 @@ def test_chsql_run_script_schema_rewrites(spark, stmt, value):
     assert want == got and got[0]["v"] == value
 
 
+def test_chsql_run_script_empty_s3_table(spark):
+    """An S3 table with no objects yet reads as empty, virtual columns
+    included, under the bare name of its db-qualified CREATE."""
+    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.plans import chsql
+
+    src = spark.createDataFrame([(1,)], "k long")
+    base = tempfile.mkdtemp(prefix="ym_chsql_empty_")
+    try:
+        out = chsql.run_script(
+            spark,
+            f"create table db.s3t as src ENGINE = S3('{_S3_URL}', "
+            "'CSVWithNames', 'gzip'); select k, _path, _file from s3t",
+            {"src": src},
+            {_S3_URL: base},
+        )
+        assert out.columns == ["k", "_path", "_file"] and out.count() == 0
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_chsql_combinator_vocabulary(spark):
     """The wider CH vocabulary through the front-end: -If combinators
     with their 0-not-null empty-set contract, argMax/groupUniqArray,
