@@ -1180,6 +1180,72 @@ def test_connected_components_chain_and_singletons(spark):
     assert (5, 1, False) in clusters and (1, 1, True) in clusters
 
 
+
+@pytest.fixture
+def cc_cycles(spark, monkeypatch):
+    """Counts the eager checkpoints connected_components takes (the
+    edges, then one per cycle) and fails any DataFrame.count call: the
+    change count rides each cycle's checkpoint job as an observed
+    metric, never a separate count job."""
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    calls = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return checkpoint(self, *args, **kwargs)
+
+    def no_count(self):
+        raise AssertionError("connected_components ran a count job")
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counted)
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    return calls
+
+
+def _path_pairs(spark, n):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    ).repartition(3)
+
+
+def test_connected_components_empty_pairs_returns_without_blocking(spark, cc_cycles):
+    """Empty pairs checkpoint a frame of zero partitions; its observed
+    change count must still arrive, or Observation.get blocks."""
+    import threading
+
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.setdefault(
+            "rows", dedup.connected_components(pairs).collect()
+        ),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=180)
+    assert not t.is_alive(), "connected_components blocked on empty pairs"
+    assert out["rows"] == []
+    assert len(cc_cycles) == 2  # the edges, then one cycle
+
+
+def test_connected_components_path_graph_needs_several_cycles(spark, cc_cycles):
+    """A 12-node path (diameter 11) converges only after 11 rounds, two
+    per cycle; every cycle is one checkpoint job and no count job."""
+    rows = dedup.connected_components(_path_pairs(spark, 12)).collect()
+    assert sorted((r["id"], r["comp"]) for r in rows) == [(i, 0) for i in range(12)]
+    assert len(cc_cycles) == 1 + 6
+
+
+def test_connected_components_stops_at_max_iter(spark, cc_cycles):
+    """max_iter=2 cycles (4 rounds) leave a 12-node path unconverged:
+    node i holds label max(0, i - 4)."""
+    rows = dedup.connected_components(_path_pairs(spark, 12), max_iter=2).collect()
+    assert sorted((r["id"], r["comp"]) for r in rows) == [
+        (i, max(0, i - 4)) for i in range(12)
+    ]
+    assert len(cc_cycles) == 1 + 2
+
 def test_jaccard_prefix_filter_is_lossless(spark):
     """PPJoin prefix candidates must yield exactly the full-index
     pair set (the filter is a lossless candidate pruner)."""

@@ -163,6 +163,90 @@ def test_minhash_lsh_banded_join_shape(spark):
             assert not _PAYLOAD.search(im.group(1)), block
 
 
+def _outer_final_nodes(fmt: str) -> dict[int, tuple[str, str]]:
+    """``_final_nodes`` for a plan over a cached input: the cached
+    relation prints its own ``== Final Plan ==`` markers, nested in the
+    tree, so only the column-0 markers bound the outer final plan."""
+    tree = re.split(r"(?m)^\+- == (?:Final|Initial) Plan ==", fmt)
+    ids = {int(i) for i in re.findall(r"\((\d+)\)", tree[1] if len(tree) > 2 else tree[0])}
+    return {
+        int(m.group(1)): (m.group(2), m.group(3))
+        for m in re.finditer(r"(?m)^\((\d+)\) (\S+).*\n((?:.+\n)*)", fmt)
+        if int(m.group(1)) in ids
+    }
+
+
+def _executed_plans(spark, run) -> list[str]:
+    """Formatted final plans of every SQL execution ``run()`` starts,
+    read from the session's SQL status store (an eager checkpoint is
+    an execution of its own, so the returned frame's plan alone would
+    not show the work done while building it)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last(n):
+        bus.waitUntilEmpty()
+        cnt = store.executionsCount()
+        seq = store.executionsList(max(0, cnt - n), n)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    start = max([e.executionId() for e in last(1)], default=-1)
+    run()
+    return [
+        e.physicalPlanDescription() for e in last(100) if e.executionId() > start
+    ]
+
+
+def _assert_cached_input_computed_once(spark, build, generator, key_cols):
+    """On a ``.cache()``d input (the curation shape), across every
+    execution that ``build(docs)`` and its collect start, the per-doc
+    Generate marked by ``generator`` runs exactly once, and the
+    candidate self-join keyed ``key_cols`` reuses its exchange."""
+    docs = _docs(spark).cache()
+    try:
+        docs.count()
+        out = {}
+        plans = _executed_plans(
+            spark, lambda: out.setdefault("fmt", _formatted(build(docs)))
+        )
+    finally:
+        docs.unpersist()
+    gens = [
+        block
+        for fmt in plans
+        for name, block in _outer_final_nodes(fmt).values()
+        if name == "Generate" and generator in block
+    ]
+    assert len(gens) == 1, plans
+    fmt = out["fmt"]
+    nodes = _outer_final_nodes(fmt)
+    assert len(_shj_on(nodes, key_cols)) == 1, fmt
+    reused = [block for name, block in nodes.values() if name == "ReusedExchange"]
+    assert any(
+        all(re.search(rf"\b{c}#", block) for c in key_cols) for block in reused
+    ), fmt
+
+
+def test_minhash_lsh_cached_input_computes_state_once(spark):
+    """One per-document state (shingle set plus MINs) feeds both band
+    sides and both verify joins: one shingle Generate, reused band
+    exchange."""
+    _assert_cached_input_computed_once(
+        spark,
+        lambda d: dedup.minhash_lsh_pairs(d, num_hashes=16, bands=4),
+        "Arguments: explode(arrays_zip(",
+        ["band", "bh"],
+    )
+
+
+def test_simhash_cached_input_computes_signatures_once(spark):
+    """One signature pass (one token Generate) feeds both sides of the
+    chunk join, whose exchange is reused."""
+    _assert_cached_input_computed_once(
+        spark, dedup.simhash_pairs, "regexp_replace", ["ci", "cv"]
+    )
+
+
 def test_simhash_pigeonhole_join_shape(spark):
     out = dedup.simhash_pairs(_docs(spark))
     fmt = _formatted(out)

@@ -163,3 +163,89 @@ def test_embedded_newlines_roundtrip_with_multiline(spark, rows):
         ) == want, rows
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _bytes_by_name(base):
+    out = {}
+    for f in os.listdir(base):
+        with open(os.path.join(base, f), "rb") as fh:
+            out[f] = fh.read()
+    return out
+
+
+def test_insert_after_middle_delete_replaces_nothing(spark):
+    """Deleting a middle object must not make its successor's name come
+    round again: the next insert takes one past the highest index, and
+    no existing file's bytes change."""
+    base = tempfile.mkdtemp(prefix="ym_csv_gap_")
+    try:
+        for i in range(3):  # t, t.1, t.2 -- each with distinct content
+            csvgz.insert_csv(spark.createDataFrame([(i,)], "id long"), base, "t")
+        os.remove(os.path.join(base, "t.1.csv.gz"))
+        before = _bytes_by_name(base)
+        path = csvgz.insert_csv(spark.createDataFrame([(9,)], "id long"), base, "t")
+        assert os.path.basename(path) == "t.3.csv.gz"
+        after = _bytes_by_name(base)
+        assert {k: after[k] for k in before} == before
+        assert sorted(after) == ["t.2.csv.gz", "t.3.csv.gz", "t.csv.gz"]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_insert_numbering_ignores_prefix_sharing_basenames(spark):
+    """``hits_2.csv.gz`` and ``hits.csv.gz.bak`` are not ``hits``
+    objects and do not shift its numbering."""
+    base = tempfile.mkdtemp(prefix="ym_csv_prefix_")
+    try:
+        df = spark.createDataFrame([(1,)], "id long")
+        csvgz.insert_csv(df, base, "hits_2")
+        open(os.path.join(base, "hits.csv.gz.bak"), "wb").close()
+        assert os.path.basename(csvgz.insert_csv(df, base, "hits")) == "hits.csv.gz"
+        assert os.path.basename(csvgz.insert_csv(df, base, "hits")) == "hits.1.csv.gz"
+        assert os.path.basename(csvgz.insert_csv(df, base, "hits_2")) == "hits_2.1.csv.gz"
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_concurrent_inserts_under_one_basename_all_land(spark):
+    """Threads inserting under one basename (more threads than cores)
+    each land their own object: separate staging directories, and a
+    publish that retries with the next index instead of replacing."""
+    import sys
+    import threading
+
+    base = tempfile.mkdtemp(prefix="ym_csv_race_")
+    n = 2 * (os.cpu_count() or 2)
+    switch = sys.getswitchinterval()
+    try:
+        results, errors = [], []
+
+        def insert(i):
+            try:
+                df = spark.createDataFrame([(i, f"v{i}")], "id long, s string")
+                results.append(csvgz.insert_csv(df, base, "t"))
+            except Exception as e:  # surfaced by the assertion below
+                errors.append(e)
+
+        sys.setswitchinterval(1e-5)
+        threads = [threading.Thread(target=insert, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        sys.setswitchinterval(switch)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        names = ["t.csv.gz"] + [f"t.{i}.csv.gz" for i in range(1, n)]
+        assert sorted(os.path.basename(p) for p in results) == sorted(names)
+        assert sorted(os.listdir(base)) == sorted(names)
+        schema = T.StructType(
+            [T.StructField("id", T.LongType()), T.StructField("s", T.StringType())]
+        )
+        got = csvgz.read_csv(spark, f"{base}/t*.csv.gz", schema)
+        assert sorted((r["id"], r["s"]) for r in got.collect()) == [
+            (i, f"v{i}") for i in range(n)
+        ]
+    finally:
+        sys.setswitchinterval(switch)
+        shutil.rmtree(base, ignore_errors=True)

@@ -20,7 +20,21 @@ Five strategies, all shuffle-disciplined for 100TB:
                    vector primitives).
 
 Everything is built from built-in functions -- no Python UDFs;
-xxhash64 (stable, seedable) is the only hash primitive.
+xxhash64 (stable, seedable) is the only hash primitive.  The exact,
+MinHash, SimHash, contamination and cluster plans (and the shingle
+index they share with ``streaming.cdc``'s near-dup stream) are built
+from SQL text, one ``selectExpr``/``F.expr`` string per logical unit:
+every composed Column call is a py4j round trip (in PySpark 4.1 each
+also captures its call site), and a Python-lambda HOF several, which
+made plan BUILDING a large share of a small pass.
+
+At interactive sizes a pass is dominated by fixed per-job costs, so
+the pair miners do each piece of per-document work once:
+``minhash_lsh_pairs`` materializes one per-document state (shingle
+set plus MINs) that both band sides and both verify joins read, and
+``simhash_pairs`` materializes its chunk rows once for both sides of
+its self-join.  ``connected_components`` propagates labels with one
+join and one aggregate per round and one job per two-round cycle.
 
 Algorithms (public literature): MinHash resemblance sketches per
 Broder, "On the resemblance and containment of documents" (SEQUENCES
@@ -37,11 +51,11 @@ cluster diameters are large).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import ch
-from .text import tokens
+from .text import tokens_sql
 
 
 # --------------------------------------------------------------------------
@@ -57,12 +71,15 @@ def dedup_exact(
     the in-bucket tie-break (hash collisions are resolved exactly by
     grouping on the real content inside each hash bucket).
     """
-    h = F.xxhash64(*[F.col(c) for c in content_cols]).alias("__h")
-    w = Window.partitionBy("__h", *content_cols).orderBy(F.col(id_col).asc())
+    cols = ", ".join(ch.ident(c) for c in content_cols)
     return (
-        df.withColumn("__h", h)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
+        df.selectExpr("*", f"xxhash64({cols}) AS __h")
+        .selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY __h, {cols} "
+            f"ORDER BY {ch.ident(id_col)}) AS __rn",
+        )
+        .where("__rn = 1")
         .drop("__h", "__rn")
     )
 
@@ -160,18 +177,14 @@ def _shingle_index(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFra
     fewer than k tokens emit no rows -- same contract as the
     SQL-window oracle.
     """
-    tk = tokens(text_col)
-    n = F.size("tk")
-    base = df.select(F.col(id_col).alias("id"), tk.alias("tk")).where(n >= k)
-    zipped = F.arrays_zip(
-        *[F.slice("tk", i + 1, n - (k - 1)).alias(f"t{i}") for i in range(k)]
-    )
-    grams = base.select("id", F.explode(zipped).alias("g"))
-    return grams.select(
-        "id",
-        F.xxhash64(
-            F.concat_ws(" ", *[F.col(f"g.t{i}") for i in range(k)])
-        ).alias("sh"),
+    base = df.selectExpr(
+        f"{ch.ident(id_col)} AS id", f"{tokens_sql(text_col)} AS tk"
+    ).where(f"size(tk) >= {k}")
+    slices = ", ".join(f"slice(tk, {i + 1}, size(tk) - {k - 1})" for i in range(k))
+    # arrays_zip names the fields of unnamed arguments "0".."k-1"
+    gram = ", ".join(f"g.`{i}`" for i in range(k))
+    return base.selectExpr("id", f"explode(arrays_zip({slices})) AS g").selectExpr(
+        "id", f"xxhash64(concat_ws(' ', {gram})) AS sh"
     )
 
 
@@ -181,7 +194,7 @@ def _shingle_sets(idx: DataFrame) -> DataFrame:
     Exchange-free on top of _shingle_index (already partitioned by
     id); collect_set both dedupes and builds the verify-side array.
     """
-    return idx.groupBy("id").agg(F.collect_set("sh").alias("shset"))
+    return idx.groupBy("id").agg(F.expr("collect_set(sh) AS shset"))
 
 
 # --------------------------------------------------------------------------
@@ -439,12 +452,17 @@ def minhash_mins(
     computes the same values but drops to interpreted eval -- ~100x
     slower per doc; don't go back to it.)
     """
-    return idx.groupBy("id").agg(
-        *[
-            F.expr(f"min(xxhash64(sh, {i})) AS m{i}")
-            for i in range(num_hashes)
-        ]
+    return idx.groupBy("id").agg(F.expr(f"{_mins_struct(num_hashes)} AS s")).selectExpr(
+        "id", "s.*"
     )
+
+
+def _mins_struct(num_hashes: int) -> str:
+    """The MinHash MIN aggregates as ONE parsed ``named_struct`` string
+    (not ~4 py4j round trips per column): the same flat MIN buffers,
+    gathered into a struct per doc and expanded by ``s.*``."""
+    mins = ", ".join(f"'m{i}', min(xxhash64(sh, {i}))" for i in range(num_hashes))
+    return f"named_struct({mins})"
 
 
 def minhash_bands(
@@ -457,22 +475,12 @@ def minhash_bands(
     streaming near-dup ingest path (same banding => same collision
     probability math)."""
     r = num_hashes // bands
-    return mins.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"m{j * r + i}") for i in range(r)]
-                        ).alias("bh"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    structs = ", ".join(
+        f"named_struct('band', {j}, 'bh', "
+        f"xxhash64({', '.join(f'm{j * r + i}' for i in range(r))}))"
+        for j in range(bands)
+    )
+    return mins.selectExpr("id", f"inline(array({structs}))")
 
 
 def minhash_lsh_pairs(
@@ -490,42 +498,53 @@ def minhash_lsh_pairs(
     s=0.9 is 1-(1-0.9^4)^16 ~ 1-2e-12 -- recall is effectively exact
     above the default threshold, and every candidate is verified with
     true Jaccard, so precision IS exact.
+
+    The per-document state -- the distinct shingle set plus the
+    ``num_hashes`` MINs -- is ONE aggregate over the shingle index,
+    materialized once with an eager ``localCheckpoint`` (one job) and
+    read by both band sides and both verify joins.  Left as lineage,
+    the tokenize -> shingle -> aggregate pipeline ran twice (once for
+    the sets, once for the MINs) and, on a cached input, the band
+    exchange was not reused either.
     """
     # shingle strings are hashed to 64-bit longs ONCE; everything
     # downstream (signature, banding, verify-intersect) works on longs.
-    # The raw (non-distinct) index feeds the MIN aggregates directly --
-    # MIN is duplicate-insensitive, so no distinct pass is needed there.
-    idx = _shingle_index(df, id_col, text_col, k)
-    docs = _shingle_sets(idx)
-    mins = minhash_mins(idx, num_hashes)
+    # The raw (non-distinct) index feeds the aggregate directly --
+    # collect_set dedupes and MIN is duplicate-insensitive.
+    state = (
+        _shingle_index(df, id_col, text_col, k)
+        .groupBy("id")
+        .agg(
+            F.expr("collect_set(sh) AS shset"),
+            F.expr(f"{_mins_struct(num_hashes)} AS s"),
+        )
+        .selectExpr("id", "shset", "s.*")
+        .localCheckpoint(eager=True)
+    )
     # banded rows carry ONLY (id, band, band-hash): the LSH join
     # shuffles 24 bytes/row, and the shingle sets are attached per-side
     # AFTER candidate pairs exist (|candidates| << |docs| x bands at
     # any realistic dup rate)
-    banded = minhash_bands(mins, num_hashes, bands)
-    # shuffle_hash both sides: one materialized band exchange, reused,
-    # instead of broadcast's double computation of the signature lineage
+    banded = minhash_bands(state, num_hashes, bands)
+    # shuffle_hash both sides over the checkpointed state: the band
+    # exchange is materialized once and the other side reuses it
+    # (broadcast would run the band Generate twice, build and probe)
     a = banded.hint("shuffle_hash").alias("a")
     b = banded.hint("shuffle_hash").alias("b")
     cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        a.join(b, F.expr("a.band = b.band AND a.bh = b.bh AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = docs.select(F.col("id").alias("id_a"), F.col("shset").alias("sh_a"))
-    sh_b = docs.select(F.col("id").alias("id_b"), F.col("shset").alias("sh_b"))
-    pairs = cands.join(sh_a, "id_a").join(sh_b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
+    pairs = cands.join(state.selectExpr("id AS id_a", "shset AS sh_a"), "id_a").join(
+        state.selectExpr("id AS id_b", "shset AS sh_b"), "id_b"
+    )
+    inter = "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE)"
+    union = f"CAST(size(sh_a) + size(sh_b) AS DOUBLE) - {inter}"
     return (
-        pairs.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", ch.round_to(F.col("jaccard"), 4).alias("jaccard"))
+        pairs.selectExpr("id_a", "id_b", f"{inter} / ({union}) AS jaccard")
+        .where(f"jaccard >= {float(threshold)!r}D")
+        .selectExpr("id_a", "id_b", f"{ch.round_to_sql('jaccard', 4)} AS jaccard")
     )
 
 
@@ -553,36 +572,31 @@ def contamination(
     """
     t_idx = (
         _shingle_sets(_shingle_index(train, id_col, text_col, k))
-        .select(F.col("id").alias("tid"), F.explode("shset").alias("sh"))
+        .selectExpr("id AS tid", "explode(shset) AS sh")
         .hint("shuffle_hash")
     )
-    b_per_doc = _shingle_sets(_shingle_index(bench, id_col, text_col, k))
-    b_idx = b_per_doc.select(
-        F.col("id").alias("bid"),
-        F.size("shset").alias("bn"),
-        F.explode("shset").alias("sh"),
-    ).hint("shuffle_hash")
+    b_idx = (
+        _shingle_sets(_shingle_index(bench, id_col, text_col, k))
+        .selectExpr("id AS bid", "size(shset) AS bn", "explode(shset) AS sh")
+        .hint("shuffle_hash")
+    )
     overlaps = (
         b_idx.join(t_idx, "sh")
         .groupBy("bid", "tid")
-        .agg(
-            F.count("*").alias("common"), F.first("bn").alias("bn")
-        )
-        .withColumn(
-            "overlap", F.col("common").cast("double") / F.col("bn").cast("double")
-        )
-        .where(F.col("overlap") >= F.lit(min_overlap))
-    )
-    w = Window.partitionBy("bid").orderBy(
-        F.col("overlap").desc(), F.col("tid").asc()
+        .agg(F.expr("count(*) AS common"), F.expr("first(bn) AS bn"))
+        .selectExpr("bid", "tid", "CAST(common AS DOUBLE) / CAST(bn AS DOUBLE) AS overlap")
+        .where(f"overlap >= {float(min_overlap)!r}D")
     )
     return (
-        overlaps.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(
-            F.col("bid").alias("bench_id"),
-            F.col("tid").alias("train_id"),
-            ch.round_to(F.col("overlap"), 4).alias("overlap"),
+        overlaps.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY bid ORDER BY overlap DESC, tid) AS __rn",
+        )
+        .where("__rn = 1")
+        .selectExpr(
+            "bid AS bench_id",
+            "tid AS train_id",
+            f"{ch.round_to_sql('overlap', 4)} AS overlap",
         )
     )
 
@@ -603,11 +617,21 @@ def connected_components(
     smallest label among itself and its neighbours; converges in
     graph-diameter rounds.  Near-dup clusters from LSH mining are
     near-cliques (diameter ~2-3), so this beats the log-round
-    large-star/small-star contraction in practice while staying three
-    DataFrame ops per round.  Each round is one shuffle join on id;
-    ``localCheckpoint`` cuts lineage so plans stay constant-size, and
-    the loop exits early on the first round with zero label changes
-    (driver sees only the change COUNT, never the data).
+    large-star/small-star contraction in practice.
+
+    The edges are built once: both orientations of every pair plus a
+    self-loop per endpoint, deduplicated, partitioned by ``dst`` and
+    checkpointed.  A round is then ONE join of the edges with the
+    labels and ONE ``min`` aggregate by ``src``: the self-loop makes a
+    node's own label one of its candidates, and the same aggregate
+    yields its previous label as ``min(CASE WHEN src = dst THEN c
+    END)``, so spotting a change needs no second join.  Two rounds
+    make a cycle, which ends in an eager ``localCheckpoint`` that cuts
+    the lineage (plans stay constant-size) and carries the cycle's
+    change count as a ``DataFrame.observe`` metric: ONE job per cycle,
+    and the driver sees only the count, never the data.  The loop
+    exits on the first cycle that changes nothing, or after
+    ``max_iter`` cycles (graph diameter <= 2 * ``max_iter``).
     """
     # localCheckpoint cuts lineage each generation (a persist()-only
     # variant doubles the logical plan per iteration -- analysis time
@@ -618,70 +642,65 @@ def connected_components(
     # degrade under the leaked storage (also measured).
     import gc
 
-    # both edge orientations from ONE pass over pairs (r19 opt):
-    # explode of a 2-struct array instead of unionAll of two selects.
-    # The union form embeds the pair-mining lineage TWICE in the edges
+    # every edge row from ONE pass over pairs (r19 opt): a generator
+    # over a struct array instead of a union of selects.  The union
+    # form embeds the pair-mining lineage once per branch in the edges
     # job and exchange reuse does NOT merge the branches (measured: 4
-    # ShuffledHashJoin / 11 Exchange in the union plan vs 2 / ~6 here;
-    # the pair join — the expensive post-checkpoint step of the LSH
-    # miners — executed twice per edges build).  Same row set:
-    # explode(array(a->b, b->a)) emits exactly the two orientations
-    # the union emitted, and distinct collapses them identically.
+    # ShuffledHashJoin / 11 Exchange in the union plan vs 2 / ~6 for
+    # the generator; the pair join -- the expensive post-checkpoint
+    # step of the LSH miners -- executed once per branch).
+    a, b = ch.ident(a_col), ch.ident(b_col)
     edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-                    ),
-                )
-            ).alias("e")
+        pairs.selectExpr(
+            f"inline(array(named_struct('src', {a}, 'dst', {b}), "
+            f"named_struct('src', {b}, 'dst', {a}), "
+            f"named_struct('src', {a}, 'dst', {a}), "
+            f"named_struct('src', {b}, 'dst', {b})))"
         )
-        .select("e.src", "e.dst")
+        .repartition("dst")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    def propagate(lbl: DataFrame) -> DataFrame:
-        # smallest neighbour label per node
-        nbr_min = (
-            edges.join(lbl.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("comp").alias("nbr_comp"))
+
+    def propagate(lbl: DataFrame | None) -> DataFrame:
+        # no labels yet: every node's label is its own id, so the first
+        # round needs no join at all
+        cand = (
+            edges.selectExpr("src", "dst", "dst AS c")
+            if lbl is None
+            else edges.join(lbl.selectExpr("id AS dst", "comp AS c"), "dst")
         )
-        return lbl.withColumnRenamed("comp", "__prev").join(nbr_min, "id", "left").select(
-            "id",
-            F.least(
-                F.col("__prev"), F.coalesce(F.col("nbr_comp"), F.col("__prev"))
-            ).alias("comp"),
-            (F.coalesce(F.col("nbr_comp"), F.col("__prev")) < F.col("__prev")).alias(
-                "__changed"
-            ),
+        return (
+            cand.groupBy("src")
+            .agg(
+                F.expr("min(c) AS comp"),
+                F.expr("min(CASE WHEN src = dst THEN c END) AS prev"),
+            )
+            .selectExpr("src AS id", "comp", "prev")
         )
 
-    # TWO propagation rounds per checkpoint+convergence-check cycle:
-    # the eager checkpoint and the existence-check job are the fixed
-    # costs of a cycle (they dwarf the joins at interactive scale), and
-    # label propagation is monotone -- if the inner round would change
-    # anything, the outer round's __changed is set too, so checking
-    # only every second round can never exit early.
+    # TWO propagation rounds per checkpoint cycle: the eager checkpoint
+    # is the fixed cost of a cycle (it dwarfs the joins at interactive
+    # scale).  Only the outer round counts changes, and that is enough:
+    # an outer round that changes nothing found its input (the inner
+    # round's labels) already a fixpoint, so the loop never exits early.
+    labels = None
     for _ in range(max_iter):
-        new_labels = propagate(propagate(labels).drop("__changed")).localCheckpoint(
-            eager=True
+        obs = Observation()
+        new_labels = (
+            propagate(propagate(labels))
+            .observe(obs, F.expr("count_if(comp < prev) AS n"))
+            # never NULL (a node's self-loop is a candidate); coalesce
+            # keeps the column non-nullable where the ids are
+            .selectExpr("id", "coalesce(comp, id) AS comp")
+            .localCheckpoint(eager=True)
         )
-        changed = new_labels.where(F.col("__changed")).limit(1).count()
-        prev, labels = labels, new_labels.drop("__changed")
+        prev, labels = labels, new_labels
         del prev, new_labels
-        if changed == 0:
+        if obs.get["n"] == 0:
             break
+    if labels is None:  # max_iter < 1: every node is its own component
+        labels = edges.where("src = dst").selectExpr("src AS id", "dst AS comp")
     del edges
     gc.collect()
     return labels
@@ -700,14 +719,12 @@ def dedup_clusters(
     """
     comps = connected_components(pairs)
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.selectExpr(f"{ch.ident(id_col)} AS id")
         .join(comps, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("comp"), F.col("id")).alias("component"),
-            (F.coalesce(F.col("comp"), F.col("id")) == F.col("id")).alias(
-                "is_canonical"
-            ),
+        .selectExpr(
+            f"id AS {ch.ident(id_col)}",
+            "coalesce(comp, id) AS component",
+            "coalesce(comp, id) = id AS is_canonical",
         )
     )
 
@@ -749,9 +766,9 @@ def simhash_hashes(
     downstream step; only the 64-bit term hash differs.
     """
     if hash_fn == "xxhash64":
-        th = F.xxhash64("t")
+        th = "xxhash64(t)"
     elif hash_fn == "md5":
-        th = F.expr(_MD5_TERM_HASH)
+        th = _MD5_TERM_HASH
     else:
         raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
     # per-doc dedup is MAP-SIDE (r19 opt): array_distinct before the
@@ -762,26 +779,23 @@ def simhash_hashes(
     # is what the md5-path SQL oracle does too (SELECT DISTINCT doc,
     # token); the two differ only on an intra-document 64-bit term
     # hash collision (~1e-11), the family's accepted epsilon.
-    idx = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(tokens(text_col))).alias("t"),
-    ).select("id", th.alias("th"))
-    # per-column F.expr strings, not composed Column objects: the
-    # composed form costs ~6 py4j round-trips per bit (~1 s of
-    # driver-side build for 64 bits, measured); a parsed string is one
-    votes = idx.groupBy("id").agg(
-        *[
-            F.expr(f"sum(if(bit_get(th, {i}) = 1, 1, -1)) AS v{i}")
-            for i in range(nbits)
-        ]
+    idx = df.selectExpr(
+        f"{ch.ident(id_col)} AS id",
+        f"explode(array_distinct({tokens_sql(text_col)})) AS t",
+    ).selectExpr("id", f"{th} AS th")
+    # the nbits vote SUMs as ONE parsed named_struct string (as
+    # minhash_mins): one py4j call instead of a few per bit
+    votes = ", ".join(
+        f"'v{i}', sum(if(bit_get(th, {i}) = 1, 1, -1))" for i in range(nbits)
     )
-    packed = F.expr(
-        " + ".join(
-            f"shiftleft(CAST(if(v{i} > 0, 1, 0) AS LONG), {i})"
-            for i in range(nbits)
-        )
+    packed = " + ".join(
+        f"shiftleft(CAST(if(s.v{i} > 0, 1, 0) AS LONG), {i})" for i in range(nbits)
     )
-    return votes.select("id", packed.alias("sim"))
+    return (
+        idx.groupBy("id")
+        .agg(F.expr(f"named_struct({votes}) AS s"))
+        .selectExpr("id", f"{packed} AS sim")
+    )
 
 
 def simhash_pairs(
@@ -807,37 +821,21 @@ def simhash_pairs(
     width = nbits // nchunks
     docs = simhash_hashes(df, id_col, text_col, nbits, hash_fn=hash_fn)
     mask = (1 << width) - 1
-    chunked = docs.select(
-        "id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("ci"),
-                        F.shiftrightunsigned("sim", c * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("cv"),
-                    )
-                    for c in range(nchunks)
-                ]
-            )
-        ).alias("cc"),
-    ).select("id", "sim", F.col("cc.ci").alias("ci"), F.col("cc.cv").alias("cv"))
+    structs = ", ".join(
+        f"named_struct('ci', {c}, 'cv', shiftrightunsigned(sim, {c * width}) & {mask})"
+        for c in range(nchunks)
+    )
+    # materialized once (eager checkpoint, one job): on a cached input
+    # each side of the self-join otherwise re-ran the whole signature
+    # lineage, since the two cached scans never share an exchange
+    chunked = docs.selectExpr("id", "sim", f"inline(array({structs}))").localCheckpoint(
+        eager=True
+    )
     a = chunked.hint("shuffle_hash").alias("a")
     b = chunked.hint("shuffle_hash").alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
+        a.join(b, F.expr("a.ci = b.ci AND a.cv = b.cv AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b", "bit_count(a.sim ^ b.sim) AS hamming")
+        .where(f"hamming <= {int(max_hamming)}")
         .dropDuplicates(["id_a", "id_b"])
     )

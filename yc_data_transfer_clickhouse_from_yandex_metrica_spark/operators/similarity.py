@@ -7,7 +7,10 @@ Two stages run as Arrow numpy kernels instead: the sign-LSH signatures
 reference), and IVF assignment and probing once the centroid set
 passes ``_ARROW_AUTO_ELEMS`` doubles, where a centroid literal stops
 paying for itself and then stops parsing at all (``assign_lists``).
-Size is the only selector.  Three levels:
+Size is the only selector.  The literal IVF plans (assignment, probe
+fan-out, candidate ranking) are built from SQL text, one string per
+logical unit, because each composed Column or Python-lambda HOF call
+is a py4j round trip.  Three levels:
 
 - brute_topk      : exact cosine top-k, query side broadcast.  The
                     correctness baseline; fine when |queries| is small
@@ -321,10 +324,10 @@ def train_centroids(
     result instead of crashing).
     """
     train_rows = (
-        vectors.select(
-            F.xxhash64(F.col(id_col).cast("string")).alias("h"),
-            F.col(id_col).alias("id"),
-            as_double(vec_col).alias("v"),
+        vectors.selectExpr(
+            f"xxhash64(CAST({ch.ident(id_col)} AS STRING)) AS h",
+            f"{ch.ident(id_col)} AS id",
+            f"{_as_double_sql(vec_col)} AS v",
         )
         .orderBy("h", "id")
         .limit(nlist * train_per_list)
@@ -351,29 +354,27 @@ def train_centroids(
     return [[float(v) for v in row] for row in cents]
 
 
-def _centroid_literal(centroids: list[list[float]]) -> Column:
-    """Centroids as ONE parsed literal array-of-arrays (the
-    _hyperplanes lesson: per-element F.lit costs a py4j round trip
-    each; a single F.expr string parses JVM-side)."""
-    return F.expr(
-        "array(" + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")"
-            for row in centroids
-        ) + ")"
-    )
+def _centroid_literal(centroids: list[list[float]]) -> str:
+    """Centroids as ONE SQL literal array-of-arrays (the _hyperplanes
+    lesson: per-element F.lit costs a py4j round trip each; a single
+    SQL string parses JVM-side)."""
+    return "array(" + ",".join(
+        "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")"
+        for row in centroids
+    ) + ")"
 
 
-def _normalized_centroid_literal(centroids: list[list[float]]) -> Column:
-    """Centroid literal with every row pre-normalized DRIVER-side.
-    For nearest-centroid ASSIGNMENT the row-vector norm cancels out
-    of the argmax (argmax_c dot(v,c)/(|v||c|) = argmax_c dot(v,c/|c|)),
-    so against unit centroids a plain dot product ranks identically
-    to cosine — and skips nlist norm() recomputations per row.
-    Zero-norm centroids have no cosine ordering at all; refuse them
-    loudly (train_centroids never emits one — its centroids are
-    means of unit vectors, re-normalized each Lloyd step)."""
-    unit = _unit_matrix(centroids)
-    return _centroid_literal([[float(x) for x in row] for row in unit])
+# dot/norm/as_double as SQL text, for the literal IVF plans
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
+
+
+def _as_double_sql(vec_col: str) -> str:
+    return f"transform({ch.ident(vec_col)}, x -> CAST(x AS DOUBLE))"
 
 
 # id(ndarray) -> (weakref to the keyed array, its unit matrix): the
@@ -702,19 +703,19 @@ def _arrow_probe_frame(
     )
 
 
-def _score_array(vec: Column, cents_unit: Column) -> Column:
+def _score_array(vec: str, cents_unit: str) -> str:
     """Per-centroid dot scores of one vector against the unit
     centroid literal; NULL dots (NULL vector elements) coalesce to
     -inf so they never win the argmax.  Materialize this into a
     column of its own projection so array_max and array_position
     share one evaluation."""
-    return F.transform(
-        cents_unit,
-        lambda c: F.coalesce(dot(vec, c), F.lit(float("-inf"))),
+    return (
+        f"transform({cents_unit}, c -> "
+        f"coalesce({_dot_sql(vec, 'c')}, CAST('-Infinity' AS DOUBLE)))"
     )
 
 
-def _argmax_cid(scores: Column) -> Column:
+def _argmax_cid(scores: str) -> str:
     """cid of the max score (first occurrence — cos desc, cid asc
     ties), as native O(nlist) scans: array_max + array_position.
     Both the original per-row array_sort (O(nlist log nlist)
@@ -724,7 +725,7 @@ def _argmax_cid(scores: Column) -> Column:
     the sort form timed out outright at 400k.  Zero-norm vectors
     score 0.0 against every centroid and land in list 0 (first max),
     matching the sort form's tie-break."""
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("long")
+    return f"CAST(array_position({scores}, array_max({scores})) - 1 AS BIGINT)"
 
 
 def _coarse_partition(
@@ -821,8 +822,8 @@ def assign_lists(
     slower on a 4-core host)."""
     if coarse_groups is not None and coarse_groups < 1:
         raise ValueError(f"coarse_groups must be >= 1, got {coarse_groups}")
-    base = vectors.select(
-        F.col(id_col).alias("nn_id"), as_double(vec_col).alias("nv")
+    base = vectors.selectExpr(
+        f"{ch.ident(id_col)} AS nn_id", f"{_as_double_sql(vec_col)} AS nv"
     )
     arrow = _use_arrow(centroids)
     if coarse_groups is None or min(int(coarse_groups), len(centroids)) >= len(
@@ -830,13 +831,14 @@ def assign_lists(
     ):
         if arrow:
             return _arrow_assign(base, _unit_matrix(centroids), None, None)
-        cents_unit = _normalized_centroid_literal(centroids)
-        scored = base.withColumn(
-            "__scores", _score_array(F.col("nv"), cents_unit)
+        # unit centroids, normalized driver-side: the row norm cancels
+        # out of the argmax, so a plain dot ranks identically to cosine
+        # (zero-norm centroids are refused by _unit_matrix)
+        cents_unit = _centroid_literal(_unit_matrix(centroids).tolist())
+        scored = base.selectExpr(
+            "nn_id", "nv", f"{_score_array('nv', cents_unit)} AS __scores"
         )
-        return scored.select(
-            "nn_id", "nv", _argmax_cid(F.col("__scores")).alias("cid")
-        )
+        return scored.selectExpr("nn_id", "nv", f"{_argmax_cid('__scores')} AS cid")
 
     unit = _unit_matrix(centroids)
     members, reps = _coarse_cells(unit, coarse_groups)
@@ -844,41 +846,28 @@ def assign_lists(
         return _arrow_assign(
             base, unit, members, np.array(reps, dtype=np.float64)
         )
-    rep_lit = _centroid_literal(reps)
-    member_vec_lit = F.expr(
-        "array(" + ",".join(
-            "array(" + ",".join(
-                "array(" + ",".join(f"{float(x)!r}D" for x in unit[c]) + ")"
-                for c in m
-            ) + ")"
-            for m in members
-        ) + ")"
+    member_vec_lit = "array(" + ",".join(
+        _centroid_literal([unit[c] for c in m]) for m in members
+    ) + ")"
+    member_cid_lit = "array(" + ",".join(
+        "array(" + ",".join(f"{c}L" for c in m) + ")" for m in members
+    ) + ")"
+    scored = base.selectExpr(
+        "nn_id", "nv", f"{_score_array('nv', _centroid_literal(reps))} AS __gs"
     )
-    member_cid_lit = F.expr(
-        "array(" + ",".join(
-            "array(" + ",".join(f"{c}L" for c in m) + ")" for m in members
-        ) + ")"
-    )
-    scored = base.withColumn("__gs", _score_array(F.col("nv"), rep_lit))
-    picked = scored.select(
+    # gid is 0-based; element_at is 1-based
+    picked = scored.selectExpr(
+        "nn_id", "nv", f"CAST({_argmax_cid('__gs')} + 1 AS INT) AS __g1"
+    ).selectExpr(
         "nn_id",
         "nv",
-        # gid is 0-based; element_at is 1-based
-        (_argmax_cid(F.col("__gs")) + 1).cast("int").alias("__g1"),
-    ).select(
-        "nn_id",
-        "nv",
-        F.element_at(member_cid_lit, F.col("__g1")).alias("__cids"),
-        _score_array(
-            F.col("nv"), F.element_at(member_vec_lit, F.col("__g1"))
-        ).alias("__ms"),
+        f"element_at({member_cid_lit}, __g1) AS __cids",
+        f"{_score_array('nv', f'element_at({member_vec_lit}, __g1)')} AS __ms",
     )
-    return picked.select(
+    return picked.selectExpr(
         "nn_id",
         "nv",
-        F.element_at(
-            F.col("__cids"), (_argmax_cid(F.col("__ms")) + 1).cast("int")
-        ).alias("cid"),
+        f"element_at(__cids, CAST({_argmax_cid('__ms')} + 1 AS INT)) AS cid",
     )
 
 
@@ -981,31 +970,28 @@ def _build_probes(
     )
 
 
-def _best_cids(vec: Column, cents: Column, n: int) -> Column:
+def _best_cids(vec: str, cents: str, n: int) -> str:
     """cids of the n nearest centroids (cos desc, cid asc), as a
     codegen'd expression: zip (dist, cid) structs, sort with a
     comparator, slice.  No join, no window, no shuffle.  Used on the
     QUERY side only (|Q| rows) -- the N-row assignment scan uses the
     O(nlist) argmax in ``assign_lists`` instead of this
     O(nlist log nlist) sort."""
-    scored = F.transform(
-        cents,
-        lambda c, i: F.struct(
-            cosine(vec, c).alias("d"), i.cast("long").alias("cid")
-        ),
+    cos = f"{_dot_sql(vec, 'c')} / nullif({_norm_sql(vec)} * {_norm_sql('c')}, 0D)"
+    scored = (
+        f"transform({cents}, (c, i) -> "
+        f"named_struct('d', {cos}, 'cid', CAST(i AS BIGINT)))"
     )
-    ordered = F.array_sort(
-        scored,
-        lambda a, b: F.when(a["d"] > b["d"], F.lit(-1))
-        .when(a["d"] < b["d"], F.lit(1))
-        .otherwise((a["cid"] - b["cid"]).cast("int")),
+    ordered = (
+        f"array_sort({scored}, (l, r) -> CASE WHEN l.d > r.d THEN -1 "
+        "WHEN l.d < r.d THEN 1 ELSE CAST(l.cid - r.cid AS INT) END)"
     )
-    return F.transform(F.slice(ordered, 1, n), lambda s: s["cid"])
+    return f"transform(slice({ordered}, 1, {int(n)}), s -> s.cid)"
 
 
 def _probe_frame(
     queries: DataFrame,
-    cents: Column,
+    cents: str,
     nprobe: int,
     query_id_col: str,
     vec_col: str,
@@ -1016,35 +1002,38 @@ def _probe_frame(
     would put the higher-order function under the Generate and drop
     the operator to interpreted eval (the verify-skill shingle
     lesson)."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), as_double(vec_col).alias("qv")
+    q = queries.selectExpr(
+        f"{ch.ident(query_id_col)} AS query_id", f"{_as_double_sql(vec_col)} AS qv"
     )
-    return q.select(
-        "query_id",
-        "qv",
-        F.explode(F.sequence(F.lit(1), F.lit(int(nprobe)))).alias("__i"),
-    ).select(
-        "query_id",
-        "qv",
-        F.element_at(
-            _best_cids(F.col("qv"), cents, nprobe), F.col("__i")
-        ).alias("cid"),
+    return q.selectExpr(
+        "query_id", "qv", f"explode(sequence(1, {int(nprobe)})) AS __i"
+    ).selectExpr(
+        "query_id", "qv", f"element_at({_best_cids('qv', cents, nprobe)}, __i) AS cid"
     )
 
 
 def _rank_candidates(probes: DataFrame, assigned: DataFrame, k: int) -> DataFrame:
     """Join probe rows to their lists, score exactly, keep top-k per
-    query (cos desc, neighbor id asc ties)."""
+    query (cos desc, neighbor id asc ties).  Both norms are computed
+    before the join, once per vector rather than once per (query,
+    candidate) pair; the cosine is the same expression."""
     scored = (
-        probes.join(assigned, "cid")
-        .where(F.col("nn_id") != F.col("query_id"))
-        .withColumn("cos", cosine(F.col("nv"), F.col("qv")))
+        probes.selectExpr("*", f"{_norm_sql('qv')} AS qnorm")
+        .join(assigned.selectExpr("*", f"{_norm_sql('nv')} AS nnorm"), "cid")
+        .where("nn_id != query_id")
+        .selectExpr(
+            "query_id",
+            "nn_id",
+            f"{_dot_sql('nv', 'qv')} / nullif(nnorm * qnorm, 0D) AS cos",
+        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("nn_id").asc())
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("nn_id").alias("neighbor_id"), ch.round_to(F.col("cos"), 4).alias("cos"), "rank")
+        scored.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nn_id) AS rank",
+        )
+        .where(f"rank <= {int(k)}")
+        .selectExpr("query_id", "nn_id AS neighbor_id", f"{ch.round_to_sql('cos', 4)} AS cos", "rank")
     )
 
 

@@ -30,27 +30,34 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 LANG_PRIORITY: tuple[str, ...] = ("en", "de", "fr", "ru")
 
 
-def tokens(text: Column | str, lower: bool = True) -> Column:
+def tokens_sql(text: str, lower: bool = True) -> str:
+    """SQL text of :func:`tokens` over the column named ``text``: one
+    parsed string instead of a py4j round trip per composed call."""
+    c = ch.ident(text)
+    if lower:
+        c = f"lower({c})"
+    # null-first: NULL text must behave like '' (yield []), not ride
+    # the ELSE branch into split(NULL) -> size() == -1 (the legacy
+    # sizeOfNull trap -- same bug class the r7 agg_map size guard
+    # fixed)
+    cleaned = f"coalesce(trim(regexp_replace({c}, '[^a-z0-9]+', ' ')), '')"
+    return (
+        f"CASE WHEN length({cleaned}) = 0 THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE split({cleaned}, r'\\s+') END"
+    )
+
+
+def tokens(text: str, lower: bool = True) -> Column:
     """Normalized word tokens: lowercase, strip non-alphanumerics, split.
 
     Exactly mirrored by the oracle SQL
     ``regexp_split_to_array(trim(lower(regexp_replace(text,
     '[^a-z0-9]+', ' ', 'g'))), '\\s+')``.
     """
-    c = F.col(text) if isinstance(text, str) else text
-    if lower:
-        c = F.lower(c)
-    # null-first: NULL text must behave like '' (yield []), not ride
-    # the otherwise-branch into split(NULL) -> size() == -1 (the
-    # legacy sizeOfNull trap -- same bug class the r7 agg_map size
-    # guard fixed)
-    cleaned = F.coalesce(F.trim(F.regexp_replace(c, "[^a-z0-9]+", " ")), F.lit(""))
-    return F.when(F.length(cleaned) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(cleaned, r"\s+")
-    )
+    return F.expr(tokens_sql(text, lower))
 
 
-def token_count(text: Column | str) -> Column:
+def token_count(text: str) -> Column:
     return F.size(tokens(text)).cast("long")
 
 
@@ -121,7 +128,7 @@ def _quality_from(sw: Column, mlen: Column, alnum: Column, n: Column) -> Column:
     )
 
 
-def quality_score(text: Column | str, lang: str = "en") -> Column:
+def quality_score(text: str, lang: str = "en") -> Column:
     """Composite [0,1] quality heuristic: stopword presence (fluency
     proxy), sane mean word length, alphanumeric density, non-trivial
     length.  Fixed arithmetic so the DuckDB oracle can reproduce it
@@ -157,7 +164,7 @@ def _langid_chain(scores: dict[str, Column]) -> Column:
     return best
 
 
-def lang_id(text: Column | str) -> Column:
+def lang_id(text: str) -> Column:
     """Predicted language = argmax of per-language stopword evidence,
     ties broken by LANG_PRIORITY order; 'und' (undetermined) when no
     language scores > 0.  Chained CASE so the oracle SQL is identical."""

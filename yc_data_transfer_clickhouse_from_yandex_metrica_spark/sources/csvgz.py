@@ -18,7 +18,9 @@ Spark mapping:
 from __future__ import annotations
 
 import os
+import re
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,32 +32,45 @@ def insert_csv(df: DataFrame, directory: str, basename: str, compression: str = 
     lands ONE new csv[.gz] file named ``<base>.csv.gz``,
     ``<base>.1.csv.gz``, ``<base>.2.csv.gz``, ... (README.md:145-147).
 
+    Only ever adds objects: the next index is one past the highest
+    among the exact ``<base>[.N]<ext>`` names, each call stages in its
+    own directory, and the hard link that publishes fails rather than
+    replace, so a concurrent insert that took the name first makes
+    this one retry with the next index.
+
     The single-file coalesce is intentional -- the reference's export
     produces one object per INSERT; for large exports use
     ``export_chunked`` which writes per-partition files instead.
     """
     ext = ".csv.gz" if compression == "gzip" else ".csv"
     os.makedirs(directory, exist_ok=True)
-    existing = [f for f in os.listdir(directory) if f.startswith(basename) and f.endswith(ext)]
-    name = f"{basename}{ext}" if not existing else f"{basename}.{len(existing)}{ext}"
-    tmp = os.path.join(directory, f"__tmp_{basename}")
-    (
-        df.coalesce(1)
-        .write.mode("overwrite")
-        .option("header", True)
-        .option("compression", compression)
-        # Spark's CSV sink trims field whitespace by default; ClickHouse
-        # CSV export is byte-faithful — keep raw text intact (r14,
-        # found by the csvgz roundtrip property test)
-        .option("ignoreLeadingWhiteSpace", False)
-        .option("ignoreTrailingWhiteSpace", False)
-        .csv(tmp)
-    )
-    part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-    final = os.path.join(directory, name)
-    shutil.move(os.path.join(tmp, part), final)
-    shutil.rmtree(tmp)
-    return final
+    tmp = tempfile.mkdtemp(prefix=f"__tmp_{basename}.", dir=directory)
+    try:
+        (
+            df.coalesce(1)
+            .write.mode("overwrite")
+            .option("header", True)
+            .option("compression", compression)
+            # Spark's CSV sink trims field whitespace by default; ClickHouse
+            # CSV export is byte-faithful — keep raw text intact (r14,
+            # found by the csvgz roundtrip property test)
+            .option("ignoreLeadingWhiteSpace", False)
+            .option("ignoreTrailingWhiteSpace", False)
+            .csv(tmp)
+        )
+        part = os.path.join(tmp, next(f for f in os.listdir(tmp) if f.startswith("part-")))
+        own = re.compile(re.escape(basename) + r"(?:\.(\d+))?" + re.escape(ext))
+        names = filter(None, map(own.fullmatch, os.listdir(directory)))
+        n = max((int(m.group(1) or 0) + 1 for m in names), default=0)
+        while True:
+            final = os.path.join(directory, f"{basename}.{n}{ext}" if n else basename + ext)
+            try:
+                os.link(part, final)
+                return final
+            except FileExistsError:
+                n += 1
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def export_chunked(
