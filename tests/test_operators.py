@@ -1160,6 +1160,20 @@ def test_simhash_pairs_equal_brute_force_hamming(spark, hash_fn):
     assert got == brute
 
 
+def test_simhash_pairs_max_hamming_zero_is_one_full_chunk(spark):
+    """max_hamming=0 blocks on one 64-bit chunk, the whole hash: exactly
+    the pairs with identical SimHash come back, at distance 0."""
+    texts = ["alpha beta gamma delta", "alpha beta gamma delta",
+             "one two three four five", "alpha beta gamma delta epsilon"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    hashes = {r["id"]: r["sim"] for r in dedup.simhash_hashes(df, "doc_id", "text").collect()}
+    want = {(a, b, 0) for a in hashes for b in hashes if a < b and hashes[a] == hashes[b]}
+    got = {(r["id_a"], r["id_b"], r["hamming"])
+           for r in dedup.simhash_pairs(df, max_hamming=0).collect()}
+    assert (0, 1, 0) in want
+    assert got == want
+
+
 def test_connected_components_chain_and_singletons(spark):
     """A 5-node chain (diameter 4 -- worst case for label propagation),
     a separate pair, and docs in no pair at all."""

@@ -820,7 +820,9 @@ def simhash_pairs(
     nchunks = max_hamming + 1
     width = nbits // nchunks
     docs = simhash_hashes(df, id_col, text_col, nbits, hash_fn=hash_fn)
-    mask = (1 << width) - 1
+    # a 64-bit chunk (max_hamming=0) masks with all bits set: -1, since
+    # 2**64 - 1 is no BIGINT literal
+    mask = (1 << width) - 1 if width < 64 else -1
     structs = ", ".join(
         f"named_struct('ci', {c}, 'cv', shiftrightunsigned(sim, {c * width}) & {mask})"
         for c in range(nchunks)
