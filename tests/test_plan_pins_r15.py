@@ -239,14 +239,6 @@ def test_minhash_lsh_cached_input_computes_state_once(spark):
     )
 
 
-def test_simhash_cached_input_computes_signatures_once(spark):
-    """One signature pass (one token Generate) feeds both sides of the
-    chunk join, whose exchange is reused."""
-    _assert_cached_input_computed_once(
-        spark, dedup.simhash_pairs, "regexp_replace", ["ci", "cv"]
-    )
-
-
 def test_simhash_pigeonhole_join_shape(spark):
     out = dedup.simhash_pairs(_docs(spark))
     fmt = _formatted(out)

@@ -208,14 +208,15 @@ def test_insert_numbering_ignores_prefix_sharing_basenames(spark):
 
 
 def test_concurrent_inserts_under_one_basename_all_land(spark):
-    """Threads inserting under one basename (more threads than cores)
-    each land their own object: separate staging directories, and a
-    publish that retries with the next index instead of replacing."""
+    """Eight threads inserting under one basename each land their own
+    object: separate staging directories, and a publish that retries
+    with the next index instead of replacing.  The short switch
+    interval forces the interleaving."""
     import sys
     import threading
 
     base = tempfile.mkdtemp(prefix="ym_csv_race_")
-    n = 2 * (os.cpu_count() or 2)
+    n = 8
     switch = sys.getswitchinterval()
     try:
         results, errors = [], []

@@ -76,7 +76,7 @@ def test_kernel_bit_identical_on_adversarial_battery(
     expr = base.select(
         "id",
         *[
-            sim.sign_signature(F.col("v"), dim, nplanes, seed=42 + t).alias(
+            sim.sign_signature("v", dim, nplanes, seed=42 + t).alias(
                 f"s{t}"
             )
             for t in range(ntables)
@@ -110,7 +110,7 @@ def _expression_pairs(emb, threshold, dim, nplanes, ntables):
                     F.struct(
                         F.lit(t).alias("tbl"),
                         sim.sign_signature(
-                            F.col("v"), dim, nplanes, seed=42 + t
+                            "v", dim, nplanes, seed=42 + t
                         ).alias("sig"),
                     )
                     for t in range(ntables)
@@ -134,7 +134,7 @@ def _expression_pairs(emb, threshold, dim, nplanes, ntables):
     return (
         cands.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cos", sim.cosine(F.col("va"), F.col("vb")))
+        .withColumn("cos", sim.cosine("va", "vb"))
         .where(F.col("cos") >= F.lit(threshold))
         .select("id_a", "id_b", ch.round_to(F.col("cos"), 4).alias("cos"))
     )

@@ -222,13 +222,6 @@ def round_to(c: ColumnOrName, n: int) -> Column:
     return F.floor(_col(c) * F.lit(p) + F.lit(0.5)) / F.lit(p)
 
 
-def round_to_sql(expr: str, n: int) -> str:
-    """:func:`round_to` as SQL text (``D`` literals: a bare ``0.5``
-    parses as DECIMAL)."""
-    p = float(10**n)
-    return f"floor({expr} * {p!r}D + 0.5D) / {p!r}D"
-
-
 def ident(name: str) -> str:
     """``name`` as a back-quoted SQL identifier."""
     return "`" + name.replace("`", "``") + "`"

@@ -31,9 +31,8 @@ made plan BUILDING a large share of a small pass.
 At interactive sizes a pass is dominated by fixed per-job costs, so
 the pair miners do each piece of per-document work once:
 ``minhash_lsh_pairs`` materializes one per-document state (shingle
-set plus MINs) that both band sides and both verify joins read, and
-``simhash_pairs`` materializes its chunk rows once for both sides of
-its self-join.  ``connected_components`` propagates labels with one
+set plus MINs) that both band sides and both verify joins read.
+``connected_components`` propagates labels with one
 join and one aggregate per round and one job per two-round cycle.
 
 Algorithms (public literature): MinHash resemblance sketches per
@@ -544,7 +543,7 @@ def minhash_lsh_pairs(
     return (
         pairs.selectExpr("id_a", "id_b", f"{inter} / ({union}) AS jaccard")
         .where(f"jaccard >= {float(threshold)!r}D")
-        .selectExpr("id_a", "id_b", f"{ch.round_to_sql('jaccard', 4)} AS jaccard")
+        .withColumn("jaccard", ch.round_to("jaccard", 4))
     )
 
 
@@ -593,11 +592,8 @@ def contamination(
             "row_number() OVER (PARTITION BY bid ORDER BY overlap DESC, tid) AS __rn",
         )
         .where("__rn = 1")
-        .selectExpr(
-            "bid AS bench_id",
-            "tid AS train_id",
-            f"{ch.round_to_sql('overlap', 4)} AS overlap",
-        )
+        .selectExpr("bid AS bench_id", "tid AS train_id", "overlap")
+        .withColumn("overlap", ch.round_to("overlap", 4))
     )
 
 
@@ -827,12 +823,7 @@ def simhash_pairs(
         f"named_struct('ci', {c}, 'cv', shiftrightunsigned(sim, {c * width}) & {mask})"
         for c in range(nchunks)
     )
-    # materialized once (eager checkpoint, one job): on a cached input
-    # each side of the self-join otherwise re-ran the whole signature
-    # lineage, since the two cached scans never share an exchange
-    chunked = docs.selectExpr("id", "sim", f"inline(array({structs}))").localCheckpoint(
-        eager=True
-    )
+    chunked = docs.selectExpr("id", "sim", f"inline(array({structs}))")
     a = chunked.hint("shuffle_hash").alias("a")
     b = chunked.hint("shuffle_hash").alias("b")
     return (

@@ -7,10 +7,11 @@ Two stages run as Arrow numpy kernels instead: the sign-LSH signatures
 reference), and IVF assignment and probing once the centroid set
 passes ``_ARROW_AUTO_ELEMS`` doubles, where a centroid literal stops
 paying for itself and then stops parsing at all (``assign_lists``).
-Size is the only selector.  The literal IVF plans (assignment, probe
-fan-out, candidate ranking) are built from SQL text, one string per
-logical unit, because each composed Column or Python-lambda HOF call
-is a py4j round trip.  Three levels:
+Size is the only selector.  The expressions are built from one SQL
+text form of the vector math (``_dot_sql``/``_norm_sql``/
+``_cosine_sql``), one string per logical unit, because each composed
+Column or Python-lambda HOF call is a py4j round trip; the public
+``as_double``/``cosine`` wrap the same text.  Three levels:
 
 - brute_topk      : exact cosine top-k, query side broadcast.  The
                     correctness baseline; fine when |queries| is small
@@ -43,7 +44,7 @@ from concurrent.futures import ThreadPoolExecutor, as_completed
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -65,25 +66,35 @@ _ARROW_AUTO_ELEMS = 1024
 _CENTROID_SIDECAR = "_centroids.json"
 
 
-def as_double(vec: Column | str) -> Column:
-    v = F.col(vec) if isinstance(vec, str) else vec
-    return F.transform(v, lambda x: x.cast("double"))
+# The vector math, as SQL text: every plan below is built from these
+# strings, one per logical unit, because each composed Column or
+# Python-lambda HOF call is a py4j round trip.  Arguments are SQL
+# expressions (column references or lambda variables).
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def _cosine_sql(a: str, b: str) -> str:
+    return f"{_dot_sql(a, b)} / nullif({_norm_sql(a)} * {_norm_sql(b)}, 0D)"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+def _as_double_sql(vec_col: str) -> str:
+    return f"transform({ch.ident(vec_col)}, x -> CAST(x AS DOUBLE))"
+
+
+def as_double(vec_col: str) -> Column:
+    """The array column ``vec_col`` with every element cast to DOUBLE."""
+    return F.expr(_as_double_sql(vec_col))
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine of the array columns ``a`` and ``b``; NULL for a
+    zero-norm side."""
+    return F.expr(_cosine_sql(ch.ident(a), ch.ident(b)))
 
 
 def brute_topk(
@@ -101,46 +112,49 @@ def brute_topk(
     partition-parallel; per-query ranking is one shuffle on query_id.
     Deterministic tie-break: (cos desc, neighbor id asc).
     """
-    v = vectors.select(
-        F.col(id_col).alias("nn_id"), as_double(vec_col).alias("nv")
-    ).withColumn("nnorm", norm(F.col("nv")))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), as_double(vec_col).alias("qv")
-    ).withColumn("qnorm", norm(F.col("qv")))
+    v = vectors.selectExpr(
+        f"{ch.ident(id_col)} AS nn_id", f"{_as_double_sql(vec_col)} AS nv"
+    ).selectExpr("*", f"{_norm_sql('nv')} AS nnorm")
+    q = queries.selectExpr(
+        f"{ch.ident(query_id_col)} AS query_id", f"{_as_double_sql(vec_col)} AS qv"
+    ).selectExpr("*", f"{_norm_sql('qv')} AS qnorm")
     joined = v.crossJoin(F.broadcast(q))
     if exclude_self:
-        joined = joined.where(F.col("nn_id") != F.col("query_id"))
-    scored = joined.withColumn(
-        "cos",
-        dot(F.col("nv"), F.col("qv"))
-        / F.nullif(F.col("nnorm") * F.col("qnorm"), F.lit(0.0)),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("nn_id").asc())
+        joined = joined.where("nn_id != query_id")
+    return _top_k(joined, k)
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Score candidate pairs (query_id, qv, qnorm, nn_id, nv, nnorm)
+    exactly and keep the top k per query (cos desc, neighbor id asc
+    ties).  The norms come precomputed, once per vector rather than
+    once per pair."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("nn_id").alias("neighbor_id"), ch.round_to(F.col("cos"), 4).alias("cos"), "rank")
+        pairs.selectExpr(
+            "query_id",
+            "nn_id",
+            f"{_dot_sql('nv', 'qv')} / nullif(nnorm * qnorm, 0D) AS cos",
+        )
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nn_id) AS rank",
+        )
+        .where(f"rank <= {int(k)}")
+        .selectExpr("query_id", "nn_id AS neighbor_id", "cos", "rank")
+        .withColumn("cos", ch.round_to("cos", 4))
     )
 
 
-def _hyperplanes(dim: int, nplanes: int, seed: int = 42) -> Column:
-    """Deterministic +-1 hyperplanes as a literal array-of-arrays.
-
-    Built as ONE parsed SQL expression: nplanes*dim per-element
-    ``F.lit`` calls cost a py4j round-trip each (~0.75 s for 16x64,
-    measured -- it made plan CONSTRUCTION dominate dedup_embedding's
-    wall time); the single ``F.expr`` string parses JVM-side in ~5 ms.
-    The ``D`` suffix keeps elements DOUBLE -- bare ``1.0`` parses as
-    DECIMAL(2,1) and would poison downstream arithmetic."""
+def _hyperplanes(dim: int, nplanes: int, seed: int = 42) -> str:
+    """Deterministic +-1 hyperplanes as ONE literal array-of-arrays:
+    nplanes*dim per-element ``F.lit`` calls cost a py4j round-trip
+    each (~0.75 s for 16x64, measured -- it made plan CONSTRUCTION
+    dominate dedup_embedding's wall time)."""
     rng = np.random.RandomState(seed)
-    planes = rng.choice([-1.0, 1.0], size=(nplanes, dim))
-    sql = "array(" + ",".join(
-        "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")" for row in planes
-    ) + ")"
-    return F.expr(sql)
+    return _centroid_literal(rng.choice([-1.0, 1.0], size=(nplanes, dim)))
 
 
-def sign_signature(vec: Column, dim: int, nplanes: int = 16, seed: int = 42) -> Column:
+def sign_signature(vec_col: str, dim: int, nplanes: int = 16, seed: int = 42) -> Column:
     """Sign-LSH signature: integer whose bit j = [dot(vec, plane_j) > 0].
 
     Two vectors that are positive scalar multiples get IDENTICAL
@@ -148,22 +162,21 @@ def sign_signature(vec: Column, dim: int, nplanes: int = 16, seed: int = 42) -> 
     close pairs collide with prob (1 - theta/pi)^nplanes per table.
 
     Expression form (interpreted lambda HOFs: nplanes dots per row,
-    each a dim-length zip_with+fold).  ``signlsh_pairs`` computes the
-    same signatures through the Arrow kernel below (one numpy pass per
-    batch, bit-identical -- the kernel reproduces this fold's exact
-    IEEE operation order); this form stays as the semantic reference
-    and the equality oracle for the kernel's property tests.
+    each a dim-length zip_with+fold) over the DOUBLE array column
+    ``vec_col``.  ``signlsh_pairs`` computes the same signatures
+    through the Arrow kernel below (one numpy pass per batch,
+    bit-identical -- the kernel reproduces this fold's exact IEEE
+    operation order); this form stays as the semantic reference and
+    the equality oracle for the kernel's property tests.
     """
-    planes = _hyperplanes(dim, nplanes, seed)
-    bits = F.transform(
-        planes,
-        lambda p: F.when(dot(vec, p) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
+    bits = (
+        f"transform({_hyperplanes(dim, nplanes, seed)}, p -> "
+        f"CASE WHEN {_dot_sql(ch.ident(vec_col), 'p')} > 0 THEN 1L ELSE 0L END)"
     )
-    return F.aggregate(
-        bits,
-        F.struct(F.lit(0).cast("long").alias("v"), F.lit(1).cast("long").alias("m")),
-        lambda acc, b: F.struct((acc["v"] + b * acc["m"]).alias("v"), (acc["m"] * 2).alias("m")),
-        lambda acc: acc["v"],
+    return F.expr(
+        f"aggregate({bits}, named_struct('v', 0L, 'm', 1L), "
+        "(acc, b) -> named_struct('v', acc.v + b * acc.m, 'm', acc.m * 2), "
+        "acc -> acc.v)"
     )
 
 
@@ -258,7 +271,9 @@ def signlsh_pairs(
     Precision exact (verify step); recall 1.0 for scaled-copy dups and
     1-(1-(1-theta/pi)^nplanes)^ntables for merely-close pairs.
     """
-    base = vectors.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
+    base = vectors.selectExpr(
+        f"{ch.ident(id_col)} AS id", f"{_as_double_sql(vec_col)} AS v"
+    )
     # banded rows carry ONLY (id, tbl, sig): the bucket self-join
     # shuffles 20 bytes/row; vectors are attached per side AFTER the
     # candidate pairs exist (|candidates| << |vectors| x ntables)
@@ -290,14 +305,14 @@ def signlsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
+    va = base.selectExpr("id AS id_a", "v AS va")
+    vb = base.selectExpr("id AS id_b", "v AS vb")
     return (
         cands.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cos", cosine(F.col("va"), F.col("vb")))
-        .where(F.col("cos") >= F.lit(threshold))
-        .select("id_a", "id_b", ch.round_to(F.col("cos"), 4).alias("cos"))
+        .selectExpr("id_a", "id_b", f"{_cosine_sql('va', 'vb')} AS cos")
+        .where(f"cos >= {float(threshold)!r}D")
+        .withColumn("cos", ch.round_to("cos", 4))
     )
 
 
@@ -362,19 +377,6 @@ def _centroid_literal(centroids: list[list[float]]) -> str:
         "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")"
         for row in centroids
     ) + ")"
-
-
-# dot/norm/as_double as SQL text, for the literal IVF plans
-def _dot_sql(a: str, b: str) -> str:
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-
-
-def _norm_sql(a: str) -> str:
-    return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
-
-
-def _as_double_sql(vec_col: str) -> str:
-    return f"transform({ch.ident(vec_col)}, x -> CAST(x AS DOUBLE))"
 
 
 # id(ndarray) -> (weakref to the keyed array, its unit matrix): the
@@ -695,8 +697,8 @@ def _arrow_probe_frame(
                 out[r] = [int(c) for c in row]
         return pd.Series(out)
 
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), as_double(vec_col).alias("qv")
+    q = queries.selectExpr(
+        f"{ch.ident(query_id_col)} AS query_id", f"{_as_double_sql(vec_col)} AS qv"
     )
     return q.select(
         "query_id", "qv", F.explode(_probe(F.col("qv"))).alias("cid")
@@ -977,10 +979,9 @@ def _best_cids(vec: str, cents: str, n: int) -> str:
     QUERY side only (|Q| rows) -- the N-row assignment scan uses the
     O(nlist) argmax in ``assign_lists`` instead of this
     O(nlist log nlist) sort."""
-    cos = f"{_dot_sql(vec, 'c')} / nullif({_norm_sql(vec)} * {_norm_sql('c')}, 0D)"
     scored = (
         f"transform({cents}, (c, i) -> "
-        f"named_struct('d', {cos}, 'cid', CAST(i AS BIGINT)))"
+        f"named_struct('d', {_cosine_sql(vec, 'c')}, 'cid', CAST(i AS BIGINT)))"
     )
     ordered = (
         f"array_sort({scored}, (l, r) -> CASE WHEN l.d > r.d THEN -1 "
@@ -1013,27 +1014,13 @@ def _probe_frame(
 
 
 def _rank_candidates(probes: DataFrame, assigned: DataFrame, k: int) -> DataFrame:
-    """Join probe rows to their lists, score exactly, keep top-k per
-    query (cos desc, neighbor id asc ties).  Both norms are computed
-    before the join, once per vector rather than once per (query,
-    candidate) pair; the cosine is the same expression."""
-    scored = (
+    """Join probe rows to their lists and keep the exact top-k per
+    query (see ``_top_k``); both norms are computed before the join."""
+    return _top_k(
         probes.selectExpr("*", f"{_norm_sql('qv')} AS qnorm")
         .join(assigned.selectExpr("*", f"{_norm_sql('nv')} AS nnorm"), "cid")
-        .where("nn_id != query_id")
-        .selectExpr(
-            "query_id",
-            "nn_id",
-            f"{_dot_sql('nv', 'qv')} / nullif(nnorm * qnorm, 0D) AS cos",
-        )
-    )
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nn_id) AS rank",
-        )
-        .where(f"rank <= {int(k)}")
-        .selectExpr("query_id", "nn_id AS neighbor_id", f"{ch.round_to_sql('cos', 4)} AS cos", "rank")
+        .where("nn_id != query_id"),
+        k,
     )
 
 
@@ -2318,8 +2305,8 @@ def ivf_topk_pruned(
     # guarantee with non-replicated executor blocks (unrecoverable on
     # executor loss, lingering until driver GC across serving batches
     # — r16 advice #2).
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), as_double(vec_col).alias("qv")
+    q = queries.selectExpr(
+        f"{ch.ident(query_id_col)} AS query_id", f"{_as_double_sql(vec_col)} AS qv"
     )
     # limit(cap+1) + length check: ONE evaluation proves the batch is
     # under the cap AND yields the rows (a separate count() would
