@@ -372,7 +372,9 @@ def train_centroids(
 def _centroid_literal(centroids: list[list[float]]) -> str:
     """Centroids as ONE SQL literal array-of-arrays (the _hyperplanes
     lesson: per-element F.lit costs a py4j round trip each; a single
-    SQL string parses JVM-side)."""
+    SQL string parses JVM-side).  The ``D`` suffix keeps elements
+    DOUBLE: a bare ``1.0`` parses as DECIMAL(2,1) and would poison
+    downstream arithmetic."""
     return "array(" + ",".join(
         "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")"
         for row in centroids
