@@ -24,16 +24,18 @@ from pyspark.sql import functions as F
 
 from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import dedup, similarity
 
-# measured: 19, 167, 198, 139 and 110 (1.5x, rounded down); the
-# Column-built forms they replaced measured 121, 2,783, 1,254, 1,387 and
-# 701.  About 58 of each of the last four are the one composed-Column
-# step left, the shared ``ch.round_to`` of the output score.
+# measured: 19, 167, 198, 139, 110 and 171 (1.5x, rounded down); the
+# Column-built forms they replaced measured 121, 2,783, 1,254, 1,387,
+# 701 and 418.  About 58 of each of the last five are the one
+# composed-Column step left, the shared ``ch.round_to`` of the output
+# score.
 BUDGET = {
     "dedup_exact": 28,
     "minhash_lsh_pairs": 250,
     "contamination": 297,
     "ivf_topk": 208,
     "brute_topk": 165,
+    "signlsh_pairs": 256,
 }
 
 
@@ -57,6 +59,7 @@ def builders(spark):
         "contamination": lambda: dedup.contamination(docs, docs),
         "ivf_topk": lambda: similarity.ivf_topk(vecs, queries, k=3, nprobe=2, centroids=cents),
         "brute_topk": lambda: similarity.brute_topk(vecs, queries, k=3),
+        "signlsh_pairs": lambda: similarity.signlsh_pairs(vecs, threshold=0.9, dim=8),
     }
 
 
