@@ -46,7 +46,9 @@ def test_write_table_records_the_inferred_schema(spark, tmp_path):
     )
     back = warehouse.read_table(spark, path)
     inferred = spark.read.parquet(path)
-    assert back.schema == inferred.schema
+    # the inferred schema plus read_table's week mark
+    assert warehouse.unmarked(back.schema) == inferred.schema
+    assert warehouse.week_of(back.schema) == "StartDate"
     assert back.columns[-1] == warehouse.WEEK_COL
     assert back.schema[warehouse.WEEK_COL].dataType == T.DateType()
     assert _rows(back) == _rows(inferred)
@@ -84,7 +86,8 @@ def test_cdc_sinks_record_the_inferred_schema(spark, tmp_path, sink):
     assert warehouse.table_meta(dest)["date_col"] == "d"
     back = warehouse.read_table(spark, dest)
     inferred = spark.read.parquet(dest)
-    assert back.schema == inferred.schema
+    assert warehouse.unmarked(back.schema) == inferred.schema
+    assert warehouse.week_of(back.schema) == "d"
     assert _rows(back) == _rows(inferred)
     assert back.count() == (4 if sink == "append" else 2)
 

@@ -17,10 +17,13 @@ Engine model (both implementations from SURVEY.md ST3):
      each key (window dedup).  Equivalent for all reference
      aggregates; useful to hand plain tools a clean table.
 
-Scale notes: the collapse window shuffles once on the collapse key --
-at 100TB, partition the ledger by to_monday(date) on write so the
-window runs per partition-pruned slice, and prefer the sign algebra
-(pure partial aggregation, no window) whenever the query allows.
+Scale notes: the collapse window shuffles once on the collapse key.
+The warehouse partitions the ledger by to_monday(date) on write, and
+chsql's FINAL keys the collapse by (key, ``_week``) on such a table,
+as ClickHouse collapses within a partition: the query's ``_week``
+bounds then prune the scan below the window, which runs over the
+weeks read only.  Prefer the sign algebra (pure partial aggregation,
+no window) whenever the query allows.
 """
 
 from __future__ import annotations

@@ -82,6 +82,14 @@ vocabulary):
   and all-invalid groups survive with a NULL quantile (the engine's
   NULL-over-NaN rule).
   Adding a family: see ``_rewrite_summap``.
+- week bounds: on a table ``sources/warehouse.read_table`` marked as
+  week-partitioned, a top-level WHERE conjunct bounding its date
+  column by a DATE literal becomes a ``_week`` partition bound --
+  replacing it when the bound falls on a week boundary (``>= Monday``,
+  ``< Monday``, ``<= Sunday``, ``> Sunday``, ``BETWEEN Monday AND
+  Sunday``), added beside it otherwise (equality included).  Spark
+  prunes weeks by it and, for replaced bounds, generates no
+  interval-dependent code (``_week_bounds``).
 - ``PREWHERE`` (CH's scan-stage filter hint) merged into WHERE --
   Catalyst pushes filters to the scan on its own, so the hint costs
   nothing and the semantics (one more conjunct) are identical.
@@ -89,7 +97,10 @@ vocabulary):
   declares the engine metadata CH would read from DDL --
   ``run_sql(..., table_meta={"t": TableMeta(key, version, sign,
   sample_by)})``.  FINAL becomes operators/collapse.collapsed() (the
-  VersionedCollapsingMergeTree read-time collapse); SAMPLE f keeps
+  VersionedCollapsingMergeTree read-time collapse), keyed by (key,
+  ``_week``) on a week-partitioned table -- CH collapses only within a
+  partition -- so the statement's ``_week`` bounds reach the scan below
+  the collapse windows; SAMPLE f keeps
   ``pmod(sample_by, 1e6) < f*1e6`` -- a contiguous, monotone,
   consistent-by-key slice, pushed to the scan.  Undeclared tables
   refuse (including the comma-join and subquery placements Spark
@@ -270,6 +281,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import collapse as _collapse_op
+from ..sources import warehouse as _warehouse
 from .alias import inline_aliases
 
 # ---------------------------------------------------------------------------
@@ -448,6 +460,9 @@ class _SchemaCtx(NamedTuple):
     # array column -> its element type's CH default ('' / typed 0),
     # for out-of-range indexing and LEFT ARRAY JOIN's empty rows
     elem_defaults: Mapping[str, str] = MappingProxyType({})
+    # view -> the date column whose Monday its `_week` partition column
+    # holds (sources/warehouse's week mark), for _week_bounds
+    week_of: Mapping[str, str] = MappingProxyType({})
 
 
 _EMPTY_CTX = _SchemaCtx()
@@ -3620,13 +3635,19 @@ def _rewrite_postfix_indexing(sql: str) -> str:
 _IDENT_BRACKET = re.compile(r"(`[^`]+`|[A-Za-z_][\w]*(?:\.[\w]+)*)\s*\[")
 
 
-def _schema_ctx(tables: dict[str, DataFrame]) -> _SchemaCtx:
-    """One walk over the queried tables' schemas.  A column name two
-    tables share takes the later table's element default."""
+def _schema_ctx(views: dict[str, DataFrame]) -> _SchemaCtx:
+    """One walk over the queried tables' schemas, keyed by view name.
+    A column name two tables share takes the later table's element
+    default."""
     floats, arrays, halfup = set(), set(), set()
     defaults: dict[str, str] = {}
-    for df in tables.values():
-        for f in df.schema.fields:
+    weeks: dict[str, str] = {}
+    for view, df in views.items():
+        schema = df.schema
+        date_col = _warehouse.week_of(schema)
+        if date_col:
+            weeks[view] = date_col
+        for f in schema.fields:
             dt = f.dataType
             if isinstance(dt, T.ArrayType):
                 arrays.add(f.name)
@@ -3646,7 +3667,242 @@ def _schema_ctx(tables: dict[str, DataFrame]) -> _SchemaCtx:
         array_cols=frozenset(arrays),
         halfup_cols=frozenset(halfup),
         elem_defaults=defaults,
+        week_of=weeks,
     )
+
+
+# ---------------------------------------------------------------------------
+# week bounds: a date column's range bounds become `_week` partition bounds
+# ---------------------------------------------------------------------------
+# A week-partitioned table (sources/warehouse) stores toMonday(date) as
+# the `_week` partition column.  Spark prunes directories only for
+# predicates on `_week`, and inlines a date bound's literal into the
+# generated code of the scan's Filter, so every new interval compiles
+# afresh.  A bound on the date column that falls on a week boundary is
+# EXACTLY a bound on `_week` (d >= Monday <=> _week >= Monday; d <=
+# Sunday <=> _week <= that Sunday's Monday; > Sunday / < Monday are
+# the day-shifted forms), and is replaced by it: Spark then evaluates
+# it only as a PartitionFilter.  Any other bound (equality included)
+# keeps its predicate and gains the implied `_week` bound.  Rows with a
+# NULL date have a NULL `_week`, so both forms drop them.
+
+_DATE_LIT = re.compile(
+    r"DATE\s*'(\d{4}-\d{2}-\d{2})'"
+    r"|CAST\s*\(\s*'(\d{4}-\d{2}-\d{2})'\s+AS\s+DATE\s*\)"
+    r"|toDate\s*\(\s*'(\d{4}-\d{2}-\d{2})'\s*\)",
+    re.I,
+)
+_QUAL_COL = re.compile(r"(?:(`[^`]+`|\w+)\s*\.\s*)?(`[^`]+`|\w+)")
+_CONJ_TOKENS = re.compile(r"[()\[\]]|\b(?:CASE|END|AND|OR|BETWEEN)\b", re.I)
+_CMP_OP = re.compile(r">=|<=|==|<>|!=|=|>|<")
+_FLIP = {">=": "<=", "<=": ">=", ">": "<", "<": ">", "=": "="}
+_REL = r"(`[^`]+`|\w+)"
+_FROM_REL = re.compile(rf"{_REL}(?:\s+(?:AS\s+)?{_REL})?", re.I)
+_STAR_SELECT = re.compile(
+    r"\s*SELECT\s+\*(?:\s+EXCEPT\s*\(([^()]*)\))?\s*(?:,|(?=FROM\b))", re.I
+)
+_CLAUSE_AFTER_FROM = re.compile(
+    r"\b(?:WHERE|GROUP|HAVING|ORDER|LIMIT|QUALIFY|UNION|WINDOW)\b", re.I
+)
+
+
+def _scan_mask(s: str) -> str:
+    """``_mask`` plus blanked backticked identifiers (`a and b`)."""
+    return re.sub(r"`[^`]*`", lambda m: "`" + " " * (len(m.group(0)) - 2) + "`", _mask(s))
+
+
+def _unparen(s: str) -> str:
+    s = s.strip()
+    while s.startswith("(") and _match_paren(_scan_mask(s), 0) == len(s) - 1:
+        s = s[1:-1].strip()
+    return s
+
+
+def _conjuncts(body: str) -> list[tuple[int, int]] | None:
+    """Spans of ``body``'s top-level AND conjuncts (a BETWEEN's AND and
+    CASE ... END bodies excluded); None when a top-level OR makes
+    ``body`` no conjunction."""
+    spans, depth, start, between = [], 0, 0, False
+    for m in _CONJ_TOKENS.finditer(_scan_mask(body)):
+        t = m.group(0).upper()
+        if t in ("(", "[", "CASE"):
+            depth += 1
+        elif t in (")", "]", "END"):
+            depth -= 1
+        elif depth == 0:
+            if t == "OR":
+                return None
+            if t == "BETWEEN":
+                between = True
+            elif between:
+                between = False
+            else:
+                spans.append((start, m.start()))
+                start = m.end()
+    spans.append((start, len(body)))
+    return spans
+
+
+def _leaf_conjuncts(body: str, off: int = 0) -> list[tuple[int, int]]:
+    """Absolute spans of the conjuncts of ``body``, parenthesized
+    conjunctions flattened."""
+    out = []
+    for s, e in _conjuncts(body) or []:
+        text = body[s:e]
+        inner = _unparen(text)
+        parts = _conjuncts(inner) if inner != text.strip() else None
+        if parts and len(parts) > 1:
+            at = s + text.index(inner)
+            out.extend(_leaf_conjuncts(inner, off + at))
+        else:
+            out.append((off + s, off + e))
+    return out
+
+
+def _top_level_split(text: str, pat: re.Pattern) -> tuple[str, str, str] | None:
+    """(left, match, right) around the first depth-0 match of ``pat``."""
+    masked = _scan_mask(text)
+    for m in pat.finditer(masked):
+        depth = masked.count("(", 0, m.start()) - masked.count(")", 0, m.start())
+        if depth == 0:
+            return text[: m.start()], m.group(0), text[m.end() :]
+    return None
+
+
+def _date_lit(text: str) -> datetime.date | None:
+    m = _DATE_LIT.fullmatch(_unparen(text))
+    if not m:
+        return None
+    try:
+        return datetime.date.fromisoformat(next(g for g in m.groups() if g))
+    except ValueError:
+        return None
+
+
+def _week_ref(text: str, bind: Mapping[str | None, str]) -> str | None:
+    """The ``_week`` reference standing for ``text`` when ``text`` is a
+    (qualified) column that resolves to a marked table's date column."""
+    m = _QUAL_COL.fullmatch(_unparen(text))
+    if not m:
+        return None
+    qual, name = m.groups()
+    date_col = bind.get(qual.strip("`").lower() if qual else None)
+    if date_col is None or name.strip("`").lower() != date_col.lower():
+        return None
+    return f"{qual}._week" if qual else "_week"
+
+
+def _week_bound(conj: str, bind: Mapping[str | None, str]) -> str | None:
+    """Replacement text for one conjunct: the exact `_week` bound when
+    the date bound is week-aligned, else the implied `_week` bound AND
+    the conjunct; None when the conjunct bounds no marked date column."""
+    text = _unparen(conj)
+    bt = _top_level_split(text, re.compile(r"\bBETWEEN\b", re.I))
+    if bt:
+        week = _week_ref(bt[0], bind)
+        ab = _top_level_split(bt[2], re.compile(r"\bAND\b", re.I))
+        if week is None or ab is None:
+            return None
+        lo, hi = _date_lit(ab[0]), _date_lit(ab[2])
+        if lo is None or hi is None:
+            return None
+        new = f"{week} BETWEEN {_date_sql(_monday(lo))} AND {_date_sql(_monday(hi))}"
+        exact = lo.weekday() == 0 and hi.weekday() == 6
+        return new if exact else f"{new} AND {text}"
+    cmp_ = _top_level_split(text, _CMP_OP)
+    if cmp_ is None:
+        return None
+    left, op, right = cmp_
+    op = "=" if op == "==" else op
+    if op not in _FLIP:
+        return None
+    week, d = _week_ref(left, bind), _date_lit(right)
+    if week is None:
+        week, d, op = _week_ref(right, bind), _date_lit(left), _FLIP[op]
+    if week is None or d is None:
+        return None
+    try:
+        if op == ">":
+            op, d = ">=", d + datetime.timedelta(days=1)
+        elif op == "<":
+            op, d = "<=", d - datetime.timedelta(days=1)
+    except OverflowError:
+        return None
+    new = f"{week} {op} {_date_sql(_monday(d))}"
+    exact = (op == ">=" and d.weekday() == 0) or (op == "<=" and d.weekday() == 6)
+    return new if exact else f"{new} AND {text}"
+
+
+def _monday(d: datetime.date) -> datetime.date:
+    return d - datetime.timedelta(days=d.weekday())
+
+
+def _date_sql(d: datetime.date) -> str:
+    return f"DATE '{d.isoformat()}'"
+
+
+def _week_binding(
+    frm: str, week_of: Mapping[str, str]
+) -> dict[str | None, str]:
+    """Qualifier (lower case; None for an unqualified column) -> date
+    column, when a FROM clause reads one marked table, directly or
+    through ``SELECT *`` subqueries (the ARRAY JOIN hoist) that keep its
+    date column and `_week`.  A join binds nothing."""
+    body = re.sub(r"^FROM\s+", "", _collapse_ws(frm), flags=re.I)
+    if not week_of or not body:
+        return {}
+    one = _FROM_REL.fullmatch(body)
+    if one:
+        rel, alias = (g.strip("`") if g else g for g in one.groups())
+        if rel not in week_of:
+            return {}
+        bind = {None: week_of[rel], rel.lower(): week_of[rel]}
+        if alias:
+            bind[alias.lower()] = week_of[rel]
+        return bind
+    if body.startswith("("):
+        close = _match_paren(_scan_mask(body), 0)
+        am = re.fullmatch(rf"\s*(?:(?:AS\s+)?{_REL})?\s*", body[close + 1 :], re.I)
+        inner = body[1:close]
+        sm = _STAR_SELECT.match(inner)
+        fm = _find_clause(inner, "FROM")
+        if not (am and sm and fm):
+            return {}
+        end = _CLAUSE_AFTER_FROM.search(_scan_mask(inner), fm.end())
+        bind = _week_binding(inner[fm.start() : end.start() if end else None], week_of)
+        date_col = bind.get(None)
+        if date_col is None:
+            return {}
+        # the projection must pass the date column and _week through
+        kept = f"{sm.group(1) or ''} {inner[sm.end() : fm.start()]}"
+        if re.search(rf"(?<![\w.])`?(?:{re.escape(date_col)}|_week)`?(?![\w.])", kept, re.I):
+            return {}
+        out = {None: date_col}
+        if am.group(1):
+            out[am.group(1).strip("`").lower()] = date_col
+        return out
+    return {}
+
+
+def _week_bounds(where_body: str, frm: str, week_of: Mapping[str, str]) -> str:
+    """``where_body`` with each top-level AND conjunct that bounds a
+    marked table's date column by a DATE literal rewritten by
+    _week_bound (section comment).  Unchanged text when none fires."""
+    bind = _week_binding(frm, week_of)
+    if not bind:
+        return where_body
+    out, last = [], 0
+    for s, e in _leaf_conjuncts(where_body):
+        new = _week_bound(where_body[s:e], bind)
+        if new is None:
+            continue
+        text = where_body[s:e]
+        lead = text[: len(text) - len(text.lstrip())]
+        trail = text[len(text.rstrip()) :]
+        out.append(where_body[last:s] + f"{lead}{new}{trail}")
+        last = e
+    out.append(where_body[last:])
+    return "".join(out)
 
 
 _AJ_CLAUSE = re.compile(r"\b(LEFT\s+)?ARRAY\s+JOIN\b", re.I)
@@ -4647,6 +4903,7 @@ def _rewrite_summap(
     sql: str,
     view_cols: dict[str, list[str]] | None = None,
     shared_out: list[tuple[str, str]] | None = None,
+    week_of: Mapping[str, str] = MappingProxyType({}),
 ) -> str:
     """Compile CH's structural aggregates -- the _STRUCT_AGGS families
     (sumMap/minMap/maxMap, topK/topKWeighted, quantile(s)ExactWeighted,
@@ -4704,7 +4961,7 @@ def _rewrite_summap(
     branches = _split_union_all(sql)
     if len(branches) > 1:
         return " UNION ALL ".join(
-            _rewrite_summap(b, view_cols, shared_out) for b in branches
+            _rewrite_summap(b, view_cols, shared_out, week_of) for b in branches
         )
     try:
         spans = _segment(sql)
@@ -4782,6 +5039,8 @@ def _rewrite_summap(
         return out
 
     where_b = _inline(where_b, "WHERE")
+    if where_b:
+        where_b = _week_bounds(where_b, frm, week_of)
     having_b = _inline(having_b, "HAVING")
     gk: list[str] = []
     seen_gk: set[str] = set()
@@ -5383,7 +5642,8 @@ def _apply_decorations(
 ) -> DataFrame:
     """SAMPLE filters first (pure scan predicate, pushes below the
     collapse window), then FINAL collapses -- matching CH, which
-    samples the stored parts and collapses what it read."""
+    samples the stored parts and collapses what it read, each
+    partition on its own."""
     if "sample" in flags:
         if meta is None or not meta.sample_by:
             raise ValueError(
@@ -5410,8 +5670,14 @@ def _apply_decorations(
                 f"or pre-collapse with operators/collapse.collapsed (A11) — "
                 f"or rename the alias if FINAL was meant as a table alias"
             )
+        # CH collapses only within a partition: a week-partitioned
+        # table's FINAL is keyed by (key, _week), which also lets the
+        # statement's _week bounds reach the scan below the windows
+        key = meta.key
+        if _warehouse.week_of(df.schema):
+            key = (*key, _warehouse.WEEK_COL)
         df = _collapse_op.collapsed(
-            df, key=meta.key, version=meta.version, sign=meta.sign
+            df, key=key, version=meta.version, sign=meta.sign
         )
     return df
 
@@ -5476,7 +5742,7 @@ def run_sql(
     if _chjoin._ANY_MOD.search(_mask(sql)):
         sql, tables = _chjoin.compile_strictness_joins(spark, sql, tables)
     sql, decorations = _scan_table_decorations(sql, tables)
-    view_cols: dict[str, list[str]] = {}
+    views: dict[str, DataFrame] = {}
     for i, (name, df) in enumerate(sorted(tables.items(), key=lambda kv: -len(kv[0]))):
         view = f"__chsql_t{i}"
         if name in decorations:
@@ -5484,9 +5750,10 @@ def run_sql(
                 df, name, decorations[name], (table_meta or {}).get(name)
             )
         df.createOrReplaceTempView(view)
-        view_cols[view] = list(df.columns)
+        views[view] = df
         sql = _replace_name(sql, name, view)
-    ctx = _schema_ctx(tables)
+    view_cols = {view: list(df.columns) for view, df in views.items()}
+    ctx = _schema_ctx(views)
     sql = _rewrite_indexing(sql, ctx)
     sql = _rewrite_array_literals(sql)
     sql = _rewrite_postfix_indexing(sql)
@@ -5496,7 +5763,7 @@ def run_sql(
     # the source once per aggregate frame (see _rewrite_summap)
     shared_bases: list[tuple[str, str]] = []
     sql = _rewrite_summap(
-        sql, view_cols, shared_bases if _SHARED_SCAN else None
+        sql, view_cols, shared_bases if _SHARED_SCAN else None, ctx.week_of
     )
 
     def _post_rewrites(text: str) -> str:
@@ -5620,11 +5887,11 @@ def run_sql(
     # separately (tables/rewrites already applied above).
     branches = _split_union_all(sql)
     if len(branches) > 1:
-        out = _compile_single(spark, branches[0], cte_prefix)
+        out = _compile_single(spark, branches[0], cte_prefix, ctx.week_of)
         for b in branches[1:]:
-            out = out.unionAll(_compile_single(spark, b, cte_prefix))
+            out = out.unionAll(_compile_single(spark, b, cte_prefix, ctx.week_of))
         return out
-    return _compile_single(spark, sql, cte_prefix)
+    return _compile_single(spark, sql, cte_prefix, ctx.week_of)
 
 
 def _extract_with(
@@ -5686,12 +5953,16 @@ def _array_join_calls(txt: str | None) -> list[tuple[int, int, str]]:
 
 
 def _compile_single(
-    spark: SparkSession, sql: str, cte_prefix: str = ""
+    spark: SparkSession,
+    sql: str,
+    cte_prefix: str = "",
+    week_of: Mapping[str, str] = MappingProxyType({}),
 ) -> DataFrame:
     """Clause surgery + alias inlining + WITH TOTALS for ONE already
     pre-rewritten SELECT (no comments/params/table names/unions).
     ``cte_prefix`` (a Spark ``WITH name AS (...)`` chain from
-    _extract_with) is prepended to every statement compiled here."""
+    _extract_with) is prepended to every statement compiled here;
+    ``week_of`` (_SchemaCtx) enables _week_bounds on the WHERE."""
 
     def _sql(text: str) -> DataFrame:
         return spark.sql(f"{cte_prefix} {text}" if cte_prefix else text)
@@ -5767,6 +6038,9 @@ def _compile_single(
         return head + inline_aliases(body, aliases)
 
     where, group, having = _inline(where), _inline(group), _inline(having)
+    if where:
+        kw_m = re.match(r"WHERE\s+", where, re.I)
+        where = where[: kw_m.end()] + _week_bounds(where[kw_m.end() :], frm, week_of)
 
     # CH predicate truthiness: WHERE/HAVING accept UInt8 (nonzero =
     # true), so `WHERE notEmpty(x)` is idiomatic CH.  Spark requires
@@ -6289,9 +6563,12 @@ def _split_union_all(sql: str) -> list[str]:
 
 def _s3_frame(spark: SparkSession, dir_: str, schema: T.StructType) -> DataFrame:
     """The S3 table stored under ``dir_``, listed now; a table with no
-    objects yet reads as empty (CH's S3 table over zero objects)."""
+    objects yet reads as empty (CH's S3 table over zero objects).  A
+    schema copied from a warehouse table drops its week mark: the
+    objects' ``_week`` is a plain column, not a partition."""
     from ..sources import csvgz
 
+    schema = _warehouse.unmarked(schema)
     if glob.glob(dir_ + "/*.csv.gz"):
         return csvgz.read_csv(spark, dir_ + "/*.csv.gz", schema)
     return (

@@ -4,8 +4,11 @@ Re-expresses the reference's MergeTree physical declarations as
 Parquet-lake layout:
 
 - ``PARTITION BY toMonday(date)``  (ddl/hits.sql:114, ddl/visits.sql:234)
-    -> Hive-style weekly partition dirs => Catalyst partition pruning
-       for the date-range predicates every reference query carries.
+    -> Hive-style weekly ``_week`` partition dirs.  Catalyst prunes
+       directories only for predicates on ``_week`` itself, not for
+       those on the date column; ``read_table`` marks the pair (below)
+       so plans/chsql turns the charts' date bounds into ``_week``
+       bounds.
 - ``ORDER BY (CounterID, Date, CounterUserIDHash, ...)``
     (ddl/hits.sql:115-118) -> ``sortWithinPartitions`` on write =>
        parquet row-group min/max skipping approximates the primary key.
@@ -28,6 +31,15 @@ schema from the DataFrame it writes, so recording it reads nothing.
 ``read_table`` reads with the recorded schema instead of inferring one
 from parquet footers on every call, and refuses a root without it.
 The sidecar is driver-local file I/O, like compaction's listing.
+
+The week mark: ``read_table`` tags the date column with
+``{"week_col": "_week"}`` (through the read schema) and ``_week`` with
+``{"week_of": <date_col>}`` (``withMetadata``; metadata on a partition
+field of the read schema is dropped by the parquet read).  ``week_of``
+reads the pair back.  Both tags travel with the columns through
+selects, filters and joins; a derived frame that replaces either
+column loses its tag, and then nothing treats ``_week`` as the date
+column's week.
 """
 
 from __future__ import annotations
@@ -44,6 +56,8 @@ from ..functions import ch
 
 WEEK_COL = "_week"
 _META = "_table_meta.json"
+_WEEK_OF = "week_of"  # on _week: the date column it is the Monday of
+_WEEK_COL = "week_col"  # on that date column: "_week"
 
 
 @dataclass
@@ -134,17 +148,48 @@ def write_bucketed(
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read back with the schema recorded at write; the weekly
-    partition column stays available for explicit pruning, and date
-    predicates on it prune directories."""
+    """Read back with the schema recorded at write, the week mark on
+    (module docstring).  Predicates on ``_week`` prune directories;
+    plans/chsql derives them from the date column's bounds."""
     try:
-        schema = table_meta(path)["schema"]
+        meta = table_meta(path)
+        schema = T.StructType.fromJson(meta["schema"])
     except (FileNotFoundError, KeyError):
         raise ValueError(
             f"read_table: {path!r} has no recorded schema ({_META}); "
             "write it with write_table or a streaming/cdc warehouse sink"
         ) from None
-    return spark.read.schema(T.StructType.fromJson(schema)).parquet(path)
+    date_col = meta.get("date_col")
+    if date_col not in schema.names or WEEK_COL not in schema.names:
+        return spark.read.schema(schema).parquet(path)
+    schema[date_col].metadata = {**schema[date_col].metadata, _WEEK_COL: WEEK_COL}
+    df = spark.read.schema(schema).parquet(path)
+    return df.withMetadata(WEEK_COL, {_WEEK_OF: date_col})
+
+
+def week_of(schema: T.StructType) -> str | None:
+    """The DATE column whose Monday ``_week`` holds, when both columns
+    carry ``read_table``'s mark; else None."""
+    if WEEK_COL not in schema.names:
+        return None
+    col = schema[WEEK_COL].metadata.get(_WEEK_OF)
+    if col not in schema.names:
+        return None
+    f = schema[col]
+    if f.metadata.get(_WEEK_COL) != WEEK_COL or not isinstance(f.dataType, T.DateType):
+        return None
+    return col
+
+
+def unmarked(schema: T.StructType) -> T.StructType:
+    """``schema`` without the week mark, for a copy of a table stored
+    where ``_week`` is a plain column (a CSV export)."""
+    return T.StructType([
+        T.StructField(f.name, f.dataType, f.nullable, {
+            k: v for k, v in f.metadata.items() if k not in (_WEEK_OF, _WEEK_COL)
+        })
+        for f in schema.fields
+    ])
 
 
 def table_meta(path: str) -> dict:
