@@ -206,20 +206,23 @@ def dotted_nested_view(visits: DataFrame) -> DataFrame:
     """
     from pyspark.sql import types as T
 
-    # ONE projection (a withColumn per field re-analyses the whole plan
-    # each time): the other columns in place, then each group's dotted
-    # arrays in field order
+    def q(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    # ONE projection of SQL text (a withColumn per field re-analyses the
+    # whole plan each time; a Python-lambda F.transform per field costs
+    # ~25 py4j round trips): the other columns in place, then each
+    # group's dotted arrays in field order
     plain, dotted = [], []
     for f in visits.schema.fields:
         if isinstance(f.dataType, T.ArrayType) and isinstance(
             f.dataType.elementType, T.StructType
         ):
             for sub in f.dataType.elementType.fields:
-                # NB: a two-arg lambda would receive transform's
-                # (element, index) convention -- bind the name outside
-                getter = (lambda s: lambda e: e[s])(sub.name)
-                name = f"{f.name}.{sub.name}"
-                dotted.append(F.transform(F.col(f.name), getter).alias(name))
+                dotted.append(
+                    f"transform({q(f.name)}, __e -> __e.{q(sub.name)})"
+                    f" AS {q(f'{f.name}.{sub.name}')}"
+                )
         else:
-            plain.append(F.col("`" + f.name.replace("`", "``") + "`"))
-    return visits.select(*plain, *dotted)
+            plain.append(q(f.name))
+    return visits.selectExpr(*plain, *dotted)
