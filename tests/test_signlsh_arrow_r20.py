@@ -86,7 +86,7 @@ def test_kernel_bit_identical_on_adversarial_battery(
     got = base.select(
         "id",
         *[
-            F.element_at(kern(F.col("v")), t + 1).alias(f"s{t}")
+            F.element_at(kern("v"), t + 1).alias(f"s{t}")
             for t in range(ntables)
         ],
     )

@@ -185,7 +185,8 @@ def _sign_signatures_kernel(
 ):
     """Arrow kernel: all ``ntables`` sign-LSH signatures of a vector in
     one vectorized pass -- ``array<long>`` of length ntables, table t
-    seeded ``seed0 + t`` exactly like the expression path.
+    seeded ``seed0 + t`` exactly like the expression path.  Returns a
+    function of the vector column's NAME (its NULL guard is SQL text).
 
     Bit-identical to :func:`sign_signature` by construction:
 
@@ -242,16 +243,16 @@ def _sign_signatures_kernel(
             )
             yield pd.Series(list(sig))
 
-    def call(vec: Column) -> Column:
+    def call(vec_col: str) -> Column:
         # NULL-element vectors fold to SQL NULL in the expression form
         # (signature 0); normalize them to a NULL vector here so the
         # kernel's ok-mask handles them (Arrow would deliver the NULL
         # elements as NaN, which signs 1 under the NaN rule above)
-        clean = F.when(
-            F.exists(vec, lambda x: x.isNull()),
-            F.lit(None).cast("array<double>"),
-        ).otherwise(vec)
-        return _sigs(clean)
+        v = ch.ident(vec_col)
+        return _sigs(F.expr(
+            f"CASE WHEN exists({v}, x -> x IS NULL) "
+            f"THEN CAST(NULL AS array<double>) ELSE {v} END"
+        ))
 
     return call
 
@@ -285,8 +286,8 @@ def signlsh_pairs(
     # HOF, so sitting under the Generate is safe: ArrowEvalPython
     # materializes the array column before the explode consumes it.
     kern = _sign_signatures_kernel(dim, nplanes, ntables, seed0=42)
-    sigs = base.select(
-        "id", F.posexplode(kern(F.col("v"))).alias("tbl", "sig")
+    sigs = base.select("id", kern("v").alias("sigs")).selectExpr(
+        "id", "posexplode(sigs) AS (tbl, sig)"
     )
     # shuffle_hash on BOTH sides: broadcast would compute the signature
     # lineage twice (build + probe); the shuffled join materializes the
@@ -296,13 +297,8 @@ def signlsh_pairs(
     a = sigs.hint("shuffle_hash").alias("a")
     b = sigs.hint("shuffle_hash").alias("b")
     cands = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        a.join(b, F.expr("a.tbl = b.tbl AND a.sig = b.sig AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
     va = base.selectExpr("id AS id_a", "v AS va")
