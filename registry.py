@@ -4039,7 +4039,9 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket index floor(quality*4) is exact because multiplying a
     # double by 4 is a power-of-two scaling (no rounding), so
     # floor(q*4) >= 3 iff q >= 0.75 and >= 2 iff q >= 0.5, the same
-    # comparisons the stratum CASE makes.
+    # comparisons the stratum CASE makes.  A NULL doc_id counts as
+    # residue 9, so only 'hi' keeps it, as the oracle's OR spelling
+    # does (a bare NULL comparison would drop it).
     keep_width = F.element_at(
         F.array(F.lit(1), F.lit(3), F.lit(10)),
         (
@@ -4050,7 +4052,9 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             + 1
         ).cast("int"),
     )
-    kept = scored.where(F.pmod(F.col("doc_id"), F.lit(10)) < keep_width)
+    kept = scored.where(
+        F.coalesce(F.pmod(F.col("doc_id"), F.lit(10)), F.lit(9)) < keep_width
+    )
     packed = packing.pack_sequences(
         kept, "doc_id", "n_tokens", budget=2048, nshards=8,
         shard_expr=F.pmod(F.col("doc_id"), F.lit(8)),
