@@ -3789,7 +3789,7 @@ def _week_ref(text: str, bind: Mapping[str | None, str]) -> str | None:
     date_col = bind.get(qual.strip("`").lower() if qual else None)
     if date_col is None or name.strip("`").lower() != date_col.lower():
         return None
-    return f"{qual}._week" if qual else "_week"
+    return f"{qual}.{_warehouse.WEEK_COL}" if qual else _warehouse.WEEK_COL
 
 
 def _week_bound(conj: str, bind: Mapping[str | None, str]) -> str | None:
@@ -3875,7 +3875,8 @@ def _week_binding(
             return {}
         # the projection must pass the date column and _week through
         kept = f"{sm.group(1) or ''} {inner[sm.end() : fm.start()]}"
-        if re.search(rf"(?<![\w.])`?(?:{re.escape(date_col)}|_week)`?(?![\w.])", kept, re.I):
+        names = f"{re.escape(date_col)}|{_warehouse.WEEK_COL}"
+        if re.search(rf"(?<![\w.])`?(?:{names})`?(?![\w.])", kept, re.I):
             return {}
         out = {None: date_col}
         if am.group(1):

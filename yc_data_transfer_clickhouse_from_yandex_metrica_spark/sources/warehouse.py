@@ -159,9 +159,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
             f"read_table: {path!r} has no recorded schema ({_META}); "
             "write it with write_table or a streaming/cdc warehouse sink"
         ) from None
-    date_col = meta.get("date_col")
-    if date_col not in schema.names or WEEK_COL not in schema.names:
-        return spark.read.schema(schema).parquet(path)
+    date_col = meta["date_col"]
     schema[date_col].metadata = {**schema[date_col].metadata, _WEEK_COL: WEEK_COL}
     df = spark.read.schema(schema).parquet(path)
     return df.withMetadata(WEEK_COL, {_WEEK_OF: date_col})
@@ -293,7 +291,7 @@ def read_table_tiered(
 ) -> DataFrame:
     """Union view over the hot and cold tiers produced by
     ``apply_ttl(action="move")``.  Both tiers keep the ``_week=``
-    Hive layout, so date predicates prune directories in BOTH roots;
+    Hive layout, so ``_week`` predicates prune directories in BOTH roots;
     a missing/empty tier on EITHER side degrades to the other alone
     (a TTL whose cutoff ages out every week leaves the hot root with
     only the meta sidecar — found by the r14 TTL property test).
