@@ -21,7 +21,6 @@ oracle -- the driver records a rows-only check for those, by design.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import tempfile
@@ -897,31 +896,6 @@ SELECT query_id, neighbor_id, floor((c) * 10000.0 + 0.5) / 10000.0 AS cos,
 FROM scored
 QUALIFY rank <= 10
 """
-
-
-def q_ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted-IVF serving LIFECYCLE end-to-end (r16 verdict #3):
-    ``write_ivf_index`` builds the cid-partitioned index (pinned
-    centroids + ``_centroids.json`` sidecar) to a scratch dir, then
-    ``ivf_topk_pruned`` serves WITHOUT explicit centroids — they load
-    from the sidecar, exercising the only-correct-cid-space guarantee —
-    with the probed-cid set landing as a partition filter on the index
-    scan.  Results are definitionally identical to ``ann_ivf_topk``
-    (same pinned centroids, same probe selection, same exact
-    rescoring), so it shares the closed-form DuckDB oracle."""
-    _prep(spark)
-    emb = t(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # scratch path keyed by (sf_dir, pid): stable WITHIN a process so
-    # repeated calls overwrite instead of leaking a dir per call, and
-    # process-private so a concurrent harness/bench pair on the same
-    # sf_dir cannot overwrite an index mid-read (r17 review)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"{tempfile.gettempdir()}/ym_ann_ivf_served_{tag}_{os.getpid()}"
-    similarity.write_ivf_index(emb, _IVF_CENTROIDS, path)
-    return similarity.ivf_topk_pruned(spark, path, queries_df, k=10, nprobe=4)
 
 
 def q_ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4977,7 +4951,6 @@ QUERIES: dict[str, QuerySpec] = {
     "ann_brute_topk": QuerySpec(q_ann_brute, _ORACLE_ANN_BRUTE, "similarity/brute-cosine-topk"),
     "ann_ivf_topk": QuerySpec(q_ann_ivf, _ORACLE_ANN_IVF, "similarity/ivf, pinned centroids -> closed-form oracle"),
     "ann_ivf_exhaustive": QuerySpec(q_ann_ivf_exhaustive, _ORACLE_ANN_BRUTE, "similarity/ivf nprobe==nlist == exact brute top-k"),
-    "ann_ivf_served": QuerySpec(q_ann_ivf_served, _ORACLE_ANN_IVF, "r17: persisted write_ivf_index + sidecar-loaded ivf_topk_pruned serving == the same closed-form oracle"),
     "text_stats": QuerySpec(q_text_stats, _ORACLE_TEXT_STATS, "text/quality+langid+tokens"),
     "repetition_stats": QuerySpec(q_repetition_stats, _ORACLE_REPETITION, "text/repetition (Gopher-style filters)"),
     "ch_aggregates": QuerySpec(q_ch_aggregates, _ORACLE_CH_AGGREGATES, "F-ext: argMax/argMin countIf/sumIf/avgIf groupUniqArray"),

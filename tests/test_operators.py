@@ -1610,8 +1610,8 @@ def test_ivf_degenerate_param_refusals(spark):
     """r16 review closures: the degenerate parameters that previously
     crashed deep inside Spark (sequence(1,0) -> element_at(0)) or
     numpy (argmax of empty) now refuse with typed errors — nprobe < 1
-    in both query paths, coarse_groups < 1 in the index build, and
-    empty centroid lists everywhere."""
+    in the query path, coarse_groups < 1 in the index build, and
+    empty centroid lists."""
     import pytest
 
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
@@ -1624,172 +1624,10 @@ def test_ivf_degenerate_param_refusals(spark):
     cents = [[1.0, 0.0], [0.0, 1.0]]
     with pytest.raises(ValueError, match="nprobe"):
         similarity.ivf_topk(vecs, qs, k=1, nprobe=0, centroids=cents)
-    with pytest.raises(ValueError, match="nprobe"):
-        similarity.ivf_topk_pruned(spark, "/nope", qs, cents, nprobe=0)
     with pytest.raises(ValueError, match="coarse_groups"):
         similarity.assign_lists(vecs, cents, coarse_groups=0)
     with pytest.raises(ValueError, match="empty centroid"):
         similarity.assign_lists(vecs, [])
-    with pytest.raises(ValueError, match="empty centroids"):
-        similarity.ivf_topk_pruned(spark, "/nope", qs, [])
-
-
-def test_ivf_pruned_empty_query_batch(spark):
-    """An empty query batch against a persisted index: the probed-cid
-    set is empty, the isin([]) predicate prunes everything, and the
-    result is zero rows with the stable output schema (no crash on
-    the empty-collect edge)."""
-    import shutil
-    import tempfile
-
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
-
-    vecs = spark.createDataFrame(
-        [(i, [float(i % 3), 1.0]) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    cents = [[1.0, 0.0], [0.0, 1.0]]
-    base = tempfile.mkdtemp(prefix="ym_ivf_emptyq_")
-    try:
-        similarity.write_ivf_index(vecs, cents, f"{base}/idx")
-        empty_q = vecs.where(F.lit(False)).selectExpr(
-            "vec_id AS query_id", "embedding"
-        )
-        out = similarity.ivf_topk_pruned(
-            spark, f"{base}/idx", empty_q, cents, k=3, nprobe=2
-        )
-        assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
-        assert out.count() == 0
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_ivf_pruned_index_scan_reads_probed_lists_only(spark):
-    """write_ivf_index + ivf_topk_pruned (r16 serving layout): the
-    persisted index is partitioned by cid and the probed-cid predicate
-    must prune at the SCAN — the query reads only the probed list
-    directories (~nprobe/nlist of the index bytes) — while returning
-    exactly the ivf_topk(assigned=...) result."""
-    import shutil
-    import tempfile
-
-    import numpy as np
-
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
-
-    rng = np.random.RandomState(23)
-    rows = [(i, [float(x) for x in rng.normal(size=12)]) for i in range(400)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = vecs.where(F.col("vec_id") % 100 == 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = similarity.train_centroids(vecs, nlist=16)
-    base = tempfile.mkdtemp(prefix="ym_ivf_index_")
-    try:
-        path = f"{base}/index"
-        similarity.write_ivf_index(vecs, cents, path)
-
-        pruned = similarity.ivf_topk_pruned(
-            spark, path, qs, cents, k=6, nprobe=2
-        )
-        served = similarity.ivf_topk(
-            vecs, qs, k=6, nprobe=2, centroids=cents,
-            assigned=similarity.assign_lists(vecs, cents),
-        )
-        as_set = lambda df: {tuple(r) for r in df.collect()}
-        assert as_set(pruned) == as_set(served)
-
-        # the probed-cid predicate must land as a PARTITION filter on
-        # the index scan (dir-level pruning), not a post-scan Filter
-        cids = {
-            r["cid"]
-            for r in similarity._probe_frame(
-                qs, similarity._centroid_literal(cents), 2,
-                "query_id", "embedding",
-            ).select("cid").distinct().collect()
-        }
-        assert 0 < len(cids) < len(cents)  # pruning is non-trivial here
-        probed_index = spark.read.parquet(path).where(
-            F.col("cid").isin(sorted(cids))
-        )
-        probed_index.collect()
-        jqe = probed_index._jdf.queryExecution()
-        fmt = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-            jqe, "formatted"
-        )
-        import re as _re
-
-        m = _re.search(r"PartitionFilters: \[([^\]]*)\]", fmt)
-        assert m and "cid" in m.group(1), fmt[:2000]
-        # and the scan's data filters must NOT need cid (it is purely
-        # a partition column): PushedFilters carries no cid term
-        pf = _re.search(r"PushedFilters: \[([^\]]*)\]", fmt)
-        assert pf is None or "cid" not in pf.group(1), fmt[:2000]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_ivf_centroid_sidecar_lifecycle(spark):
-    """r17 (r16 advice #1): write_ivf_index persists the build
-    centroids as a _centroids.json sidecar inside the index dir;
-    ivf_topk_pruned loads them when centroids=None (the serving
-    default), accepts matching explicit centroids, and REFUSES a
-    mismatched list — the silent-recall-loss foot-gun.  A pre-sidecar
-    index (sidecar deleted) still serves with explicit centroids but
-    refuses a list too small to address the persisted cid dirs."""
-    import os
-
-    import numpy as np
-
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
-
-    rng = np.random.RandomState(7)
-    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(120)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = vecs.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = similarity.train_centroids(vecs, nlist=6)
-    base = tempfile.mkdtemp(prefix="ym_ivf_sidecar_")
-    try:
-        path = f"{base}/idx"
-        similarity.write_ivf_index(vecs, cents, path)
-        sidecar = os.path.join(path, "_centroids.json")
-        assert os.path.exists(sidecar)
-        loaded_cents = similarity.read_centroid_sidecar(spark, path)
-        # r18: the sidecar cache hands back a compact float64 ndarray
-        # (advice r17 #3), value-equal to the build centroids
-        assert isinstance(loaded_cents, np.ndarray)
-        assert loaded_cents.tolist() == [
-            [float(x) for x in row] for row in cents
-        ]
-
-        as_set = lambda df: {tuple(r) for r in df.collect()}
-        explicit = similarity.ivf_topk_pruned(spark, path, qs, cents, k=4, nprobe=2)
-        loaded = similarity.ivf_topk_pruned(spark, path, qs, k=4, nprobe=2)
-        assert as_set(explicit) == as_set(loaded) and len(as_set(loaded))
-
-        foreign = [[float(x) for x in row] for row in cents]
-        foreign[0] = [v + 0.25 for v in foreign[0]]
-        with pytest.raises(ValueError, match="sidecar"):
-            similarity.ivf_topk_pruned(spark, path, qs, foreign, k=4, nprobe=2)
-
-        # pre-sidecar index: explicit centroids still serve; a list
-        # shorter than the persisted cid space refuses via the max-cid
-        # directory-listing guard; centroids=None has nothing to load
-        os.remove(sidecar)
-        assert as_set(
-            similarity.ivf_topk_pruned(spark, path, qs, cents, k=4, nprobe=2)
-        ) == as_set(explicit)
-        assert similarity._persisted_cids(spark, path) == sorted(
-            {r["cid"] for r in similarity.assign_lists(vecs, cents).select("cid").distinct().collect()}
-        )
-        with pytest.raises(ValueError, match="cid="):
-            similarity.ivf_topk_pruned(spark, path, qs, cents[:2], k=4, nprobe=2)
-        with pytest.raises(ValueError, match="sidecar"):
-            similarity.ivf_topk_pruned(spark, path, qs, k=4, nprobe=2)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def test_ivf_assigned_with_empty_centroid_list_refuses(spark):
@@ -1807,43 +1645,6 @@ def test_ivf_assigned_with_empty_centroid_list_refuses(spark):
     idx = similarity.assign_lists(vecs, [[1.0, 0.0], [0.0, 1.0]])
     with pytest.raises(ValueError, match="empty centroids alongside"):
         similarity.ivf_topk(vecs, qs, k=1, centroids=[], assigned=idx)
-
-
-def test_ivf_append_equals_full_rebuild(spark):
-    """r17: append_ivf_index grows a persisted index batch-by-batch in
-    the SAME cid space (sidecar centroids), so serving over
-    build(first half) + append(second half) returns exactly the
-    results of serving over a one-shot full build — and appending to
-    a sidecar-less directory refuses (foreign-centroid corruption
-    guard)."""
-    import numpy as np
-
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
-
-    rng = np.random.RandomState(29)
-    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(240)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    first = vecs.where(F.col("vec_id") < 120)
-    second = vecs.where(F.col("vec_id") >= 120)
-    qs = vecs.where(F.col("vec_id") % 60 == 7).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = similarity.train_centroids(first, nlist=6)
-    base = tempfile.mkdtemp(prefix="ym_ivf_append_")
-    try:
-        grown, full = f"{base}/grown", f"{base}/full"
-        similarity.write_ivf_index(first, cents, grown)
-        similarity.append_ivf_index(second, grown)
-        similarity.write_ivf_index(vecs, cents, full)
-        as_set = lambda df: {tuple(r) for r in df.collect()}
-        g = as_set(similarity.ivf_topk_pruned(spark, grown, qs, k=5, nprobe=3))
-        f = as_set(similarity.ivf_topk_pruned(spark, full, qs, k=5, nprobe=3))
-        assert g == f and len(g)
-
-        with pytest.raises(ValueError, match="sidecar"):
-            similarity.append_ivf_index(second, f"{base}/nowhere")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def test_ivf_arrow_assignment_matches_literal(spark):
@@ -1896,12 +1697,13 @@ def test_ivf_arrow_assignment_matches_literal(spark):
     assert similarity._use_arrow([[0.0] * 1024] * 65536) is True
 
 
-def test_ivf_arrow_probe_serving_matches_literal(spark):
+def test_ivf_arrow_probe_serving_matches_literal(spark, monkeypatch):
     """r17: the broadcast probe + assignment return exactly the
     literal-path results of ivf_topk — same probe selection, same
-    rescoring — and ivf_topk_pruned agrees with ivf_topk on either
-    side of the size rule (a small centroid set serves in literal
-    form, one past _ARROW_AUTO_ELEMS in Arrow form)."""
+    rescoring — on either side of the size rule: a small centroid set
+    run through the Arrow helpers directly, and ivf_topk over one past
+    _ARROW_AUTO_ELEMS (Arrow form) against the same call with the
+    crossover raised so it takes the literal form."""
     import numpy as np
 
     from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
@@ -1939,17 +1741,10 @@ def test_ivf_arrow_probe_serving_matches_literal(spark):
     )
     assert lit == arr and len(lit)
     big_topk = as_set(similarity.ivf_topk(vecs, qs, k=5, nprobe=3, centroids=big))
-    assert len(big_topk)
-
-    base = tempfile.mkdtemp(prefix="ym_ivf_arrow_")
-    try:
-        for c, want in ((cents, lit), (big, big_topk)):
-            path = f"{base}/idx{len(c)}"
-            similarity.write_ivf_index(vecs, c, path)
-            pruned = as_set(similarity.ivf_topk_pruned(spark, path, qs, k=5, nprobe=3))
-            assert pruned == want
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    monkeypatch.setattr(similarity, "_ARROW_AUTO_ELEMS", 10**9)
+    assert not similarity._use_arrow(big)
+    big_lit = as_set(similarity.ivf_topk(vecs, qs, k=5, nprobe=3, centroids=big))
+    assert big_topk == big_lit and len(big_lit)
 
 
 # --------------------------------------------------------------------------

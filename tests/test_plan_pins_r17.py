@@ -1,6 +1,5 @@
 """Executed-plan pins, round 17: the broadcast-UDF (Arrow) IVF paths
-added for the r16 advice #4 closure, and the serving path's
-driver-local probe frame (advice #2 closure).
+added for the r16 advice #4 closure.
 
 What must stay true at 100 TB:
 
@@ -9,13 +8,6 @@ What must stay true at 100 TB:
   ArrowEvalPython stage over the scan, zero Exchange — exactly like
   the literal-path pin (test_ivf_assignment_is_map_side).  The whole
   point of the index build is that it never shuffles N rows.
-- ``ivf_topk_pruned``'s probe side is a LocalTableScan (the bounded
-  |Q| x nprobe collect rebuilt driver-side): the index path must be
-  scanned EXACTLY ONCE in the serving plan, with the probed-cid
-  PartitionFilters on it — no second scan hiding behind the probe
-  frame's lineage (the r16 localCheckpoint gave the same guarantee
-  via executor blocks; the r17 form must give it via a local
-  relation).
 
 Same discipline as test_plan_pins_r14/r15/r16: pins read the FINAL
 adaptive plan after ``collect()`` on multi-partition inputs.
@@ -23,12 +15,10 @@ adaptive plan after ``collect()`` on multi-partition inputs.
 
 from __future__ import annotations
 
-import re
 import shutil
 import tempfile
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from test_plan_pins_r15 import _final_nodes, _final_tree, _formatted
 from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import similarity
@@ -88,36 +78,5 @@ def test_arrow_two_level_assign_is_map_side(spark):
         )
         tree = _final_tree(fmt)
         assert "ArrowEvalPython" in tree and "Exchange" not in tree, tree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_pruned_serving_scans_index_exactly_once(spark):
-    """The serving plan's probe side is a local relation (the bounded
-    driver-side collect), so the persisted index path appears as
-    EXACTLY ONE parquet scan — carrying the probed-cid
-    PartitionFilters — and the only other leaf is the local probe
-    frame.  A regression that re-derives probes from the index (or
-    scans it twice) would double the at-scale read cost."""
-    vecs = _vectors(spark, n=400, seed=7)
-    qs = vecs.where(F.col("vec_id") % 100 == 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = similarity.train_centroids(vecs, nlist=8)
-    base = tempfile.mkdtemp(prefix="ym_pin17_")
-    try:
-        path = f"{base}/idx"
-        similarity.write_ivf_index(vecs, cents, path)
-        served = similarity.ivf_topk_pruned(spark, path, qs, k=4, nprobe=2)
-        fmt = _formatted(served)
-        tree = _final_tree(fmt)
-        # exactly one file scan in the whole serving plan -- the index,
-        # carrying the probed-cid partition filter
-        assert tree.count("Scan parquet") == 1, tree
-        m = re.search(r"PartitionFilters: \[([^\]]*)\]", fmt)
-        assert m and "cid" in m.group(1), fmt[:2000]
-        # the probe side is a driver-local relation, not a lineage that
-        # could re-derive (and re-scan) anything
-        assert "LocalTableScan" in tree or "Scan ExistingRDD" in tree, tree
     finally:
         shutil.rmtree(base, ignore_errors=True)

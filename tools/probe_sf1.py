@@ -29,7 +29,6 @@ TOP8 = [
     "dedup_ngram_jaccard",
     "dedup_clusters",
     "dedup_keep_best",
-    "ann_ivf_served",
     "streaming_neardup",
 ]
 

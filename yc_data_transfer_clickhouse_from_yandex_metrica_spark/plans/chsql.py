@@ -403,18 +403,66 @@ def _sub_outside_literals(
     return "".join(out)
 
 
+# keywords that end a FROM list at their paren depth
+_NON_FROM_CLAUSES = frozenset(
+    "SELECT WHERE PREWHERE GROUP ORDER HAVING LIMIT UNION INTERSECT "
+    "EXCEPT WINDOW QUALIFY SETTINGS FORMAT WITH VALUES".split()
+)
+_SQL_TOKEN = re.compile(r"[(),.]|`[^`]*`|\w+")
+_DOT_NEXT = re.compile(r"\s*\.")
+
+
+def _table_slots(masked: str, name: str) -> list[re.Match]:
+    """Occurrences of the plain identifier ``name`` in ``masked`` SQL
+    where a table reference can stand: the relation right after FROM
+    or JOIN (not ARRAY JOIN, whose operand is a column; not IS
+    DISTINCT FROM), the relation after a comma of a FROM list, and a
+    ``name.`` qualifier.  State is kept per paren depth, so a
+    subquery's FROM list is its own."""
+    out = []
+    in_from, slot = [False], [False]
+    prev = ""
+    for m in _SQL_TOKEN.finditer(masked):
+        tok = m.group(0)
+        up = tok.upper()
+        if tok == "(":
+            slot[-1] = False
+            in_from.append(False)
+            slot.append(False)
+        elif tok == ")":
+            if len(in_from) > 1:
+                in_from.pop()
+                slot.pop()
+        elif tok == ",":
+            slot[-1] = in_from[-1]
+        elif up in ("FROM", "JOIN"):
+            in_from[-1] = slot[-1] = prev not in ("DISTINCT", "ARRAY")
+        elif up in _NON_FROM_CLAUSES:
+            in_from[-1] = slot[-1] = False
+        else:
+            if tok == name and prev != "." and (
+                slot[-1] or _DOT_NEXT.match(masked, m.end())
+            ):
+                out.append(m)
+            slot[-1] = False
+        prev = up
+    return out
+
+
 def _replace_name(sql: str, name: str, repl: str) -> str:
-    """Replace a table name: word-boundary-anchored when the name is a
-    plain identifier (a table named ``t`` must not rewrite the ``t``
-    inside ``countIf``), literal otherwise (backticked / dotted /
-    placeholder spellings can't collide with identifiers).  Matches
-    are located on the MASKED text so occurrences inside string
-    literals survive verbatim (a table named ``t`` must not corrupt
-    ``'(?t<=3600)'`` or ``WHERE s = 'a t b'``)."""
+    """Replace a table name.  A plain identifier is replaced only where
+    a table can stand (``_table_slots``): a select alias, an ORDER BY
+    name or a column that spells the table's name keeps its text
+    (``count(1) AS hits FROM hits`` stays a column named ``hits``),
+    and a table named ``t`` leaves the ``t`` inside ``countIf`` alone.
+    Matches are located on the MASKED text so occurrences inside
+    string literals survive verbatim (a table named ``t`` must not
+    corrupt ``'(?t<=3600)'`` or ``WHERE s = 'a t b'``).  Other
+    spellings (backticked / dotted / placeholder) can't collide with
+    identifiers and are replaced literally."""
     if re.fullmatch(r"\w+", name):
-        masked = _mask(sql)
         out, last = [], 0
-        for m in re.finditer(rf"(?<![\w`]){re.escape(name)}(?![\w`])", masked):
+        for m in _table_slots(_mask(sql), name):
             out.append(sql[last : m.start()])
             out.append(repl)
             last = m.end()

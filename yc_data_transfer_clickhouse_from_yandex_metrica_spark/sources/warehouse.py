@@ -417,7 +417,7 @@ def compact_partitions(
     read time and dynamic overwrite replaces whole week partitions at
     commit — a streaming append landing in a dirty week between those
     two points is silently dropped.  Schedule compaction in the
-    ingest gap (same discipline as ``similarity.compact_ivf_index``).
+    ingest gap.
 
     Returns {"files_before": {week: n}, "files_after": {week: n}}
     for the compacted weeks.
