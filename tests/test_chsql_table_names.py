@@ -4,6 +4,8 @@ FROM/JOIN or a comma of a FROM list, and a ``name.`` qualifier.  A
 select alias, an ORDER BY/GROUP BY/HAVING name or an ARRAY JOIN operand
 that happens to spell a table name keeps its text (a chart's
 ``count(1) AS hits FROM hits`` must return a column named ``hits``).
+A backticked table name is a table reference like the plain one, and
+FINAL/SAMPLE decorations are found at the same table slots.
 """
 
 from __future__ import annotations
@@ -23,6 +25,19 @@ def tables(spark):
         [(1, 5), (2, 7), (2, 1), (3, 2)], "k int, v int"
     )
     return {"hits": hits, "visits": visits}
+
+
+@pytest.fixture(scope="module")
+def ledger(spark):
+    # key 1: updated once (live ver 2); key 2: live; key 3: deleted
+    return spark.createDataFrame(
+        [(1, 10, 1, 1), (1, 10, 1, -1), (1, 12, 2, 1), (2, 5, 1, 1),
+         (3, 7, 1, 1), (3, 7, 1, -1)],
+        "k int, hits int, ver int, sign int",
+    )
+
+
+_META = {"hits": chsql.TableMeta(key=("k",), version="ver", sign="sign")}
 
 
 def test_replace_name_keeps_alias_and_order_by_text():
@@ -79,3 +94,68 @@ def test_array_join_operand_is_the_column(spark, tables):
         tables,
     )
     assert [tuple(r) for r in out.collect()] == [(1, "a"), (1, "b"), (1, "c")]
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        ("SELECT k FROM `hits`", "SELECT k FROM __chsql_t0"),
+        (
+            "SELECT `hits`.k FROM `hits` JOIN v ON `hits`.k = v.k",
+            "SELECT __chsql_t0.k FROM __chsql_t0 JOIN v ON __chsql_t0.k = v.k",
+        ),
+        ("SELECT `hits` FROM t", "SELECT `hits` FROM t"),
+    ],
+    ids=["relation", "qualifier", "column"],
+)
+def test_replace_name_rebinds_backticked_table(sql, want):
+    assert chsql._replace_name(sql, "hits", "__chsql_t0") == want
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        ("SELECT k, hits FROM hits FINAL", "SELECT k, hits FROM hits"),
+        (
+            "SELECT k, hits FROM hits FINAL ORDER BY k, hits",
+            "SELECT k, hits FROM hits ORDER BY k, hits",
+        ),
+        ("SELECT k FROM `hits` FINAL", "SELECT k FROM `hits`"),
+        ("SELECT hits.k FROM hits FINAL", "SELECT hits.k FROM hits"),
+    ],
+    ids=["select_column", "order_by_column", "backticked", "qualifier"],
+)
+def test_decoration_scan_reads_table_slots_only(sql, want):
+    assert chsql._scan_table_decorations(sql, {"hits": None}) == (
+        want, {"hits": {"final": True}}
+    )
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT k, hits FROM hits FINAL",
+        "SELECT k, hits FROM hits FINAL ORDER BY k, hits",
+        "SELECT k, hits FROM `hits` FINAL ORDER BY k",
+    ],
+    ids=["select_column", "order_by_column", "backticked"],
+)
+def test_final_table_named_like_a_column(spark, ledger, sql):
+    out = chsql.run_sql(spark, sql, {"hits": ledger}, table_meta=_META)
+    assert out.columns == ["k", "hits"]
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 12), (2, 5)]
+
+
+def test_backticked_table_rebinds(spark, tables):
+    out = chsql.run_sql(spark, "SELECT k FROM `visits` ORDER BY k", tables)
+    assert [r.k for r in out.collect()] == [1, 2, 2, 3]
+
+
+def test_final_and_bare_reference_of_one_table_still_refused(spark, ledger):
+    with pytest.raises(ValueError, match="with and without FINAL/SAMPLE"):
+        chsql.run_sql(
+            spark,
+            "SELECT a.k FROM hits FINAL JOIN hits AS a ON a.k = hits.k",
+            {"hits": ledger},
+            table_meta=_META,
+        )
