@@ -40,7 +40,6 @@ from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import (
     dedup,
     funnel,
     maps,
-    multimodal,
     packing,
     rangejoin,
     sampling,
@@ -2759,144 +2758,8 @@ FROM base
 
 
 # =========================================================================
-# 22. multimodal plumbing -- binary payload + Arrow-batched extraction
+# 22. windowed streaming aggregation -- watermarked tumbling windows
 # =========================================================================
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image header decode through the Arrow mapInPandas stage:
-    synth_media writes actual PNG / GIF / BMP files (public byte
-    layouts, dimensions derived from doc_id) plus raw-text payloads
-    for the unknown-format path; extract_image_features parses the
-    real headers back.  The oracle recomputes the expected metadata
-    arithmetically, so a green row proves the parsers, not an echo."""
-    _prep(spark)
-    media = multimodal.synth_media(
-        t(spark, sf_dir, "documents"), "doc_id", "text"
-    )
-    return multimodal.extract_image_features(media).select(
-        "media_id", "format", "width", "height", "bit_depth", "channels"
-    )
-
-
-_ORACLE_MULTIMODAL = """
-SELECT doc_id AS media_id,
-  CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
-                  WHEN 2 THEN 'bmp' ELSE 'unknown' END AS format,
-  CASE WHEN doc_id % 4 = 3 THEN NULL
-       ELSE CAST(doc_id % 64 + 1 AS INT) END AS width,
-  CASE WHEN doc_id % 4 = 3 THEN NULL
-       ELSE CAST(doc_id % 48 + 1 AS INT) END AS height,
-  CAST(CASE doc_id % 4 WHEN 0 THEN 8 WHEN 1 THEN 8
-                       WHEN 2 THEN 24 ELSE NULL END AS INT) AS bit_depth,
-  CAST(CASE WHEN doc_id % 4 = 3 THEN NULL ELSE 3 END AS INT) AS channels
-FROM documents
-"""
-
-
-def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL RIFF/WAVE decode: synth_audio_media writes canonical
-    PCM16 WAV files (rate/channels/length derived from doc_id);
-    fingerprint_audio parses the fmt/data chunks back and decodes the
-    samples for the energy fingerprint.  Oracle recomputes every field
-    arithmetically (44-byte header + 2 bytes/sample/channel; duration
-    = data/byte_rate)."""
-    _prep(spark)
-    media = multimodal.synth_audio_media(t(spark, sf_dir, "documents"), "doc_id")
-    return multimodal.fingerprint_audio(media).select(
-        "media_id",
-        "n_bytes",
-        "sample_rate",
-        "channels",
-        "bits_per_sample",
-        "duration_ms",
-        F.size("fingerprint").alias("fp_windows"),
-    )
-
-
-_ORACLE_MULTIMODAL_AUDIO = """
-WITH p AS (
-  SELECT doc_id AS media_id,
-         8000 + (doc_id % 4) * 4000 AS sr,
-         1 + doc_id % 2 AS ch,
-         100 + doc_id % 50 AS ns
-  FROM documents
-)
-SELECT media_id,
-  CAST(44 + ns * ch * 2 AS BIGINT) AS n_bytes,
-  CAST(sr AS INT) AS sample_rate,
-  CAST(ch AS INT) AS channels,
-  CAST(16 AS INT) AS bits_per_sample,
-  CAST(ns * 1000 // sr AS BIGINT) AS duration_ms,
-  CAST(8 AS INT) AS fp_windows
-FROM p
-"""
-
-
-def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MP4 (ISO BMFF) container decode: synth_video_media writes
-    structurally valid ftyp/moov/mvhd/trak/tkhd/mdat boxes (public
-    ISO/IEC 14496-12 layouts, every field an exact integer function of
-    doc_id) plus NUL-prefixed non-MP4 payloads for the unknown path;
-    extract_video_features walks the real boxes back.  The oracle
-    recomputes brand/timescale/duration/tracks/size arithmetically, so
-    a green row proves the box parser, not an echo.  Kills the last
-    stub from the r6 verdict (multimodal.py video)."""
-    _prep(spark)
-    media = multimodal.synth_video_media(t(spark, sf_dir, "documents"), "doc_id")
-    return multimodal.extract_video_features(media).select(
-        "media_id", "format", "major_brand", "timescale",
-        "duration_ms", "n_tracks", "width", "height",
-    )
-
-
-_ORACLE_MULTIMODAL_VIDEO = """
-SELECT doc_id AS media_id,
-  CASE WHEN doc_id % 5 = 4 THEN 'unknown' ELSE 'mp4' END AS format,
-  CASE WHEN doc_id % 5 = 4 THEN NULL ELSE 'isom' END AS major_brand,
-  CASE WHEN doc_id % 5 = 4 THEN NULL
-       ELSE CAST(1000 * (1 + doc_id % 3) AS BIGINT) END AS timescale,
-  CASE WHEN doc_id % 5 = 4 THEN NULL
-       ELSE CAST(500 + doc_id % 100 AS BIGINT) END AS duration_ms,
-  CASE WHEN doc_id % 5 = 4 THEN NULL
-       ELSE CAST(1 + doc_id % 2 AS INT) END AS n_tracks,
-  CASE WHEN doc_id % 5 = 4 THEN NULL
-       ELSE CAST(16 * (doc_id % 8 + 1) AS INT) END AS width,
-  CASE WHEN doc_id % 5 = 4 THEN NULL
-       ELSE CAST(16 * (doc_id % 6 + 1) AS INT) END AS height
-FROM documents
-"""
-
-
-def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MP4 frame sampling: every 2nd sample of each synthesized
-    container's sample-table track, with presentation time, size and
-    byte offset computed from the actual stts/stsz/stsc/stco boxes
-    (operators/multimodal.py parse_mp4_samples).  The oracle derives
-    the same rows in closed form (pts = 40ms cadence; sizes 100+i%7;
-    offsets 100*i + 21*(i div 7) + r*(r-1)/2) via generate_series, so
-    a green row proves the sample-table walk, not an echo.  Replaces
-    the r5 byte-offset stub as the frame-sampling story."""
-    _prep(spark)
-    media = multimodal.synth_video_media(t(spark, sf_dir, "documents"), "doc_id")
-    return multimodal.extract_video_frames(media, stride=2)
-
-
-_ORACLE_MULTIMODAL_FRAMES = """
-WITH f AS (
-  SELECT doc_id, UNNEST(range(0, 5 + doc_id % 10)) AS i
-  FROM documents
-  WHERE doc_id % 5 <> 4
-)
-SELECT doc_id AS media_id,
-  CAST(i AS INT) AS frame_idx,
-  CAST(i * 40 AS BIGINT) AS pts_ms,
-  CAST(100 + i % 7 AS BIGINT) AS size,
-  CAST(100 * i + 21 * (i // 7)
-       + (i % 7) * ((i % 7) - 1) // 2 AS BIGINT) AS byte_offset
-FROM f
-WHERE i % 2 = 0
-"""
-
-
 def q_streaming_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window streaming aggregation (ST-ext): per-day counts
     per event type computed ON the watermarked stream (cdc.
@@ -4991,10 +4854,6 @@ QUERIES: dict[str, QuerySpec] = {
     "quantiles_weighted": QuerySpec(q_quantiles_weighted, _ORACLE_QUANTILES_WEIGHTED, "A-ext: quantileExactWeighted (compressed distribution)"),
     "pii_scrub": QuerySpec(q_pii_scrub, _ORACLE_PII_SCRUB, "text/pii-redaction"),
     "doc_fingerprint": QuerySpec(q_doc_fingerprint, _ORACLE_DOC_FINGERPRINT, "text/fingerprint"),
-    "multimodal_meta": QuerySpec(q_multimodal_meta, _ORACLE_MULTIMODAL, "multimodal/real PNG-GIF-BMP header decode + unknown fallback"),
-    "multimodal_audio": QuerySpec(q_multimodal_audio, _ORACLE_MULTIMODAL_AUDIO, "multimodal/real RIFF-WAVE decode + PCM16 energy fingerprint"),
-    "multimodal_video": QuerySpec(q_multimodal_video, _ORACLE_MULTIMODAL_VIDEO, "multimodal/real MP4 ISO-BMFF box parse (ftyp/mvhd/trak/tkhd)"),
-    "multimodal_frames": QuerySpec(q_multimodal_frames, _ORACLE_MULTIMODAL_FRAMES, "multimodal/real MP4 frame sampling (stts/stsz/stsc/stco walk)"),
     "streaming_roundtrip": QuerySpec(q_streaming_roundtrip, _ORACLE_STREAMING, "ST1 ST4 ST7"),
     "streaming_windowed": QuerySpec(q_streaming_windowed, _ORACLE_STREAMING_WINDOWED, "ST-ext: watermarked tumbling-window stream aggregation"),
     "streaming_dedup": QuerySpec(q_streaming_dedup, _ORACLE_STREAMING_DEDUP, "ST-ext: stateful streaming exact dedup (dedup/exact at ingest)"),

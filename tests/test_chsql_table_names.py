@@ -113,21 +113,23 @@ def test_replace_name_rebinds_backticked_table(sql, want):
 
 
 @pytest.mark.parametrize(
-    "sql, want",
+    "sql, name, want",
     [
-        ("SELECT k, hits FROM hits FINAL", "SELECT k, hits FROM hits"),
+        ("SELECT k, hits FROM hits FINAL", "hits", "SELECT k, hits FROM hits"),
         (
             "SELECT k, hits FROM hits FINAL ORDER BY k, hits",
+            "hits",
             "SELECT k, hits FROM hits ORDER BY k, hits",
         ),
-        ("SELECT k FROM `hits` FINAL", "SELECT k FROM `hits`"),
-        ("SELECT hits.k FROM hits FINAL", "SELECT hits.k FROM hits"),
+        ("SELECT k FROM `hits` FINAL", "hits", "SELECT k FROM `hits`"),
+        ("SELECT hits.k FROM hits FINAL", "hits", "SELECT hits.k FROM hits"),
+        ("SELECT k FROM db.hits FINAL", "db.hits", "SELECT k FROM db.hits"),
     ],
-    ids=["select_column", "order_by_column", "backticked", "qualifier"],
+    ids=["select_column", "order_by_column", "backticked", "qualifier", "dotted"],
 )
-def test_decoration_scan_reads_table_slots_only(sql, want):
-    assert chsql._scan_table_decorations(sql, {"hits": None}) == (
-        want, {"hits": {"final": True}}
+def test_decoration_scan_reads_table_slots_only(sql, name, want):
+    assert chsql._scan_table_decorations(sql, {name: None}) == (
+        want, {name: {"final": True}}
     )
 
 

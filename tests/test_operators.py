@@ -1,7 +1,7 @@
 """Operator-level tests (SURVEY.md section 5): CDC-ledger property
 tests, ClickHouse expression edge semantics, physical-plan assertions
-(partition pruning, broadcast join, pushed filters), streaming
-collapse, and multimodal plumbing.
+(partition pruning, broadcast join, pushed filters) and streaming
+collapse.
 
 Complements tests/test_driver_parity.py (the DuckDB oracle gate):
 that file checks end-result values; this one checks the invariants
@@ -24,7 +24,6 @@ from yc_data_transfer_clickhouse_from_yandex_metrica_spark.functions import ch, 
 from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import (
     collapse,
     dedup,
-    multimodal,
     sampling,
 )
 from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import (
@@ -1053,33 +1052,6 @@ def test_contamination_detects_excerpt(spark):
     assert got == {(100, 1, 1.0)}  # fully contained; 101 clean
 
 
-def test_audio_wav_decode_real(spark):
-    """Golden RIFF/WAVE roundtrip: wav_bytes writes a canonical PCM16
-    file, fingerprint_audio parses the fmt/data chunks back and the
-    energy fingerprint matches a numpy recompute of the PCM ramp."""
-    import numpy as np
-
-    payload = multimodal.wav_bytes(sample_rate=16000, channels=2, n_samples=120)
-    wav = multimodal.parse_wav(payload)
-    assert (wav["sample_rate"], wav["channels"], wav["bits_per_sample"]) == (16000, 2, 16)
-    assert wav["data_size"] == 120 * 2 * 2
-    assert wav["duration_ms"] == 120 * 2 * 2 * 1000 // (16000 * 2 * 2)
-
-    df = spark.createDataFrame([Row(media_id=1, kind="audio", payload=payload)])
-    r = multimodal.fingerprint_audio(df).collect()[0]
-    assert (r["n_bytes"], r["sample_rate"], r["channels"], r["bits_per_sample"]) == (
-        44 + 120 * 2 * 2, 16000, 2, 16,
-    )
-    samples = np.frombuffer(payload, dtype="<i2", offset=44)
-    expect = [int(w.mean()) for w in np.array_split(np.abs(samples.astype(np.int64)), 8)]
-    assert list(r["fingerprint"]) == expect
-    # non-WAV payload: null audio fields, empty fingerprint, real length
-    other = spark.createDataFrame([Row(media_id=2, kind="audio", payload=b"not audio")])
-    r2 = multimodal.fingerprint_audio(other).collect()[0]
-    assert r2["sample_rate"] is None and list(r2["fingerprint"]) == []
-    assert r2["n_bytes"] == 9
-
-
 def test_sample_mod_deterministic_and_partitioning(spark):
     df = spark.range(1000).withColumn("h", F.col("id") * 2654435761)
     a = sorted(r["id"] for r in sampling.sample_mod(df, "h", 10).collect())
@@ -1745,180 +1717,6 @@ def test_ivf_arrow_probe_serving_matches_literal(spark, monkeypatch):
     assert not similarity._use_arrow(big)
     big_lit = as_set(similarity.ivf_topk(vecs, qs, k=5, nprobe=3, centroids=big))
     assert big_topk == big_lit and len(big_lit)
-
-
-# --------------------------------------------------------------------------
-# Multimodal plumbing (Arrow batch stage + frame sampling)
-# --------------------------------------------------------------------------
-def test_image_probe_golden_formats():
-    """Real header parsing of all four formats, pure-python probe on
-    spec-built golden bytes."""
-    assert multimodal.probe_image(multimodal.png_bytes(640, 480)) == ("png", 640, 480, 8, 3)
-    assert multimodal.probe_image(multimodal.png_bytes(3, 2, color_type=6)) == ("png", 3, 2, 8, 4)
-    assert multimodal.probe_image(multimodal.gif_bytes(320, 200)) == ("gif", 320, 200, 8, 3)
-    assert multimodal.probe_image(multimodal.bmp_bytes(17, 9)) == ("bmp", 17, 9, 24, 3)
-    # hand-built minimal JPEG: SOI + SOF0 (precision 8, 33x21, 3 comps) + EOI
-    import struct as _s
-
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\xc0" + _s.pack(">H", 17) + bytes([8]) + _s.pack(">HH", 21, 33)
-        + bytes([3]) + bytes(9) + b"\xff\xd9"
-    )
-    assert multimodal.probe_image(jpeg) == ("jpeg", 33, 21, 8, 3)
-    assert multimodal.probe_image(b"plain text") == ("unknown", None, None, None, None)
-    assert multimodal.probe_image(None) == ("unknown", None, None, None, None)
-
-
-def test_image_features_real_decode(spark):
-    """extract_image_features parses real bytes through the Arrow
-    stage: a PNG and a BMP come back with their true dimensions, an
-    unknown payload yields nulls plus a real CRC32."""
-    import zlib as _z
-
-    png, bmp, raw = multimodal.png_bytes(12, 7), multimodal.bmp_bytes(5, 4), b"abc"
-    df = spark.createDataFrame(
-        [
-            Row(media_id=1, kind="image", payload=png),
-            Row(media_id=2, kind="image", payload=bmp),
-            Row(media_id=3, kind="image", payload=raw),
-        ]
-    )
-    feats = {r["media_id"]: r for r in multimodal.extract_image_features(df).collect()}
-    assert (feats[1]["format"], feats[1]["width"], feats[1]["height"]) == ("png", 12, 7)
-    assert (feats[2]["format"], feats[2]["width"], feats[2]["height"]) == ("bmp", 5, 4)
-    assert feats[3]["format"] == "unknown" and feats[3]["width"] is None
-    for mid, payload in [(1, png), (2, bmp), (3, raw)]:
-        assert feats[mid]["n_bytes"] == len(payload)
-        assert feats[mid]["byte_checksum"] == _z.crc32(payload)
-
-
-def test_mp4_probe_golden_boxes():
-    """Real ISO BMFF box parsing on spec-built golden bytes: v0 mvhd
-    via mp4_bytes, hand-built v1 mvhd, largesize boxes, truncation,
-    and non-MP4 rejection."""
-    import struct as _s
-
-    got = multimodal.probe_mp4(
-        multimodal.mp4_bytes(1500, 3000, n_tracks=2, width=128, height=96)
-    )
-    assert got == {
-        "major_brand": "isom", "timescale": 3000, "duration": 1500,
-        "duration_ms": 500, "n_tracks": 2, "width": 128, "height": 96,
-    }
-
-    def box(t, p):
-        return _s.pack(">I", 8 + len(p)) + t + p
-
-    ftyp = box(b"ftyp", b"mp42" + _s.pack(">I", 0) + b"mp42")
-    # version-1 mvhd: 64-bit creation/modification/duration
-    mvhd1 = box(b"mvhd", _s.pack(">BxxxQQIQ", 1, 0, 0, 90000, 135000) + bytes(80))
-    got = multimodal.probe_mp4(ftyp + box(b"moov", mvhd1))
-    assert (got["major_brand"], got["timescale"], got["duration_ms"]) == (
-        "mp42", 90000, 1500,
-    )
-    # 64-bit largesize box header around moov
-    large_moov = _s.pack(">I", 1) + b"moov" + _s.pack(">Q", 16 + len(mvhd1)) + mvhd1
-    got = multimodal.probe_mp4(ftyp + large_moov)
-    assert got["timescale"] == 90000
-    # rejection + truncation safety
-    assert multimodal.probe_mp4(None) is None
-    assert multimodal.probe_mp4(b"\x00notavideo") is None
-    assert multimodal.probe_mp4(b"GIF89a junk") is None
-    full = multimodal.mp4_bytes(1500, 3000)
-    truncated = multimodal.probe_mp4(full[:20])  # mid-box cut: no crash
-    assert truncated is None or truncated["timescale"] is None
-
-
-def test_mp4_sample_table_walk():
-    """parse_mp4_samples: pts from stts runs, sizes from stsz,
-    offsets from the general stsc/stco interpretation -- including a
-    hand-built TWO-chunk layout with distinct samples-per-chunk runs
-    (mp4_bytes only writes the single-chunk shape)."""
-    import struct as _s
-
-    b = multimodal.mp4_bytes(
-        1500, 3000, n_samples=8, sample_delta=120,
-        sample_sizes=[100 + i % 7 for i in range(8)],
-    )
-    st = multimodal.parse_mp4_samples(b)
-    assert st["timescale"] == 3000
-    assert st["pts"] == [i * 120 for i in range(8)]
-    assert st["offsets"][:4] == [0, 100, 201, 303]
-    # probe_mp4 is unaffected by the added mdia/stbl boxes
-    assert multimodal.probe_mp4(b)["duration_ms"] == 500
-
-    def box(t, p):
-        return _s.pack(">I", 8 + len(p)) + t + p
-
-    # two chunks at offsets 1000/2000: run1 = 2 samples in chunk 1,
-    # run2 = 3 samples in chunk 2; two stts runs (deltas 10 then 20)
-    stts = box(b"stts", _s.pack(">BxxxI", 0, 2) + _s.pack(">IIII", 2, 10, 3, 20))
-    stsz = box(b"stsz", _s.pack(">BxxxII", 0, 0, 5) + _s.pack(">5I", 7, 8, 9, 10, 11))
-    stsc = box(b"stsc", _s.pack(">BxxxI", 0, 2) + _s.pack(">III", 1, 2, 1) + _s.pack(">III", 2, 3, 1))
-    stco = box(b"stco", _s.pack(">BxxxI", 0, 2) + _s.pack(">II", 1000, 2000))
-    mdhd = box(b"mdhd", _s.pack(">BxxxIIII", 0, 0, 0, 100, 70) + _s.pack(">HH", 0x55C4, 0))
-    trak = box(b"trak", box(b"mdia", mdhd + box(b"minf", box(b"stbl", stts + stsz + stsc + stco))))
-    ftyp = box(b"ftyp", b"isom" + _s.pack(">I", 0) + b"isom")
-    st = multimodal.parse_mp4_samples(ftyp + box(b"moov", trak))
-    assert st["timescale"] == 100
-    assert st["pts"] == [0, 10, 20, 40, 60]  # run1 deltas 10, run2 20
-    assert st["sizes"] == [7, 8, 9, 10, 11]
-    # chunk 1 holds samples 0-1; chunk 2 holds 2-4
-    assert st["offsets"] == [1000, 1007, 2000, 2009, 2019]
-    # rejection
-    assert multimodal.parse_mp4_samples(multimodal.mp4_bytes(100, 1000)) is None
-    assert multimodal.parse_mp4_samples(b"\x00junk") is None
-
-
-def test_extract_video_frames_stride(spark):
-    """extract_video_frames samples every stride-th frame with real
-    pts/size/offset; table-less and non-MP4 payloads emit nothing."""
-    mp4 = multimodal.mp4_bytes(
-        1000, 1000, n_samples=6, sample_delta=40,
-        sample_sizes=[10, 20, 30, 40, 50, 60],
-    )
-    df = spark.createDataFrame(
-        [
-            Row(media_id=1, kind="video", payload=mp4),
-            Row(media_id=2, kind="video", payload=multimodal.mp4_bytes(100, 1000)),
-            Row(media_id=3, kind="video", payload=b"\x00junk"),
-        ]
-    )
-    rows = sorted(
-        (r["media_id"], r["frame_idx"], r["pts_ms"], r["size"], r["byte_offset"])
-        for r in multimodal.extract_video_frames(df, stride=2).collect()
-    )
-    assert rows == [(1, 0, 0, 10, 0), (1, 2, 80, 30, 30), (1, 4, 160, 50, 100)]
-
-
-def test_video_features_real_decode(spark):
-    """extract_video_features parses real MP4 boxes through the Arrow
-    stage; non-MP4 payloads yield format='unknown' with null fields."""
-    mp4 = multimodal.mp4_bytes(750, 1500, n_tracks=1, width=64, height=48)
-    df = spark.createDataFrame(
-        [
-            Row(media_id=1, kind="video", payload=mp4),
-            Row(media_id=2, kind="video", payload=b"\x00junk"),
-        ]
-    )
-    feats = {r["media_id"]: r for r in multimodal.extract_video_features(df).collect()}
-    assert (
-        feats[1]["format"], feats[1]["major_brand"], feats[1]["timescale"],
-        feats[1]["duration_ms"], feats[1]["n_tracks"], feats[1]["width"],
-        feats[1]["height"],
-    ) == ("mp4", "isom", 1500, 500, 1, 64, 48)
-    assert feats[1]["n_bytes"] == len(mp4)
-    assert feats[2]["format"] == "unknown" and feats[2]["timescale"] is None
-
-
-def test_video_frame_sampling_counts(spark):
-    df = spark.createDataFrame([Row(doc_id=1, text="x" * 2500)])
-    media = multimodal.media_from_text(df, "doc_id", "text", kind="video")
-    frames = multimodal.sample_video_frames(media, every_n_bytes=1000).collect()
-    assert [(r["frame_idx"], r["byte_offset"]) for r in frames] == [
-        (0, 0), (1, 1000), (2, 2000)
-    ]
 
 
 # --------------------------------------------------------------------------

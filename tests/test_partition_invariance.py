@@ -6,7 +6,8 @@ results (stray first()/any_value, limit-without-order, non-total
 window orders).
 
 The full sweep lives in tools/invariance_check.py; round 13 ran it
-over all 104 entries at sf0.01: ALL INVARIANT.  This subset keeps the
+over every entry at sf0.01 (104 then; the registry holds 100 now):
+ALL INVARIANT.  This subset keeps the
 property in CI at ~1 min, picking the entries whose shapes are most
 at risk of order-dependence: collapse/latest-version (window pick),
 ANY join (keep-one-per-key), LIMIT BY (per-key rank), heavy hitters

@@ -254,33 +254,3 @@ def test_ivf_assign_lists_is_pure_map_side(spark):
             if name == "Exchange":
                 assert "RoundRobinPartitioning" in block, (kwargs, block)
 
-
-def test_multimodal_arrow_stage_discipline(spark):
-    """The multimodal extractors are ONE Arrow mapInPandas stage over
-    a (media_id, payload) projection: the executed plan holds exactly
-    one Python/Arrow eval node, no exchange (batch-shape independence
-    is property-tested elsewhere; here we pin that no shuffle ever
-    feeds the Python worker — payload bytes must not ride an
-    exchange), no join, no window."""
-    from yc_data_transfer_clickhouse_from_yandex_metrica_spark.operators import multimodal
-
-    docs = spark.range(64).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("d"), F.col("id").cast("string")).alias("text"),
-    ).repartition(8)
-    media = multimodal.media_from_text(docs, "doc_id", "text", kind="image")
-    out = multimodal.extract_image_features(media)
-    nodes = _final_nodes(_formatted(out))
-    _assert_no_forbidden(nodes)
-    names = [n for n, _ in nodes.values()]
-    py_nodes = [
-        n for n in names
-        if "InPandas" in n or "ArrowEvalPython" in n or "PythonMapInArrow" in n
-    ]
-    assert len(py_nodes) == 1, names
-    # the ONLY exchange is the test input's own repartition(8): the
-    # operator adds none — payload bytes never ride a shuffle
-    for name, block in nodes.values():
-        if name == "Exchange":
-            assert "RoundRobinPartitioning" in block, block
-    assert "Window" not in names and not any("Join" in n for n in names), names

@@ -3,7 +3,8 @@
 ``spark.sql.codegen.cache.maxEntries`` is a STATIC conf (only settable
 at session build).  The Spark default of 100 entries is smaller than
 ONE pass over this engine's registry (~1,350 distinct whole-stage
-codegen units across the 105 entries), so any workload that cycles the
+codegen units across the 105 entries it held when measured; 100
+now), so any workload that cycles the
 registry — the bench, the driver's correctness sweep, a production
 dashboard mix — evicts the entire cache every pass and re-pays janino
 compile plus fresh-class JIT warmup for every query every time.

@@ -85,9 +85,9 @@ def main(only: set[str]) -> int:
         out.conf.set("spark.sql.files.openCostInBytes", "0")
         # disable partition coalescing so the 5-way shuffles stay 5-way
         out.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        # tiny odd Arrow batches: mapInPandas operators must be
-        # batch-shape independent (multimodal decoders, pandas-UDF
-        # paths see many small frames instead of one big one)
+        # tiny odd Arrow batches: the pandas_udf kernels (similarity's
+        # sign-LSH signatures and Arrow IVF form) must be batch-shape
+        # independent (they see many small frames instead of one big one)
         out.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
         return out
 

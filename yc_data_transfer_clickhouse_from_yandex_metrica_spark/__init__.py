@@ -15,7 +15,7 @@ its semantics Spark-first:
                      SQL lacks (WITH TOTALS, alias-in-WHERE/HAVING).
 - ``operators``   -- CDC sign-ledger / version collapse, deterministic
                      sampling, dedup family, similarity search, text
-                     analysis, multimodal column plumbing.
+                     analysis.
 - ``sources``     -- CSV-gz glob I/O with virtual columns, warehouse
                      layout writer, JDBC gateway.
 - ``streaming``   -- Structured Streaming CDC ingestion (the Data
@@ -29,8 +29,10 @@ package: they live in the root-level ``registry`` module.
 
 Everything is DataFrame-first: logical plans are declared with the
 DataFrame/SQL API and Catalyst picks the physical strategy.  Python
-UDFs are avoided on hot paths; the only Python-side execution is the
-Arrow-batched multimodal stubs (operators.multimodal).
+UDFs are avoided on hot paths; the only Python-side execution is
+Arrow-batched: ``operators.similarity``'s ``pandas_udf`` kernels (the
+sign-LSH signatures and the Arrow IVF form) and ``streaming.cdc``'s
+``applyInPandasWithState`` latest-version stream.
 """
 
 __version__ = "0.1.0"

@@ -1,3 +1,3 @@
-from . import collapse, dedup, multimodal, sampling, similarity, text
+from . import collapse, dedup, sampling, similarity, text
 
-__all__ = ["collapse", "dedup", "multimodal", "sampling", "similarity", "text"]
+__all__ = ["collapse", "dedup", "sampling", "similarity", "text"]

@@ -412,13 +412,15 @@ _SQL_TOKEN = re.compile(r"[(),.]|`[^`]*`|\w+")
 _DOT_NEXT = re.compile(r"\s*\.")
 
 
-def _table_slots(masked: str, name: str) -> list[re.Match]:
-    """Occurrences of the plain identifier ``name`` in ``masked`` SQL
-    where a table reference can stand: the relation right after FROM
-    or JOIN (not ARRAY JOIN, whose operand is a column; not IS
-    DISTINCT FROM), the relation after a comma of a FROM list, and a
-    ``name.`` qualifier.  State is kept per paren depth, so a
-    subquery's FROM list is its own."""
+def _table_slots(masked: str, name: str) -> list[tuple[re.Match, bool]]:
+    """Occurrences of the table name ``name`` (as written, or
+    backticked) in ``masked`` SQL where a table reference can stand,
+    each with whether it is the relation itself (True) or a ``name.``
+    qualifier (False).  A relation is the one right after FROM or JOIN
+    (not ARRAY JOIN, whose operand is a column; not IS DISTINCT FROM)
+    or after a comma of a FROM list.  State is kept per paren depth,
+    so a subquery's FROM list is its own."""
+    spelled = re.compile(rf"`{re.escape(name)}`|{re.escape(name)}(?![\w`])")
     out = []
     in_from, slot = [False], [False]
     prev = ""
@@ -440,29 +442,30 @@ def _table_slots(masked: str, name: str) -> list[re.Match]:
         elif up in _NON_FROM_CLAUSES:
             in_from[-1] = slot[-1] = False
         else:
-            if tok == name and prev != "." and (
-                slot[-1] or _DOT_NEXT.match(masked, m.end())
-            ):
-                out.append(m)
+            ref = spelled.match(masked, m.start()) if prev != "." else None
+            if ref:
+                qualifier = bool(_DOT_NEXT.match(masked, ref.end()))
+                if slot[-1] or qualifier:
+                    out.append((ref, not qualifier))
             slot[-1] = False
         prev = up
     return out
 
 
 def _replace_name(sql: str, name: str, repl: str) -> str:
-    """Replace a table name.  A plain identifier is replaced only where
-    a table can stand (``_table_slots``): a select alias, an ORDER BY
-    name or a column that spells the table's name keeps its text
-    (``count(1) AS hits FROM hits`` stays a column named ``hits``),
-    and a table named ``t`` leaves the ``t`` inside ``countIf`` alone.
-    Matches are located on the MASKED text so occurrences inside
-    string literals survive verbatim (a table named ``t`` must not
-    corrupt ``'(?t<=3600)'`` or ``WHERE s = 'a t b'``).  Other
-    spellings (backticked / dotted / placeholder) can't collide with
+    """Replace a table name.  A plain identifier, bare or backticked,
+    is replaced only where a table can stand (``_table_slots``): a
+    select alias, an ORDER BY name or a column that spells the table's
+    name keeps its text (``count(1) AS hits FROM hits`` stays a column
+    named ``hits``), and a table named ``t`` leaves the ``t`` inside
+    ``countIf`` alone.  Matches are located on the MASKED text so
+    occurrences inside string literals survive verbatim (a table named
+    ``t`` must not corrupt ``'(?t<=3600)'`` or ``WHERE s = 'a t b'``).
+    Other spellings (dotted / placeholder) can't collide with
     identifiers and are replaced literally."""
     if re.fullmatch(r"\w+", name):
         out, last = [], 0
-        for m in _table_slots(_mask(sql), name):
+        for m, _ in _table_slots(_mask(sql), name):
             out.append(sql[last : m.start()])
             out.append(repl)
             last = m.end()
@@ -2796,8 +2799,7 @@ _B3_REFUSALS = {
     "ngramSearch": "no Spark mapping; use "
     "operators/dedup.ngram_jaccard_pairs or a Pandas-UDF scorer",
     "pointInPolygon": "no Spark built-in; use a mapInPandas "
-    "ray-casting UDF (the multimodal operators show the Arrow-batch "
-    "pattern)",
+    "ray-casting UDF",
     "geohashEncode": "no compact SQL-text twin of the Morton bit "
     "compaction; use functions/ch.geohash_encode (Column API)",
     "geohashDecode": "use functions/ch.geohash_decode (Column API)",
@@ -5574,7 +5576,12 @@ def table_meta_from_ddl(ddl: str) -> TableMeta:
 # form is `pmod(col, D) < thresh`.
 _SAMPLE_DENOM = 1_000_000
 
-_TABLE_DECO = r"(?:\s+(FINAL)\b)?(?:\s+SAMPLE\s+([\d./]+)(\s+OFFSET\s+[\d./]+)?)?"
+# the FINAL / SAMPLE k [OFFSET m] decoration right after a table
+# reference (empty when the reference is bare)
+_TABLE_DECO = re.compile(
+    r"(?:\s+(FINAL)\b)?(?:\s+SAMPLE\s+([\d./]+)(\s+OFFSET\s+[\d./]+)?)?",
+    re.I,
+)
 
 
 def _parse_sample_fraction(txt: str) -> int:
@@ -5605,30 +5612,22 @@ def _parse_sample_fraction(txt: str) -> int:
 def _scan_table_decorations(
     sql: str, tables: dict[str, DataFrame]
 ) -> tuple[str, dict[str, dict]]:
-    """Find ``FROM/JOIN <table> [FINAL] [SAMPLE f]`` decorations,
-    strip them from the SQL, and return per-table flags.  A table that
-    appears BOTH decorated and bare is refused: the decoration is
-    applied to the registered view, so mixed use would silently
-    decorate the bare reference too (register the table under two
-    names to mix)."""
+    """Find ``FROM/JOIN <table> [FINAL] [SAMPLE f]`` decorations at
+    the table's relation slots (``_table_slots``: a column or alias
+    that spells the table's name is no reference), strip them from the
+    SQL, and return per-table flags.  A table that appears BOTH
+    decorated and bare is refused: the decoration is applied to the
+    registered view, so mixed use would silently decorate the bare
+    reference too (register the table under two names to mix)."""
     deco: dict[str, dict] = {}
     for name in tables:
-        # prefix includes the comma of a FROM-list (`FROM a, t FINAL`
-        # is a CH cross-join reference, and Spark would otherwise
-        # parse its FINAL as a bare alias).  `(?!\s*\.)` keeps
-        # qualified COLUMN references (`SELECT x, visits.col`) out of
-        # the scan (ADVICE r11 #1: the comma alternative otherwise
-        # marked them as bare table references).
-        pat = re.compile(
-            rf"((?:\b(?:FROM|JOIN)\s+|,\s*)"
-            rf"(?:`{re.escape(name)}`|{re.escape(name)}\b)(?!\s*\.))"
-            rf"{_TABLE_DECO}",
-            re.I,
-        )
         out, last, flags, bare = [], 0, {}, False
         masked = _mask(sql)
-        for m in pat.finditer(masked):
-            final_kw, sample_txt, offset_txt = m.group(2), m.group(3), m.group(4)
+        for slot, relation in _table_slots(masked, name):
+            if not relation:
+                continue
+            m = _TABLE_DECO.match(masked, slot.end())
+            final_kw, sample_txt, offset_txt = m.groups()
             if not final_kw and not sample_txt:
                 bare = True
                 continue
@@ -5669,7 +5668,7 @@ def _scan_table_decorations(
                     f"twice under two names to mix"
                 )
             flags = m_flags
-            out.append(sql[last : m.end(1)])
+            out.append(sql[last : m.start()])
             last = m.end()
         if not flags:
             continue

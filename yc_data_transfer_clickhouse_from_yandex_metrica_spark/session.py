@@ -11,7 +11,9 @@ is chosen to also hold on a large multi-executor cluster:
   IEEE specials instead of raising (e.g. arr[0] -> '' default,
   README.md:103); query code additionally never relies on non-ANSI
   behavior for correctness.
-- Arrow enabled for the few Pandas-UDF paths (multimodal stubs).
+- Arrow enabled for the few Pandas-UDF paths: similarity's
+  ``pandas_udf`` kernels (sign-LSH signatures, the Arrow IVF form) and
+  cdc's ``applyInPandasWithState`` latest-version stream.
 """
 
 from __future__ import annotations
