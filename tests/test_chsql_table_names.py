@@ -4,8 +4,9 @@ FROM/JOIN or a comma of a FROM list, and a ``name.`` qualifier.  A
 select alias, an ORDER BY/GROUP BY/HAVING name or an ARRAY JOIN operand
 that happens to spell a table name keeps its text (a chart's
 ``count(1) AS hits FROM hits`` must return a column named ``hits``).
-A backticked table name is a table reference like the plain one, and
-FINAL/SAMPLE decorations are found at the same table slots.
+Every spelling of a table name (plain, backticked, dotted) is bound
+at these slots only, and FINAL/SAMPLE decorations are found at the
+same slots.
 """
 
 from __future__ import annotations
@@ -97,19 +98,25 @@ def test_array_join_operand_is_the_column(spark, tables):
 
 
 @pytest.mark.parametrize(
-    "sql, want",
+    "sql, name, want",
     [
-        ("SELECT k FROM `hits`", "SELECT k FROM __chsql_t0"),
+        ("SELECT k FROM `hits`", "hits", "SELECT k FROM __chsql_t0"),
         (
             "SELECT `hits`.k FROM `hits` JOIN v ON `hits`.k = v.k",
+            "hits",
             "SELECT __chsql_t0.k FROM __chsql_t0 JOIN v ON __chsql_t0.k = v.k",
         ),
-        ("SELECT `hits` FROM t", "SELECT `hits` FROM t"),
+        ("SELECT `hits` FROM t", "hits", "SELECT `hits` FROM t"),
+        (
+            "SELECT k FROM db.hits WHERE s = 'db.hits'",
+            "db.hits",
+            "SELECT k FROM __chsql_t0 WHERE s = 'db.hits'",
+        ),
     ],
-    ids=["relation", "qualifier", "column"],
+    ids=["backticked", "backticked_qualifier", "backticked_column", "dotted"],
 )
-def test_replace_name_rebinds_backticked_table(sql, want):
-    assert chsql._replace_name(sql, "hits", "__chsql_t0") == want
+def test_replace_name_rebinds_table_spellings(sql, name, want):
+    assert chsql._replace_name(sql, name, "__chsql_t0") == want
 
 
 @pytest.mark.parametrize(

@@ -453,25 +453,22 @@ def _table_slots(masked: str, name: str) -> list[tuple[re.Match, bool]]:
 
 
 def _replace_name(sql: str, name: str, repl: str) -> str:
-    """Replace a table name.  A plain identifier, bare or backticked,
-    is replaced only where a table can stand (``_table_slots``): a
-    select alias, an ORDER BY name or a column that spells the table's
-    name keeps its text (``count(1) AS hits FROM hits`` stays a column
-    named ``hits``), and a table named ``t`` leaves the ``t`` inside
-    ``countIf`` alone.  Matches are located on the MASKED text so
-    occurrences inside string literals survive verbatim (a table named
-    ``t`` must not corrupt ``'(?t<=3600)'`` or ``WHERE s = 'a t b'``).
-    Other spellings (dotted / placeholder) can't collide with
-    identifiers and are replaced literally."""
-    if re.fullmatch(r"\w+", name):
-        out, last = [], 0
-        for m, _ in _table_slots(_mask(sql), name):
-            out.append(sql[last : m.start()])
-            out.append(repl)
-            last = m.end()
-        out.append(sql[last:])
-        return "".join(out)
-    return sql.replace(name, repl)
+    """Replace a table name, as written or backticked, only where a
+    table can stand (``_table_slots``): a select alias, an ORDER BY
+    name or a column that spells the table's name keeps its text
+    (``count(1) AS hits FROM hits`` stays a column named ``hits``),
+    and a table named ``t`` leaves the ``t`` inside ``countIf`` alone.
+    Matches are located on the MASKED text so occurrences inside
+    string literals survive verbatim (a table named ``t`` must not
+    corrupt ``'(?t<=3600)'`` or ``WHERE s = 'a t b'``; nor one named
+    ``db.t`` a literal ``'db.t'``)."""
+    out, last = [], 0
+    for m, _ in _table_slots(_mask(sql), name):
+        out.append(sql[last : m.start()])
+        out.append(repl)
+        last = m.end()
+    out.append(sql[last:])
+    return "".join(out)
 
 
 def _find_clause(sql: str, *keywords: str) -> re.Match | None:
